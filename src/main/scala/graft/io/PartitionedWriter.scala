@@ -24,10 +24,15 @@ object PartitionedWriter {
     // otherwise every input task writes a file into every partition
     // directory (tasks x partitions small files — at 100 TB that is
     // millions of tiny objects and a crushed namenode/object store).
+    // The width is fixed at the core count: a keyed repartition without one
+    // is AQE-coalescible, and the 1 MB coalescing floor ran a whole day-
+    // partitioned sink on one task. Each partition value still hashes to
+    // exactly one task, so every partition directory still gets one file.
     val sized = numFiles match {
       case Some(n) => df.repartition(n)
       case None if partitionCols.nonEmpty =>
-        df.repartition(partitionCols.map(org.apache.spark.sql.functions.col): _*)
+        df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+          partitionCols.map(org.apache.spark.sql.functions.col): _*)
       case None => df
     }
     // zstd: ~30% smaller than snappy at comparable scan speed — at 100 TB

@@ -875,14 +875,14 @@ object Dedup {
   /** MinHash + LSH banding: k signatures in `bands` bands of k/bands rows;
     * docs agreeing on ALL rows of any band become candidate pairs; then the
     * candidate's true Jaccard is estimated by signature agreement. At scale
-    * this is `bands` equi-join-keyed shuffles — no O(n²) anywhere.
+    * this is one banded frame and one (band, bucket)-keyed self-join.
     * Band buckets are the concatenated signature rows (exact equality, no
     * re-hash collisions; at 100 TB swap in a hash of the concat if the
     * ~40-byte string keys matter). Returns
     * (doc_a, doc_b, est_jaccard, n_bands_hit).
     *
     * The signature frame is persisted at `storageLevel` (it feeds the
-    * banding union AND both sides of the agreement join);
+    * banding AND both sides of the agreement join);
     * `StorageLevel.NONE` disables persistence for callers composing
     * several pipelines that manage memory themselves. */
   def minHashLsh(docs: DataFrame, n: Int = 3, k: Int = 16, bands: Int = 4,
@@ -996,12 +996,9 @@ object Dedup {
               else sig0.persist(storageLevel)
     val bandWidth = bits / 4
     val bandMask = (1L << bandWidth) - 1
-    val banded0 = (0 until 4).map { b =>
-      sig.select(col("doc_id"), col("simhash"), lit(b).as("band"),
-        shiftrightunsigned(col("simhash"), b * bandWidth)
-          .bitwiseAND(bandMask).as("bucket"))
-    }.reduce(_ union _)
-    val banded = dropHotBuckets(banded0, maxBucket)
+    val banded = dropHotBuckets(bandRows(sig, Seq("doc_id", "simhash"),
+      (0 until 4).map(b => shiftrightunsigned(col("simhash"), b * bandWidth)
+        .bitwiseAND(bandMask))), maxBucket)
     banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") &&
         col("a.bucket") === col("b.bucket") &&
@@ -1065,14 +1062,10 @@ object Dedup {
     * definition). */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
                           reliable: Boolean = false): DataFrame = {
-    // reliable RDD checkpoint runs a SECOND job to write the files and
-    // recomputes the lineage for it unless the blocks are cached — which
-    // would compute the (possibly very expensive LSH) pair source twice
-    // per call and every round's `next` twice. Persist around the
-    // checkpoint so the write job reads cached blocks, then release them
-    // (the checkpoint files are the durable source from here on). Old
-    // rounds' checkpoint files accumulate under the checkpoint dir for
-    // the app's lifetime unless
+    // reliable checkpoint() writes in a SECOND job that recomputes the
+    // lineage unless it is cached — the (possibly expensive LSH) pair
+    // source and every round twice — so persist around it. Old rounds'
+    // files stay under the checkpoint dir for the app's lifetime unless
     // spark.cleaner.referenceTracking.cleanCheckpoints is set.
     def ckpt(df: DataFrame): DataFrame =
       if (!reliable) df.localCheckpoint()
@@ -1085,24 +1078,15 @@ object Dedup {
     val pr = ckpt(pairs
       .select(col("doc_a").cast("long").as("src"),
         col("doc_b").cast("long").as("dst")))
-    // self-loops make "min over self + neighbors" a single join+groupBy
-    // per round instead of a join+union (fewer ops, and a per-round union
-    // whose children share attribute ids trips Union constraint rewriting)
-    // ONE materialized setup frame replaces the former edges/nodes/
-    // edgesSelf trio: both edge directions plus a self-loop at every
-    // endpoint, deduped — the same multiset the per-round min aggregation
-    // saw before (duplicate self-loops can't move a MIN), at two fewer
-    // materialization actions per call. It is PERSISTED (not
-    // checkpointed) PARTITIONED on its join key: under AQE a
-    // checkpointed Dataset records UnknownPartitioning (the adaptive
-    // plan exposes none), while InMemoryRelation keeps the cached plan's
-    // HashPartitioning — so every round's edgesSelf ⋈ labels reuses this
-    // one exchange instead of re-shuffling the edge frame per round
-    // (labels still exchange — their content changes each round; the
-    // edges never do). The frame is static and derives from the
-    // checkpointed `pr`, so the unpersist-cascade concern that keeps
-    // round STATE on checkpoints does not apply; reliable mode keeps the
-    // durable checkpoint (recovery is the point there).
+    // ONE setup frame: both edge directions plus a self-loop at every
+    // endpoint, deduped. Self-loops make "min over self + neighbors" one
+    // join + groupBy per round (a per-round union whose children share
+    // attribute ids trips Union constraint rewriting). PERSISTED, not
+    // checkpointed, partitioned on its join key: under AQE a checkpoint
+    // reports UnknownPartitioning while InMemoryRelation keeps the
+    // HashPartitioning, so every round's edgesSelf ⋈ labels reuses this one
+    // exchange. It derives from the checkpointed `pr`, so releasing it
+    // cascades nothing; reliable mode keeps the durable checkpoint.
     val both = pr
       .union(pr.select(col("dst").as("src"), col("src").as("dst")))
     val edgesSelfPlan = both
@@ -1112,16 +1096,23 @@ object Dedup {
     val edgesSelf =
       if (reliable) ckpt(edgesSelfPlan)
       else edgesSelfPlan.persist(StorageLevel.MEMORY_AND_DISK)
-    // exactly one self-loop row per node survives the distinct — the
-    // node/label seed frame, read straight from the checkpoint blocks
-    var labels = edgesSelf.where(col("src") === col("dst"))
+    // count(), not isEmpty: take(1) fills only a prefix of the lazy
+    // persist. No edges: skip the loop (the sum check can't converge on
+    // an empty frame) and seed from the empty `pr`, so nothing derives
+    // from edgesSelf once it is released below. Otherwise exactly one
+    // self-loop row per node survives the distinct — the label seed.
+    val empty = edgesSelf.count() == 0
+    var labels = (if (empty) pr else edgesSelf.where(col("src") === col("dst")))
       .select(col("src").as("node"), col("src").as("label"))
     var prevSum: java.math.BigDecimal = null
-    // no edges: skip the loop (the sum-based check can't converge on an
-    // empty frame — its scalar is NULL every round)
-    var converged = edgesSelf.isEmpty
+    var converged = empty
     var i = 0
-    while (!converged && i < maxIter) {
+    val sc = pairs.sparkSession.sparkContext
+    val prevDesc = sc.getLocalProperty("spark.job.description")
+    // AQE runs a round's shuffle stages when its lazy checkpoint is
+    // planned, so the description spans the whole round body
+    try while (!converged && i < maxIter) {
+      sc.setJobDescription(s"connected_components:round=$i")
       val nbrMin = edgesSelf.join(labels, col("src") === col("node"))
         .groupBy(col("dst"))
         .agg(min("label").as("label"))
@@ -1135,12 +1126,9 @@ object Dedup {
         .select(col("x.node").as("node"),
           least(col("x.label"), col("ll")).as("label"))
       // LAZY local checkpoint + the convergence aggregate as the
-      // materializing action: the sum job computes every partition of the
-      // round's RDD and persists it as a side effect, so the round costs
-      // one action instead of two (eager-materialize THEN aggregate).
-      // AQE still runs the round's shuffle stages at plan time; only the
-      // result stage rides the aggregate. Reliable mode keeps the eager
-      // checkpoint — there the durable write IS the point.
+      // materializing action: the sum job computes and persists every
+      // partition of the round, one action instead of two. Reliable mode
+      // keeps the eager checkpoint — there the durable write IS the point.
       val next =
         if (reliable) ckpt(nextPlan) else nextPlan.localCheckpoint(false)
       val s = next.agg(sum(col("label").cast("decimal(38,0)")))
@@ -1149,7 +1137,9 @@ object Dedup {
       prevSum = s
       labels = next
       i += 1
-    }
+    } finally sc.setJobDescription(prevDesc)
+    // the last round's checkpoint is materialized: nothing recomputes
+    edgesSelf.unpersist(blocking = false)
     labels.select(col("node").as("doc_id"), col("label").as("component"),
       (col("label") === col("node")).as("is_keeper"))
   }
@@ -1174,12 +1164,22 @@ object Dedup {
     * that band (exact equality, no re-hash collisions). */
   private def bandSignatures(sig: DataFrame, k: Int, bands: Int): DataFrame = {
     val rowsPerBand = k / bands
-    (0 until bands).map { b =>
-      val cols = (b * rowsPerBand until (b + 1) * rowsPerBand)
-        .map(i => col(s"mh$i").cast("string"))
-      sig.select(col("doc_id"),
-        lit(b).as("band"), concat_ws(",", cols: _*).as("bucket"))
-    }.reduce(_ union _)
+    bandRows(sig, Seq("doc_id"), (0 until bands).map { b =>
+      concat_ws(",", (b * rowsPerBand until (b + 1) * rowsPerBand)
+        .map(i => col(s"mh$i").cast("string")): _*)
+    })
+  }
+
+  /** (keep…, band, bucket) rows, bucket b = `buckets(b)`, from ONE inline
+    * generator: through a per-band union Catalyst pushed the hot-bucket
+    * anti-join and both self-join sides, one cache scan, aggregate and
+    * shuffle per band. */
+  private def bandRows(sig: DataFrame, keep: Seq[String],
+                       buckets: Seq[Column]): DataFrame = {
+    val rows = buckets.zipWithIndex.map { case (c, b) =>
+      struct(lit(b).as("band"), c.as("bucket"))
+    }
+    sig.select(keep.map(col) :+ inline(array(rows: _*)): _*)
   }
 
   /** INCREMENTAL near-dup: flag a new ingest batch against an EXISTING
@@ -1196,7 +1196,7 @@ object Dedup {
     * per side: an over-cap bucket on the corpus side is an index
     * template-flood, on the new side a degenerate batch).
     *
-    * Scale shape: candidate generation is `bands` equi-joins of
+    * Scale shape: candidate generation is one (band, bucket) equi-join of
     * |delta|-sized banded rows against the index — cost tracks the
     * DELTA, not the corpus; the agreement join touches only candidate
     * corpus docs. No self-join of the corpus anywhere.

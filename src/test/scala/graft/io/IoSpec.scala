@@ -57,6 +57,16 @@ class IoSpec extends SparkSpec {
     assert(files == 1)
   }
 
+  test("K1: partitioned write leaves one file per partition value") {
+    val dir = Files.createTempDirectory("graft-k1-files").toString
+    val df = spark.range(0, 3000, 1, 8)
+      .select(col("id"), (col("id") % 3).cast("string").as("day"))
+    PartitionedWriter.write(df, dir, partitionCols = Seq("day"))
+    val perDay = new java.io.File(dir).listFiles().filter(_.isDirectory)
+      .map(_.listFiles().count(_.getName.endsWith(".parquet")))
+    assert(perDay.toSeq == Seq(1, 1, 1))
+  }
+
   test("K1: dynamic partition overwrite rewrites only the touched day") {
     // the reference's daily cadence: each run overwrites ONLY its
     // submission=<day> partition (testpilot_data.py:72-82); with static

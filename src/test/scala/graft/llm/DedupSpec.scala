@@ -1,6 +1,8 @@
 package graft.llm
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.math.Ordering.Double.TotalOrdering
 import graft.SparkSpec
 
 /** Dedup operators on a tiny corpus with planted exact and near dups. */
@@ -697,5 +699,139 @@ class DedupSpec extends SparkSpec {
     } yield (ia, ib, d.toLong)).toSet
     assert(out == truth, s"got $out, want $truth")
     assert(!out.exists(p => p._1 == 4L && p._2 == 5L))
+  }
+
+  // The union-of-bands spelling the single-generator banding replaced: one
+  // projection of the signature frame per band, unioned, then the same
+  // hot-bucket cap and the same candidate join and verification.
+  private def unionBanded(sig: DataFrame, keep: Seq[String],
+                          buckets: Seq[Column], maxBucket: Int): DataFrame = {
+    val banded = buckets.zipWithIndex.map { case (c, b) =>
+      sig.select(keep.map(col) :+ lit(b).as("band") :+ c.as("bucket"): _*)
+    }.reduce(_ union _)
+    val hot = banded.groupBy("band", "bucket").agg(count(lit(1)).as("n"))
+      .where(col("n") > maxBucket).select("band", "bucket")
+    banded.join(hot, Seq("band", "bucket"), "left_anti")
+  }
+
+  private def bandJoin(banded: DataFrame): DataFrame =
+    banded.as("a").join(banded.as("b"), col("a.band") === col("b.band") &&
+      col("a.bucket") === col("b.bucket") && col("a.doc_id") < col("b.doc_id"))
+
+  private def unionMinHashLsh(docs: DataFrame, maxBucket: Int) = {
+    val sig = Dedup.minHashSignatures(docs, 3, 16)
+    val banded = unionBanded(sig, Seq("doc_id"), (0 until 4).map { b =>
+      concat_ws(",", (4 * b until 4 * b + 4).map(i => col(s"mh$i").cast("string")): _*)
+    }, maxBucket)
+    val cand = bandJoin(banded)
+      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .agg(count(lit(1)).as("n_bands_hit"))
+    def side(s: String) = sig.select(col("doc_id").as(s"doc_$s") +:
+      (0 until 16).map(i => col(s"mh$i").as(s"$s$i")): _*)
+    val est = (0 until 16).map(i => when(col(s"a$i") === col(s"b$i"), 1)
+      .otherwise(0)).reduce(_ + _).cast("double") / 16
+    cand.join(side("a"), "doc_a").join(side("b"), "doc_b")
+      .where(est >= 0.3)
+      .select(col("doc_a"), col("doc_b"), round(est, 4), col("n_bands_hit"))
+      .as[(Long, Long, Double, Long)].collect().sorted.toSeq
+  }
+
+  private def unionSimHashPairs(docs: DataFrame, maxBucket: Int) = {
+    val sig = Dedup.simHash(docs)
+    val banded = unionBanded(sig, Seq("doc_id", "simhash"), (0 until 4).map(b =>
+      shiftrightunsigned(col("simhash"), 16 * b).bitwiseAND(0xFFFFL)), maxBucket)
+    bandJoin(banded)
+      .select(col("a.doc_id"), col("b.doc_id"),
+        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("long").as("h"))
+      .where(col("h") <= 6).distinct()
+      .as[(Long, Long, Long)].collect().sorted.toSeq
+  }
+
+  test("single-generator banding == union-of-bands spelling, minhash and simhash, " +
+    "default and binding hot-bucket cap") {
+    // sf0.01 documents plus a 40-copy template flood, so a cap of 8 binds
+    val sf001 = new java.io.File(Sf0001).getParent + "/sf0.01"
+    val docs = spark.read.parquet(s"$sf001/documents.parquet")
+      .select("doc_id", "text")
+      .union((0 until 40).map(i => (9000000L + i,
+        "shared boilerplate template text repeated across the corpus"))
+        .toDF("doc_id", "text"))
+    val got = Seq(1 << 12, 8).map { cap =>
+      val mh = Dedup.minHashLsh(docs, maxBucket = cap)
+        .select("doc_a", "doc_b", "est_jaccard", "n_bands_hit")
+        .as[(Long, Long, Double, Long)].collect().sorted.toSeq
+      val sh = Dedup.simHashPairs(docs, maxBucket = cap)
+        .as[(Long, Long, Long)].collect().sorted.toSeq
+      assert(mh == unionMinHashLsh(docs, cap), s"minhash, cap $cap")
+      assert(sh == unionSimHashPairs(docs, cap), s"simhash, cap $cap")
+      (mh, sh)
+    }
+    assert(got(0)._1.nonEmpty && got(0)._2.nonEmpty)
+    assert(got(0)._1 != got(1)._1 && got(0)._2 != got(1)._2,
+      "the cap of 8 must drop the template flood")
+  }
+
+  test("minhash LSH plan: no Union, one banding Generate over all bands") {
+    import org.apache.spark.sql.catalyst.expressions.{CreateArray, Inline}
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, Union}
+    val docs = spark.read.parquet(s"$Sf0001/documents.parquet")
+    val plan = Dedup.minHashLsh(docs, bands = 4).queryExecution.optimizedPlan
+    assert(plan.collect { case u: Union => u }.isEmpty, s"Union in:\n$plan")
+    // the banded frame feeds the hot-bucket aggregate, the anti-join and
+    // both sides of the self-join: every use is the same generator
+    val gens = plan.collect { case g: Generate => g.generator }
+    assert(gens.nonEmpty && gens.map(_.sql).distinct.size == 1,
+      s"banding Generates in:\n$plan")
+    gens.head match {
+      case Inline(a: CreateArray) => assert(a.children.size == 4)
+      case g => fail(s"unexpected generator $g")
+    }
+  }
+
+  test("connected components release their cached edge frame; repeated " +
+    "calls leave storage flat; rounds carry job descriptions") {
+    val sc = spark.sparkContext
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def stored = sc.getRDDStorageInfo.map(r => r.memSize + r.diskSize).sum
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
+    val none = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
+    def run(p: DataFrame) = Dedup.connectedComponents(p)
+      .select("doc_id", "component").as[(Long, Long)].collect().toMap
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(
+          "spark.job.description"))).foreach(descs.add)
+    }
+    spark.catalog.clearCache()
+    sc.addSparkListener(listener)
+    sc.setJobDescription("outer")
+    try {
+      assert(run(pairs) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+      assert(run(none).isEmpty)
+      assert(sc.getLocalProperty("spark.job.description") == "outer")
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    assert(cache.isEmpty)
+    val rounds = Set(0, 1).map(i => s"connected_components:round=$i")
+    val deadline = System.nanoTime() + 20000000000L
+    while (!rounds.forall(descs.contains) && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert(rounds.forall(descs.contains), s"descriptions $descs")
+
+    System.gc()
+    val base = stored
+    (1 to 10).foreach(_ => run(pairs))
+    assert(cache.isEmpty)
+    // the rounds' local checkpoints are released once unreachable
+    val gcDeadline = System.nanoTime() + 20000000000L
+    while (stored > base && System.nanoTime() < gcDeadline) {
+      System.gc(); Thread.sleep(200)
+    }
+    assert(stored <= base, s"storage grew from $base to $stored bytes")
   }
 }
