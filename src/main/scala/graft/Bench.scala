@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: one JSON line with per-query wall-clock at
   * SPARK_GRAFT_SF_DIR (default sf0.1).
   *
@@ -32,27 +30,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE size shuffles INSIDE cached plans too: with the default
-      // (false) every .persist() materializes at the static
-      // shuffle-partition count and each downstream stage over the cache
-      // pays that task count whatever the data size — the cached-frame
-      // operators (LSH signatures, token frames, round state) showed
-      // 8-10x the task count of their data's natural parallelism
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.localSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
-    graft.plans.GraftRules.register(spark)
 
     def runOne(name: String): Double = {
       // drop any cached blocks a previous query left behind — caches are

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Physical-plan audit: dump `.explain("formatted")` for every registered
   * query so pushdown / broadcast / whole-stage-codegen properties can be
@@ -12,26 +11,8 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE size shuffles INSIDE cached plans too: with the default
-      // (false) every .persist() materializes at the static
-      // shuffle-partition count and each downstream stage over the cache
-      // pays that task count whatever the data size — the cached-frame
-      // operators (LSH signatures, token frames, round state) showed
-      // 8-10x the task count of their data's natural parallelism
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.localSession("4")
     spark.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.register(spark)
-    graft.plans.GraftRules.register(spark)
     val sb = new StringBuilder
     sb.append("# Physical plans (explain formatted)\n\n")
     sb.append(s"Source: `$sfDir`, AQE on, shuffle.partitions=4.\n\n")

@@ -34,7 +34,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, S
   * overwhelmingly common case once the buffer is warm, since a random
   * row beats the current k-th with probability k/n). SQL:
   * `bottom_k(h, id, aux, k)` (k a literal) after
-  * [[graft.GraftFunctions.register]].
+  * [[graft.GraftSession.setup]].
   */
 case class BottomKAgg(
     hChild: Expression,

@@ -30,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `array<bigint>` of length depth·width.
   *
   * SQL: `count_min(col, depth, width, seed)` after
-  * [[graft.GraftFunctions.register]] (all three parameters literal).
+  * [[graft.GraftSession.setup]] (all three parameters literal).
   * Point estimates are plan-side expressions over the output array —
   * see [[graft.queries.LlmQueries.countMinFrequencies]].
   */

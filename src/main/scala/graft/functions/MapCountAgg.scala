@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Output is a `map<string,bigint>` with keys in BINARY-SORTED order —
   * deterministic, so the rendered `k:v` form is oracle-comparable.
-  * SQL: `map_count(col)` after [[graft.GraftFunctions.register]].
+  * SQL: `map_count(col)` after [[graft.GraftSession.setup]].
   */
 case class MapCountAgg(
     child: Expression,

@@ -31,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * serialization is the same length-prefixed byte stream as MapCountAgg.
   * Output: `map<string,bigint>` of surviving keys → estimates, keys in
   * binary-sorted order (deterministic). SQL: `misra_gries(col, k)` after
-  * [[graft.GraftFunctions.register]] (k must be a literal).
+  * [[graft.GraftSession.setup]] (k must be a literal).
   */
 case class MisraGriesAgg(
     child: Expression,

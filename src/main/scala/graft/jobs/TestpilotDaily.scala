@@ -24,15 +24,14 @@ object TestpilotDaily {
 
   /** spark-submit entry — the analog of the reference's notebook
     * orchestration (clone → build egg → addPyFile → main(sc, sqlContext),
-    * scheduling/cliqz_load_and_run.ipynb): here it is one submitted jar.
+    * scheduling/cliqz_load_and_run.ipynb): here it is one submitted jar
+    * on the [[graft.GraftSession.build]] session, the conf the daily_etl
+    * benchmark measures.
     * `args`: telemetryParquetPath searchCsvPath outBaseDir */
   def main(args: Array[String]): Unit = {
     val Array(telemetryPath, csvPath, outBase) = args.take(3)
-    val spark = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.GraftSession.build(SparkSession.builder()
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
     run(spark,
       spark.read.parquet(telemetryPath),
       graft.io.Tables.csv(spark, csvPath),

@@ -261,8 +261,8 @@ object Dedup {
     * collapse first. Below the cap the output is IDENTICAL to the
     * unguarded join (asserted in DedupSpec).
     *
-    * Default `maxDf` = 4096 is MEASURED, not guessed
-    * ([[graft.tools.CapFlood]], 500k-doc corpus, BASELINE.md round 6):
+    * Default `maxDf` = 4096 is MEASURED, not guessed (500k-doc corpus,
+    * BASELINE.md "Round-6 cap validation: the df² single-key experiment"):
     * a shingle at df generates df²/2 rows through one join key AND one
     * partial-agg hash map — df=4096 cost ~12 s of single-key work
     * (8.4M rows), df=16384 ~255 s (134M rows), df=32768 ~969 s (537M
@@ -676,9 +676,9 @@ object Dedup {
     * shingle under a random posting, i.e. the expected number of join
     * rows each posting generates in the exact count-filter candidate
     * join. The sketch path replaces that per-posting fan-out with k
-    * rows/doc, so it pays when this statistic is large. Calibrated with
-    * [[graft.tools.DfStat]] on the round-6 BASELINE.md corpora (where
-    * the exact-vs-sketch crossover was measured directly): the 10×/100×
+    * rows/doc, so it pays when this statistic is large. Calibrated on the
+    * round-6 corpora of BASELINE.md "Round-6 sketch-vs-exact" (where the
+    * exact-vs-sketch crossover was measured directly): the 10×/100×
     * disjoint corpora (exact faster) measure 10.7; the 10×
     * duplication-flood corpus (sketch faster) measures 107.2 — the
     * default threshold 32 is the geometric mean of the two regimes. */
@@ -1379,7 +1379,7 @@ object Dedup {
     * output is IDENTICAL to the uncapped join (asserted in DedupSpec).
     * The 4096 default follows the same single-key measurement as
     * [[containmentPairs]]' `maxDf` (identical s² equi-join shape —
-    * [[graft.tools.CapFlood]], BASELINE.md round 6). */
+    * BASELINE.md "Round-6 cap validation"). */
   private def dropHotBuckets(banded: DataFrame, maxBucket: Int): DataFrame =
     if (maxBucket == Int.MaxValue) banded
     else {

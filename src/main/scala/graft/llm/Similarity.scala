@@ -500,7 +500,7 @@ object Similarity {
     * contract): the O(Σ cᵢ²) bound assumes k-means balance, but k-means
     * over near-duplicate-heavy embeddings collapses easily — a degenerate
     * mega-cluster puts cᵢ² join rows through ONE cid key, the exact
-    * single-key s² shape [[graft.tools.CapFlood]] measured (~16 min for
+    * single-key s² shape of BASELINE.md's round-6 cap table (~16 min for
     * 537M rows on one reducer). Cells above `maxCluster` are recursively
     * RE-CLUSTERED ([[clusterCapped]]): their members get a fresh k-means
     * split (geometry-aware — true semantic pairs stay co-celled where the
@@ -511,10 +511,11 @@ object Similarity {
     * still carries its exact verified cosine — only recall is traded, and
     * only while the cap is tripping; below the cap the output is
     * IDENTICAL to the unguarded join (asserted in SimilaritySpec). The
-    * 4096 default inherits CapFlood's measured single-key curve
-    * (identical s² equi-join shape; BASELINE.md round 6). Like the Lloyd
-    * rounds it guards, the cluster-size probe is an eager action per
-    * level — this operator is iterative/action-driven by construction
+    * 4096 default inherits that measured single-key curve (identical s²
+    * equi-join shape; BASELINE.md "Round-6 cap validation" and "Round-8
+    * cap validation: the mega-cluster experiment"). Like the Lloyd rounds
+    * it guards, the cluster-size probe is an eager action per level —
+    * this operator is iterative/action-driven by construction
     * (kmeansTrain materializes and sums every round).
     *
     * Output: (vec_id, component, is_keeper) for every vector in ≥1
@@ -794,8 +795,8 @@ object Similarity {
     * n ≤ target·2^p — the Scaladoc'd production dial (planes grow as
     * log2(n/target)) computed from the data instead of asserted.
     * Read it before trusting a planesPerTable at a new corpus size;
-    * the BucketFlood experiment measured what happens when this report
-    * is ignored.
+    * BASELINE.md "Round-8 cap validation: the hot-bucket experiment"
+    * measured what happens when this report is ignored.
     *
     * All integers (the one 4-dp ratio is mean bucket size); the
     * advisor's log2 is integer arithmetic (a 63-row broadcast probe of
@@ -1298,10 +1299,11 @@ object Similarity {
     * collision join run as a SELF-join (all nodes are queries, so
     * nothing broadcasts): collide in ANY of the L tables on the (t, sig)
     * equi-key. Per-bucket membership > `maxBucket` is dropped first —
-    * the q32/[[graft.llm.Dedup]] hot-bucket convention, same
-    * CapFlood-calibrated 2^12 default, same trade (an over-cap LSH
-    * bucket is a template flood exact-dedup should collapse first;
-    * below the cap the output is identical to the uncapped join).
+    * the q32/[[graft.llm.Dedup]] hot-bucket convention, same 2^12
+    * default (calibrated by BASELINE.md's round-6 cap table), same trade
+    * (an over-cap LSH bucket is a template flood exact-dedup should
+    * collapse first; below the cap the output is identical to the
+    * uncapped join).
     *
     * Scale shape: scoring happens AT the collision join (embeddings
     * never shuffle — a colliding pair is scored from the join's own

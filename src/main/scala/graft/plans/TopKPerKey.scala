@@ -148,15 +148,13 @@ object TopKPerKey {
 
   /** DataFrame API: exact per-key top-k with rank column `rankName`.
     * Sort keys must yield a total order (include a unique tie-breaker)
-    * for deterministic results. Registers the strategy on the session
-    * (idempotent) via the public experimental-methods hook. */
+    * for deterministic results. Precondition: the session was built by
+    * [[graft.GraftSession]] (or passed to [[graft.GraftSession.setup]]) or
+    * carries [[graft.GraftExtensions]] — [[TopKPerKeyStrategy]] must be
+    * registered, or planning the node fails. */
   def apply(df: DataFrame, keyNames: Seq[String], orderBy: Seq[SortKey],
             k: Int, rankName: String = "rn"): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    }
     val plan = DatasetBridge.logicalPlan(df)
     def attr(n: String): Attribute =
       plan.output.find(_.name == n).getOrElse(

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, EqualTo, Expression, IntegerLiteral, LessThan, LessThanOrEqual, RowNumber, SortOrder, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -19,9 +18,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * holds k rows per key per task), bound strictly positive, and at least one
   * PARTITION BY key — a global (unpartitioned) top-k stays on Spark's window
   * path, since TopKPerKeyExec requires a ClusteredDistribution over the keys
-  * and ClusteredDistribution(Nil) is rejected at planning. Registered via
-  * [[GraftRules.register]] (`spark.experimental.extraOptimizations`) or
-  * `spark.sql.extensions` ([[graft.GraftExtensions]]).
+  * and ClusteredDistribution(Nil) is rejected at planning. Registered by
+  * [[graft.GraftSession.setup]] or `spark.sql.extensions`
+  * ([[graft.GraftExtensions]]); `spark.sql.optimizer.excludedRules` can
+  * switch it off per session.
   */
 object TopKRewrite extends Rule[LogicalPlan] {
   private val maxK = 1000
@@ -66,25 +66,5 @@ object TopKRewrite extends Rule[LogicalPlan] {
   private def splitConjuncts(e: Expression): Seq[Expression] = e match {
     case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
     case other => Seq(other)
-  }
-}
-
-object GraftRules {
-  /** Register the rewrites + strategy on an existing session via the
-    * public experimental hooks (idempotent). AnnJoinRewrite is inert until
-    * its conf flag is set — registering it is always safe. */
-  def register(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(TopKRewrite)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TopKRewrite
-    }
-    if (!spark.experimental.extraOptimizations.contains(AnnJoinRewrite)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ AnnJoinRewrite
-    }
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    }
   }
 }

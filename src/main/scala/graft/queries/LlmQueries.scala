@@ -1904,7 +1904,6 @@ object LlmQueries {
     * collisions are REAL and the one-sided error is exercised — the
     * oracle replays the full counter matrix, not just the exact counts. */
   def countMinFrequencies(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val depth = 4; val width = 256; val seed = 101
     val ev = table(s, dir, "events")
       .select(col("user_id").cast("string").as("k"))
@@ -1933,7 +1932,6 @@ object LlmQueries {
     * broadcast vs shuffle vs skew-salt for the real join. Here: signups
     * ⋈ other events per user, estimate vs exact. */
   def joinCardinality(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val depth = 4; val width = 256; val seed = 101
     val ev = table(s, dir, "events")
       .select(col("user_id").cast("string").as("k"), col("event_type"))
@@ -2082,7 +2080,6 @@ object LlmQueries {
     * per row — the interpreted-eval cost the q115 kernel dodges is
     * irrelevant at that cardinality. */
   def hllDistinct(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val ev = table(s, dir, "events")
       .select(col("event_type"), col("user_id").cast("string").as("k"))
     val regs = ev.groupBy("event_type")
@@ -2860,7 +2857,6 @@ object LlmQueries {
     * q204 estimate-next-to-exact convention — the exact self-join is
     * the thing the sketch exists to avoid). */
   def fkDiscovery(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val k = 128
     val num = (BigInt(k) - 1) * (BigInt(1) << 60)
     def leg(tbl: String, c: String) =

@@ -237,7 +237,6 @@ object PipelineQueries {
     * serialization for shuffle/spill, map-side partial aggregation. Same
     * oracle as q17/q18, proving all three formulations agree. */
   def mapMonoidNative(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     table(s, dir, "events")
       .groupBy("user_id")
       .agg(expr("map_count(event_type)").as("m"))
@@ -294,7 +293,6 @@ object PipelineQueries {
     * and the codegen'd [[graft.functions.PolyHash]] native expression
     * (same value, faster; proven equal here by emitting both). */
   def fingerprints(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val codes = transform(split(col("text"), ""),
       ch => ascii(ch).cast("long"))
     val rolling = aggregate(

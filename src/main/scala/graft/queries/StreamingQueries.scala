@@ -198,7 +198,6 @@ object StreamingQueries {
     * is a plain per-user count — the ε·n approximation bound for k <
     * cardinality is property-tested in MisraGriesSpec. */
   def heavyHittersStream(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val srcDir = stageForStream(dir, "events.parquet", "q86")
     val stream = EventsStream.fromDirectory(s, srcDir)
     val out = java.nio.file.Files.createTempDirectory("graft-q86").toString
@@ -381,7 +380,6 @@ object StreamingQueries {
     * distinct-count sketch are always current without ever rescanning
     * the corpus. */
   def streamingBottomK(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val srcDir = stageForStream(dir, "documents.parquet", "q150")
     val stream = EventsStream.fromDirectory(s, srcDir)
     val out = java.nio.file.Files.createTempDirectory("graft-q150").toString
@@ -420,7 +418,6 @@ object StreamingQueries {
     * dashboard fed straight from the ingest stream — the state is
     * #groups × 256 bytes however large the corpus grows. */
   def streamingHll(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val srcDir = stageForStream(dir, "events.parquet", "q172")
     val stream = EventsStream.fromDirectory(s, srcDir)
     val out = java.nio.file.Files.createTempDirectory("graft-q172").toString

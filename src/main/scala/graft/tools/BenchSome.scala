@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc benchmark of a subset of queries: `runMain graft.tools.BenchSome
   * <sfDir> <runs> <query...>` — same session config as [[graft.Bench]],
   * prints every sample (not just the median) for variance diagnosis. */
@@ -11,23 +9,7 @@ object BenchSome {
     val runs = args(1).toInt
     val names = args.drop(2).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE size shuffles INSIDE cached plans too: with the default
-      // (false) every .persist() materializes at the static
-      // shuffle-partition count and each downstream stage over the cache
-      // pays that task count whatever the data size — the cached-frame
-      // operators (LSH signatures, token frames, round state) showed
-      // 8-10x the task count of their data's natural parallelism
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.localSession(cpus)
     // diagnosis hooks: SPARK_GRAFT_CONF="k=v;k=v" runtime-conf overrides,
     // SPARK_GRAFT_LOGLEVEL=INFO for stage-timeline forensics
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
@@ -36,8 +18,6 @@ object BenchSome {
       })
     spark.sparkContext.setLogLevel(
       sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
-    graft.GraftFunctions.register(spark)
-    graft.plans.GraftRules.register(spark)
 
     def runOne(name: String): Double = {
       spark.catalog.clearCache()

@@ -3,7 +3,6 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query wall-clock decomposition for optimization work: runs a
   * registered query (same session config as [[graft.Bench]]) and prints,
@@ -23,31 +22,12 @@ object ProfileQuery {
     val runs = args(1).toInt
     val names = args.drop(2).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE size shuffles INSIDE cached plans too: with the default
-      // (false) every .persist() materializes at the static
-      // shuffle-partition count and each downstream stage over the cache
-      // pays that task count whatever the data size — the cached-frame
-      // operators (LSH signatures, token frames, round state) showed
-      // 8-10x the task count of their data's natural parallelism
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.localSession(cpus)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
       })
     spark.sparkContext.setLogLevel("WARN")
-    graft.GraftFunctions.register(spark)
-    graft.plans.GraftRules.register(spark)
 
     // listener state: job windows (for busy-time coverage) + stage sums
     val jobWindows = mutable.ArrayBuffer[(Long, Long)]() // (start, end) ms

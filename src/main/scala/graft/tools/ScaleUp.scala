@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Build a larger documents corpus from a testdata scale factor for scale
@@ -30,12 +29,7 @@ object ScaleUp {
     val mode = if (args.length > 3) args(3) else "disjoint"
     require(mode == "disjoint" || mode == "shared", s"unknown mode $mode")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.localSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(s"$src/documents.parquet")
     val c = spark.range(copies).select(col("id").as("copy"))

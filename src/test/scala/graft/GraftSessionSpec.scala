@@ -1,48 +1,62 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.plans.{AnnJoinRewrite, TopKPerKeyStrategy, TopKRewrite}
 
-/** The production session recipe actually applies what it promises.
+/** The session recipes and the runtime registration path.
   *
-  * Suites share one JVM (Test/fork) and one lazy SparkSession
-  * (SparkSpec.session), and `getOrCreate` on an existing session does
-  * NOT re-apply builder confs — so the conf assertions only run when
-  * this suite happens to create the first session of the JVM, and the
-  * session is never stopped here (stopping the shared one would poison
-  * every later suite). Registration assertions hold either way —
-  * `GraftSession.build` registers on whatever session it returns. */
-class GraftSessionSpec extends AnyFunSuite {
+  * The recipes are asserted as maps, not read back from a session: suites
+  * share one JVM and one SparkContext, so a builder's confs reach a session
+  * only when it is the JVM's first. `setup` runs on a `newSession()` so the
+  * shared test session (registered once, through `spark.sql.extensions`)
+  * keeps a single copy of each rule. */
+class GraftSessionSpec extends SparkSpec {
 
-  test("build: confs (fresh session only), functions, rules, idempotency") {
-    val fresh = SparkSession.getActiveSession.isEmpty &&
-      SparkSession.getDefaultSession.isEmpty
-    val spark = GraftSession.build(
-      SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false"))
-    if (fresh) {
-      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-      assert(spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
-      assert(spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass")
-        .contains("RocksDBStateStoreProvider"))
-      assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+  private val rocksDb =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  test("recipes: recommended and local share core and add only their own keys") {
+    assert(GraftSession.core == Map(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.session.timeZone" -> "UTC"))
+    assert(GraftSession.recommended == GraftSession.core ++ Map(
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.streaming.stateStore.providerClass" -> rocksDb))
+    assert(GraftSession.local("8") -- GraftSession.core.keys == Map(
+      "spark.master" -> "local[8]",
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.ui.enabled" -> "false"))
+  }
+
+  test("local recipe is pinned: the Bench/Verify harness conf") {
+    // every Bench timing and Verify dump runs on exactly this conf
+    assert(GraftSession.local("4") == Map(
+      "spark.master" -> "local[4]",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.ui.enabled" -> "false"))
+  }
+
+  test("setup: functions, rules and strategy, each once after two calls") {
+    val s = spark.newSession()
+    // a new session inherits the extension-injected functions: drop them
+    // so the check below sees what setup registers
+    val registry = s.sessionState.functionRegistry
+    GraftSession.functions.foreach { case (id, _, _) => registry.dropFunction(id) }
+    assert(GraftSession.setup(GraftSession.setup(s)) eq s)
+    GraftSession.functions.foreach { case (id, _, _) =>
+      assert(registry.functionExists(id), id)
     }
-    // native function registry reachable from SQL
-    assert(spark.sql("SELECT poly_hash('abc')").head().getLong(0) != 0L)
-    // rules + strategy registered
-    assert(spark.experimental.extraOptimizations
-      .contains(graft.plans.TopKRewrite))
-    assert(spark.experimental.extraOptimizations
-      .contains(graft.plans.AnnJoinRewrite))
-    assert(spark.experimental.extraStrategies
-      .contains(graft.plans.TopKPerKeyStrategy))
-    // calling build again is a no-op, not a duplicate registration
-    GraftSession.build(SparkSession.builder().master("local[2]"))
-    assert(spark.experimental.extraOptimizations
-      .count(_ == graft.plans.TopKRewrite) == 1)
+    assert(s.sql("SELECT poly_hash('abc')").head().getLong(0) != 0L)
+    assert(s.experimental.extraOptimizations == Seq(TopKRewrite, AnnJoinRewrite))
+    assert(s.experimental.extraStrategies == Seq(TopKPerKeyStrategy))
   }
 }

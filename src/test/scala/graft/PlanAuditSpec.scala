@@ -199,8 +199,6 @@ class PlanAuditSpec extends SparkSpec {
     "q165_stream_static_enrich")
 
   test("no CartesianProduct; BroadcastNestedLoopJoin only where designed") {
-    GraftFunctions.register(spark)
-    graft.plans.GraftRules.register(spark)
     val offenders = scala.collection.mutable.ListBuffer.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (n, _) => skip(n) }

@@ -8,10 +8,7 @@ import graft.SparkSpec
 class BottomKAggSpec extends SparkSpec {
   import spark.implicits._
 
-  private def registered() = { graft.GraftFunctions.register(spark); () }
-
   test("keeps exactly the k smallest (h, id), ascending, capped") {
-    registered()
     val rows = (0L until 100L).map(i => (1, (i * 37) % 101, i, i * 10))
     val out = rows.toDF("g", "h", "id", "aux")
       .groupBy("g").agg(expr("bottom_k(h, id, aux, 5)").as("bk"))
@@ -23,7 +20,6 @@ class BottomKAggSpec extends SparkSpec {
   }
 
   test("duplicate (h, id) folds to one entry; nulls are skipped") {
-    registered()
     val out = Seq[(Int, java.lang.Long, java.lang.Long, java.lang.Long)](
       (1, 5L, 7L, 1L), (1, 5L, 7L, 1L), (1, null, 9L, 2L), (1, 3L, null, 3L),
       (1, 8L, 2L, 4L))
@@ -35,7 +31,6 @@ class BottomKAggSpec extends SparkSpec {
   }
 
   test("merge law: per-shard bottom-k re-aggregated equals one-shot") {
-    registered()
     val docs = spark.read.parquet(s"$Sf0001/documents.parquet")
       .select(col("source"),
         graft.llm.PortableSeededHash.hash(col("doc_id"), 45).as("h"),
@@ -57,7 +52,6 @@ class BottomKAggSpec extends SparkSpec {
   }
 
   test("parity with the window spelling of bottomKPerKey") {
-    registered()
     val docs = spark.read.parquet(s"$Sf0001/documents.parquet")
     val window = graft.llm.Sampling
       .bottomKPerKey(docs, col("source"), col("doc_id"), k = 8)
@@ -76,7 +70,6 @@ class BottomKAggSpec extends SparkSpec {
   }
 
   test("KMV set-op estimates land in the error band of the exact counts") {
-    registered()
     val out = graft.queries.LlmQueries.kmvSetOps(spark, Sf0001)
       .select("src_a", "src_b", "est_a", "est_union", "est_intersection")
       .as[(String, String, Long, Long, Long)].collect()

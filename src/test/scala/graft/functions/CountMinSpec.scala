@@ -10,7 +10,6 @@ class CountMinSpec extends SparkSpec {
 
   private def estimates(keys: Seq[String], depth: Int, width: Int,
                         seed: Int): Map[String, Long] = {
-    graft.GraftFunctions.register(spark)
     // many small partitions so partial buffers really merge
     val df = keys.toDF("k").repartition(4)
     val sketch = df.agg(expr(s"count_min(k, $depth, $width, $seed)").as("cm"))
@@ -35,7 +34,6 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("merge is element-wise exact: 1 partition == 8 partitions") {
-    graft.GraftFunctions.register(spark)
     val keys = (1 to 200).map(i => s"u${i % 31}")
     def matrix(parts: Int): Seq[Long] =
       keys.toDF("k").repartition(parts)
@@ -45,7 +43,6 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("row cells each sum to the total update count") {
-    graft.GraftFunctions.register(spark)
     val keys = (1 to 123).map(i => s"x$i")
     val m = keys.toDF("k").agg(expr("count_min(k, 3, 16, 11)").as("cm"))
       .as[Seq[Long]].head()
@@ -60,7 +57,6 @@ class CountMinSpec extends SparkSpec {
     // true |A JOIN B| = sum k*(9-k) = 120. width 64 >> 8 keys: for the
     // q204 estimator a collision-free matrix makes min-row inner product
     // EXACT; a width-4 matrix must still never undercount.
-    graft.GraftFunctions.register(spark)
     val a = (1 to 8).flatMap(k => Seq.fill(k)(k.toString)).toDF("k")
     val b = (1 to 8).flatMap(k => Seq.fill(9 - k)(k.toString)).toDF("k")
     def inner(width: Int): Long = {

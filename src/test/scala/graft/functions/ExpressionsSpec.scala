@@ -26,7 +26,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("md5_prefix60 SQL function matches the Column API") {
-    graft.GraftFunctions.register(spark)
     val got = spark.sql("SELECT md5_prefix60('42:99') AS h")
       .as[Long].head()
     val want = Seq("x").toDF("s")
@@ -41,7 +40,6 @@ class ExpressionsSpec extends SparkSpec {
       if (cps.isEmpty) 0L
       else cps.tail.foldLeft(cps.head.toLong)((a, c) => (a * 31 + c) % 2147483647L)
     }
-    graft.GraftFunctions.register(spark)
     val gen = Gen.listOf(Gen.asciiPrintableChar).map(_.mkString)
     val inputs = Iterator.continually(gen.sample).flatten.take(30).toSeq
       .map(_.take(200)) :+ "" :+ "a" :+ "héllo ☃ unicode"
@@ -145,7 +143,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("IntDot matches the HOF fold and nulls on length mismatch") {
-    graft.GraftFunctions.register(spark)
     val out = spark.sql(
       """SELECT int_dot(array(1, -2, 3), array(4, 5, -6)) AS d,
         |  int_dot(array(1, 2), array(1)) AS mism,

@@ -6,8 +6,6 @@ import org.apache.spark.sql.functions._
 class HyperLogLogSpec extends SparkSpec {
   import spark.implicits._
 
-  graft.GraftFunctions.register(spark)
-
   private def registers(values: Seq[String], parts: Int): Seq[Int] =
     values.toDF("k").repartition(parts)
       .agg(expr("hll_registers(k, 8, 77)").as("r"))

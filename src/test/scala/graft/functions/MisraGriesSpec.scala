@@ -78,7 +78,6 @@ class MisraGriesSpec extends SparkSpec {
   }
 
   test("misra_gries SQL function end-to-end across a real shuffle") {
-    graft.GraftFunctions.register(spark)
     val df = (0 until 4000).map(i => s"u${i % 7}").toDF("term")
       .repartition(8) // force partial buffers + merges
       .agg(expr("misra_gries(term, 8)").as("m"))

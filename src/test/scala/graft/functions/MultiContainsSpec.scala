@@ -59,7 +59,6 @@ class MultiContainsSpec extends SparkSpec {
   }
 
   test("Column wrapper + SQL function agree, codegen path") {
-    graft.GraftFunctions.register(spark)
     val dict = Seq("ab", "bc", "abc")
     val df = Seq("xabcx", "zz", "bc").toDF("s")
     val viaCol = df.select(

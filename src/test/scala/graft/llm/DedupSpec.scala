@@ -311,9 +311,9 @@ class DedupSpec extends SparkSpec {
     val flood = meanDf((0L until 60L).map(i =>
         (i, s"common footer text over and over again token$i"))
       .toDF("doc_id", "text"))
-    // 32 = the calibrated default (DfStat: disjoint corpora 10.7, the
-    // round-6 duplication flood 107.2 — this corpus sits in between
-    // the flood and the geometric-mean threshold)
+    // 32 = the calibrated default (Dedup.postingsMeanDf: disjoint
+    // corpora 10.7, the round-6 duplication flood 107.2 — this corpus
+    // sits in between the flood and the geometric-mean threshold)
     assert(normal < 32.0, s"normal corpus statistic $normal routes exact")
     assert(flood > 32.0, s"flood statistic $flood routes to the sketch")
   }

@@ -25,7 +25,6 @@ class AggsSpec extends SparkSpec {
   }
 
   test("MapCountAgg (native) == typed Aggregator result across a shuffle") {
-    graft.GraftFunctions.register(spark)
     val df = Seq(
       (1L, "x"), (1L, "x"), (1L, "y"),
       (2L, "z"), (2L, "z"), (2L, "z"), (2L, "a"),

@@ -20,7 +20,6 @@ class AnnJoinRewriteSpec extends SparkSpec {
   }
 
   test("flag off (default): join is untouched, plans as nested loop") {
-    GraftRules.register(spark)
     spark.conf.unset("spark.graft.ann.bucketJoin")
     val df = cosineJoin()
     df.collect()
@@ -31,7 +30,6 @@ class AnnJoinRewriteSpec extends SparkSpec {
   }
 
   test("flag on: equi join on LshSig buckets, output is a subset of exact") {
-    GraftRules.register(spark)
     val exact = cosineJoin().as[(Long, Long)].collect().toSet
     spark.conf.set("spark.graft.ann.bucketJoin", "true")
     try {
@@ -48,7 +46,6 @@ class AnnJoinRewriteSpec extends SparkSpec {
   }
 
   test("flag on: joins that already have equi keys are left alone") {
-    GraftRules.register(spark)
     spark.conf.set("spark.graft.ann.bucketJoin", "true")
     try {
       val a = emb.select(col("vec_id").as("k"), col("embedding").as("ea"))

@@ -1,5 +1,7 @@
 package graft.plans
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Window
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.ops.Windows
@@ -15,33 +17,33 @@ class TopKRewriteSpec extends SparkSpec {
     Seq(col("o_totalprice").desc, col("o_orderkey").asc), k = 3)
 
   test("rewrite fires: optimized plan has TopKPerKeyNode, no Window") {
-    GraftRules.register(spark)
     val optimized = windowTopK.queryExecution.optimizedPlan
     assert(optimized.collect { case n: TopKPerKeyNode => n }.nonEmpty,
       optimized.toString)
-    assert(optimized.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
-    }.isEmpty, optimized.toString)
+    assert(optimized.collect { case w: Window => w }.isEmpty,
+      optimized.toString)
   }
 
   test("rewritten result == unrewritten window result") {
-    GraftRules.register(spark)
-    val rewritten = windowTopK
-      .select(col("o_custkey"), col("rn").cast("long"), col("o_orderkey"))
-      .as[(Long, Long, Long)].collect().toSeq.sorted
-    // strip the rule to get the plain window execution
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == TopKRewrite)
-    val plain = windowTopK
-      .select(col("o_custkey"), col("rn").cast("long"), col("o_orderkey"))
-      .as[(Long, Long, Long)].collect().toSeq.sorted
-    GraftRules.register(spark)
+    def rows(df: DataFrame) =
+      df.select(col("o_custkey"), col("rn").cast("long"), col("o_orderkey"))
+        .as[(Long, Long, Long)].collect().toSeq.sorted
+    val rewritten = rows(windowTopK)
+    // the plain window execution: excludedRules switches the rule off on
+    // every registration path (extensions and experimental hooks alike)
+    val excluded = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(excluded, TopKRewrite.ruleName)
+    val (plain, plainPlan) =
+      try (rows(windowTopK), windowTopK.queryExecution.optimizedPlan)
+      finally spark.conf.unset(excluded)
+    assert(plainPlan.collect { case w: Window => w }.nonEmpty, plainPlan.toString)
+    assert(plainPlan.collect { case n: TopKPerKeyNode => n }.isEmpty,
+      plainPlan.toString)
     assert(rewritten == plain)
     assert(rewritten.nonEmpty)
   }
 
   test("no rewrite when filter uses rank beyond a bound (rn = 2)") {
-    GraftRules.register(spark)
     val df = Windows.topKPerKey(orders, Seq(col("o_custkey")),
       Seq(col("o_totalprice").desc, col("o_orderkey").asc), k = 3)
       .where(col("rn") === 2) // equality ≠ top-k bound (except 1)
@@ -53,7 +55,6 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("global (unpartitioned) top-k does not rewrite and still plans") {
-    GraftRules.register(spark)
     // empty PARTITION BY: ClusteredDistribution(Nil) is rejected by Spark —
     // the rule must leave this on the window path
     val df = orders.withColumn("rn",
@@ -69,7 +70,6 @@ class TopKRewriteSpec extends SparkSpec {
   }
 
   test("rank=1 equality rewrites (argmax pattern)") {
-    GraftRules.register(spark)
     val df = orders.withColumn("rn",
         row_number().over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("o_custkey"))

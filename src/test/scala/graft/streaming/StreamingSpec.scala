@@ -319,7 +319,6 @@ class StreamingSpec extends SparkSpec {
     // custom TypedImperativeAggregate buffers serialize into the state
     // store like any built-in agg; 5 distinct event types < 8 counters
     // means the sketch must be exact once the replay completes
-    graft.GraftFunctions.register(spark)
     val stream = EventsStream.fromDirectory(spark, streamDir)
     val got = runToMemory(
         stream.groupBy("user_id")
