@@ -29,6 +29,8 @@ import graft.plans.{AnnJoinRewrite, TopKPerKeyStrategy, TopKRewrite}
   *  - **RocksDB state store** (production only): bounded-memory streaming
   *    state — the provider the gated stream queries (q83/q85) switch on
   *    per query (`StreamingQueries.withRocksDb`).
+  *  - **Generated-class cache** (production only): room for a whole
+  *    pipeline's generated classes, so a repeated run compiles none.
   *  - **Registration**: the native expressions (`poly_hash`, `cosine_sim`,
   *    `map_count`, `md5_prefix60`, `misra_gries`, ...), the TopK rewrite +
   *    physical operator, and the (conf-gated, default-off) ANN bucket-join
@@ -58,12 +60,20 @@ object GraftSession {
     "spark.sql.sources.v2.bucketing.enabled" -> "true",
     "spark.sql.session.timeZone" -> "UTC")
 
-  /** The production recipe: [[core]] plus skew-join splitting and the
-    * RocksDB state store. */
+  /** The production recipe: [[core]] plus skew-join splitting, the
+    * RocksDB state store and a larger generated-class cache. */
   val recommended: Map[String, String] = core ++ Map(
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
     "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    // Spark's default of 100 entries is four LRU segments of 25, filled
+    // by identity hash: a CorpusPipeline.run pass with its write and one
+    // query generates 87 classes, which overflow a segment in about half
+    // of all JVMs, and those recompile ~20 classes on every pass (~10% of
+    // a warm pass). 512 keeps pipelines of that size resident; a cached
+    // source averages about 7 KB. Static: it applies when the session is
+    // the JVM's first.
+    "spark.sql.codegen.cache.maxEntries" -> "512")
 
   /** The local harness recipe (Bench, Verify, Plans and the tools): [[core]]
     * on `local[cpus]` with one shuffle partition per core. The bench conf

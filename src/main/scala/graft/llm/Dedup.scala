@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -881,40 +881,40 @@ object Dedup {
     * ~40-byte string keys matter). Returns
     * (doc_a, doc_b, est_jaccard, n_bands_hit).
     *
-    * The signature frame is persisted at `storageLevel` (it feeds the
-    * banding AND both sides of the agreement join);
-    * `StorageLevel.NONE` disables persistence for callers composing
-    * several pipelines that manage memory themselves. */
+    * The signature frame (it feeds the banding AND both sides of the
+    * agreement join) and the hot-bucket-filtered banded frame (both
+    * sides of the candidate self-join) are each [[materialize]]d once at
+    * `storageLevel`; `StorageLevel.NONE` keeps both lazy for callers
+    * composing several pipelines that manage memory themselves. */
   def minHashLsh(docs: DataFrame, n: Int = 3, k: Int = 16, bands: Int = 4,
                  estThreshold: Double = 0.3,
                  hasher: SeededHash = XxSeededHash,
                  storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
                  maxBucket: Int = 1 << 12): DataFrame = {
-    val sig0 = minHashSignatures(docs, n, k, hasher)
-    // right-size the cache: the fanned-out hashing pass leaves the frame
-    // at core-count round-robin partitions, and every downstream cache
-    // scan would pay that task count however small the signatures are.
-    // A keyed repartition (no explicit N) is AQE-coalescible, so the
-    // cache lands at data-sized partitions locally AND at scale; doc_id
-    // keying is also the verify-join side's distribution.
-    val sig = if (storageLevel == StorageLevel.NONE) sig0
-              else sig0.persist(storageLevel)
-    val banded = dropHotBuckets(bandSignatures(sig, k, bands), maxBucket)
+    // each intermediate is computed once, by an eager local checkpoint at
+    // `storageLevel` (NONE keeps it lazy): one job fills the signature
+    // blocks instead of one concurrent cache-stage job per consumer, and
+    // both self-join sides read one banded frame instead of each
+    // recomputing the banding and its hot-bucket aggregate. The blocks
+    // are released by the ContextCleaner once the frames are unreachable
+    // and are lost with their executor, as connectedComponents' default
+    // mode is.
+    val sig = materialize(minHashSignatures(docs, n, k, hasher), storageLevel)
+    val banded = materialize(
+      bandSignatures(sig, k, bands, maxBucket), storageLevel)
     val cand = banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") &&
         col("a.bucket") === col("b.bucket") &&
         col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_bands_hit"))
-    // estimate jaccard = fraction of agreeing signature rows
-    val sigA = sig.select(col("doc_id").as("doc_a") +:
-      (0 until k).map(i => col(s"mh$i").as(s"a$i")): _*)
-    val sigB = sig.select(col("doc_id").as("doc_b") +:
-      (0 until k).map(i => col(s"mh$i").as(s"b$i")): _*)
+    // estimate jaccard = fraction of agreeing signature rows. Both sides
+    // read `sig` with one projection, so they share one exchange.
     val agree = (0 until k)
-      .map(i => when(col(s"a$i") === col(s"b$i"), 1).otherwise(0))
+      .map(i => when(col(s"sa.mh$i") === col(s"sb.mh$i"), 1).otherwise(0))
       .reduce(_ + _)
-    cand.join(sigA, "doc_a").join(sigB, "doc_b")
+    cand.join(sig.as("sa"), col("doc_a") === col("sa.doc_id"))
+      .join(sig.as("sb"), col("doc_b") === col("sb.doc_id"))
       .withColumn("est_jaccard", agree.cast("double") / k)
       .where(col("est_jaccard") >= estThreshold)
       .select(col("doc_a"), col("doc_b"),
@@ -985,20 +985,20 @@ object Dedup {
 
   /** SimHash near-dup pairs: 4-band LSH over the signature (bits/4 bits
     * per band), then exact Hamming distance (bit_count of xor) ≤
-    * maxHamming. Signature frame persisted at `storageLevel` (NONE to
-    * disable). */
+    * maxHamming. The signature and banded frames are each
+    * [[materialize]]d once at `storageLevel` (NONE keeps them lazy), as
+    * in [[minHashLsh]]. */
   def simHashPairs(docs: DataFrame, maxHamming: Int = 6,
                    hasher: SeededHash = XxSeededHash, bits: Int = 64,
                    storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
                    maxBucket: Int = 1 << 12): DataFrame = {
-    val sig0 = simHash(docs, hasher, bits)
-    val sig = if (storageLevel == StorageLevel.NONE) sig0
-              else sig0.persist(storageLevel)
+    val sig = materialize(simHash(docs, hasher, bits), storageLevel)
     val bandWidth = bits / 4
     val bandMask = (1L << bandWidth) - 1
-    val banded = dropHotBuckets(bandRows(sig, Seq("doc_id", "simhash"),
-      (0 until 4).map(b => shiftrightunsigned(col("simhash"), b * bandWidth)
-        .bitwiseAND(bandMask))), maxBucket)
+    val buckets = (0 until 4).map(b =>
+      shiftrightunsigned(col("simhash"), b * bandWidth).bitwiseAND(bandMask))
+    val banded = materialize(dropHotBuckets(
+      bandRows(sig, Seq("doc_id", "simhash"), buckets), maxBucket), storageLevel)
     banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") &&
         col("a.bucket") === col("b.bucket") &&
@@ -1019,25 +1019,37 @@ object Dedup {
     * in a component is labeled with the smallest doc_id reachable from it,
     * and that smallest id is the component's keeper.
     *
-    * Algorithm: iterative min-label propagation with pointer jumping, as
-    * pure DataFrame self-joins. Each round does two things: (1)
-    * neighbor-min — every node takes the min of its own label and its
-    * neighbors' labels (one hop of propagation); (2) pointer jump —
-    * l(v) := l(l(v)), which halves the remaining label-chain depth, so a
-    * component of diameter D converges in O(log D) rounds, not D (a plain
-    * propagation loop would need diameter rounds — a long chain of
+    * Algorithm: iterative min-label propagation with hooking and pointer
+    * jumping, as pure DataFrame joins. Each round does three things: (1)
+    * neighbor-min — m(v) is the min label over v and its neighbors (one
+    * hop of propagation); (2) hook — h(x) is the min of m over x and
+    * every v with l(v) = x, so the nodes whose labels point at x move
+    * with it; (3) pointer jump through the previous round's labels —
+    * l(v) := min(h(v), l(h(v))). Label chains shrink geometrically, so a
+    * component of diameter D converges in about log D rounds, not D (a
+    * plain propagation loop would need diameter rounds — a long chain of
     * pairwise near-dups, e.g. drifting boilerplate, would blow any fixed
-    * bound). Labels only decrease and stay within the component (labels
-    * are node ids reachable via edges or label references), so the
-    * per-round sum(label) is monotone non-increasing and an unchanged sum
-    * is a convergence proof (no separate changed-row count needed).
-    * `maxIter` bounds the work regardless — 25 jumps cover diameters up to
-    * 2^25.
+    * bound): 13 rounds for a 3,000-node chain (DedupSpec), and in a model
+    * of the round 16–17 for one in random id order. The hook is what
+    * makes the order irrelevant: without it that chain took hundreds of
+    * rounds, far past `maxIter`, and a 300-node one 60–150. Labels only
+    * decrease and stay within the component (every label is the id of a
+    * node of the component), so the per-round sum(label) is monotone
+    * non-increasing and an unchanged sum is a convergence proof (no
+    * separate changed-row count needed). `maxIter` bounds the work
+    * regardless.
     *
-    * Scale shape: each round is one equi-join (edges ⋈ labels on src), one
-    * groupBy-min, and one labels self-join — narrow (long, long) shuffles
+    * Scale shape: the edge frame (both directions plus a self-loop at
+    * every endpoint) comes from one scan of `pairs` and one shuffle.
+    * Round 0 starts from l(v) = v, where the hook and the jump do
+    * nothing, so it is one aggregate over the edge frame with no
+    * shuffle. Each later round is one equi-join (edges ⋈ labels on src),
+    * two groupBy-mins (neighbor-min by node, hook by node and label
+    * target) and one equi-join against the previous labels that reuses
+    * the first join's labels exchange — narrow (long, long) shuffles
     * over edge count, never materializing components or all-pairs
-    * closures. Iteration state is `localCheckpoint`ed, not persisted:
+    * closures — and its convergence sum is one job: five jobs a round.
+    * Iteration state is `localCheckpoint`ed, not persisted:
     * checkpointing truncates the lineage to a LogicalRDD, so (a) the
     * (possibly very expensive — LSH!) pair source is computed exactly
     * once, (b) per-round plans stay constant-size instead of growing with
@@ -1048,13 +1060,13 @@ object Dedup {
     * `reliable = true` for reliable `checkpoint()` (localCheckpoint
     * blocks die with an executor, and losing one mid-iteration loses the
     * truncated lineage — there is nothing to recompute from); it writes
-    * each round to `spark.sparkContext.getCheckpointDir`, WHICH MUST BE
-    * SET (to cluster-durable storage — HDFS/object store) before the
-    * call. The default stays localCheckpoint: right for local mode and
-    * for callers preferring retry-the-stage over per-round remote
-    * writes. Both modes are value-identical (asserted in DedupSpec). The
-    * convergence check is a single scalar aggregate (DECIMAL sum — no ANSI
-    * overflow at any id range).
+    * the edge frame and each round to
+    * `spark.sparkContext.getCheckpointDir`, WHICH MUST BE SET (to
+    * cluster-durable storage — HDFS/object store) before the call. The
+    * default stays localCheckpoint: right for local mode and for callers
+    * preferring retry-the-stage over per-round remote writes. Both modes
+    * are value-identical (asserted in DedupSpec). The convergence sum is
+    * a BigInt — no overflow at any id range.
     *
     * Input: (doc_a, doc_b) candidate pairs. Output: one row per document
     * that appears in any pair — (doc_id, component, is_keeper). Documents
@@ -1062,81 +1074,106 @@ object Dedup {
     * definition). */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
                           reliable: Boolean = false): DataFrame = {
+    require(maxIter > 0, s"maxIter must be positive, got $maxIter")
     // reliable checkpoint() writes in a SECOND job that recomputes the
     // lineage unless it is cached — the (possibly expensive LSH) pair
     // source and every round twice — so persist around it. Old rounds'
     // files stay under the checkpoint dir for the app's lifetime unless
     // spark.cleaner.referenceTracking.cleanCheckpoints is set.
-    def ckpt(df: DataFrame): DataFrame =
-      if (!reliable) df.localCheckpoint()
-      else {
-        df.persist(StorageLevel.MEMORY_AND_DISK)
-        val out = df.checkpoint() // eager: caches, then writes from cache
-        df.unpersist(blocking = false)
-        out
-      }
-    val pr = ckpt(pairs
-      .select(col("doc_a").cast("long").as("src"),
-        col("doc_b").cast("long").as("dst")))
-    // ONE setup frame: both edge directions plus a self-loop at every
-    // endpoint, deduped. Self-loops make "min over self + neighbors" one
-    // join + groupBy per round (a per-round union whose children share
-    // attribute ids trips Union constraint rewriting). PERSISTED, not
-    // checkpointed, partitioned on its join key: under AQE a checkpoint
-    // reports UnknownPartitioning while InMemoryRelation keeps the
-    // HashPartitioning, so every round's edgesSelf ⋈ labels reuses this one
-    // exchange. It derives from the checkpointed `pr`, so releasing it
-    // cascades nothing; reliable mode keeps the durable checkpoint.
-    val both = pr
-      .union(pr.select(col("dst").as("src"), col("src").as("dst")))
-    val edgesSelfPlan = both
-      .union(both.select(col("src"), col("src").as("dst")))
+    def durable(df: DataFrame): DataFrame = {
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+      val out = df.checkpoint() // eager: caches, then writes from cache
+      df.unpersist(blocking = false)
+      out
+    }
+    // ONE setup frame from one scan of the pairs: both edge directions
+    // plus a self-loop at every endpoint from one generator (a union
+    // plans the whole pair lineage once per branch), deduped under the
+    // src shuffle, which already clusters every (src, dst). Self-loops
+    // make "min over self + neighbors" one join + groupBy per round.
+    // PERSISTED, not checkpointed, partitioned on its join key at a fixed
+    // width: under AQE a checkpoint reports UnknownPartitioning, and a
+    // width-less repartition lets AQE coalesce the cached plan, which then
+    // reports none either; this InMemoryRelation keeps the
+    // HashPartitioning, so every round's edgesSelf ⋈ labels reuses this
+    // one exchange. Reliable mode keeps the durable checkpoint.
+    val spark = pairs.sparkSession
+    val a = col("doc_a").cast("long")
+    val b = col("doc_b").cast("long")
+    val edgesSelfPlan = pairs
+      .select(inline(array(Seq((a, b), (b, a), (a, a), (b, b)).map {
+        case (from, to) => struct(from.as("src"), to.as("dst"))
+      }: _*)))
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("src"))
       .distinct()
-      .repartition(col("src"))
     val edgesSelf =
-      if (reliable) ckpt(edgesSelfPlan)
+      if (reliable) durable(edgesSelfPlan)
       else edgesSelfPlan.persist(StorageLevel.MEMORY_AND_DISK)
-    // count(), not isEmpty: take(1) fills only a prefix of the lazy
-    // persist. No edges: skip the loop (the sum check can't converge on
-    // an empty frame) and seed from the empty `pr`, so nothing derives
-    // from edgesSelf once it is released below. Otherwise exactly one
-    // self-loop row per node survives the distinct — the label seed.
-    val empty = edgesSelf.count() == 0
-    var labels = (if (empty) pr else edgesSelf.where(col("src") === col("dst")))
-      .select(col("src").as("node"), col("src").as("label"))
-    var prevSum: java.math.BigDecimal = null
-    var converged = empty
-    var i = 0
-    val sc = pairs.sparkSession.sparkContext
+    val sc = spark.sparkContext
     val prevDesc = sc.getLocalProperty("spark.job.description")
-    // AQE runs a round's shuffle stages when its lazy checkpoint is
-    // planned, so the description spans the whole round body
-    try while (!converged && i < maxIter) {
-      sc.setJobDescription(s"connected_components:round=$i")
-      val nbrMin = edgesSelf.join(labels, col("src") === col("node"))
-        .groupBy(col("dst"))
-        .agg(min("label").as("label"))
-        .select(col("dst").as("node"), col("label"))
-      // pointer jump: l(v) <- min(l(v), l(l(v))). Every label IS a node id
-      // present in nbrMin (labels start as node ids and min-merge), so the
-      // inner self-join is total.
-      val nextPlan = nbrMin.as("x")
-        .join(nbrMin.select(col("node").as("ln"), col("label").as("ll")),
-          col("x.label") === col("ln"))
-        .select(col("x.node").as("node"),
-          least(col("x.label"), col("ll")).as("label"))
-      // LAZY local checkpoint + the convergence aggregate as the
-      // materializing action: the sum job computes and persists every
-      // partition of the round, one action instead of two. Reliable mode
-      // keeps the eager checkpoint — there the durable write IS the point.
-      val next =
-        if (reliable) ckpt(nextPlan) else nextPlan.localCheckpoint(false)
-      val s = next.agg(sum(col("label").cast("decimal(38,0)")))
-        .head().getDecimal(0)
-      converged = prevSum != null && s.compareTo(prevSum) == 0
-      prevSum = s
-      labels = next
-      i += 1
+    var labels: DataFrame = null
+    var prevSum: Option[BigInt] = None
+    var converged = false
+    var i = 0
+    // the edge frame is filled, with the pair lineage it pulls in, under
+    // its own description, by an RDD count: one job, where a DataFrame
+    // count adds an aggregate shuffle and isEmpty fills only a prefix of
+    // the lazy persist. AQE runs a round's shuffle stages when its lazy
+    // checkpoint is planned, so a round's description spans the whole
+    // round body.
+    try {
+      sc.setJobDescription("connected_components:edges")
+      val empty = edgesSelf.rdd.count() == 0
+      while (!converged && i < maxIter) {
+        sc.setJobDescription(s"connected_components:round=$i")
+        val nextPlan = if (i == 0) {
+          // every label starts as its own node id, so the hook and the jump
+          // are identities and the neighbor-min is the min over a node's
+          // edges (its self-loop included): one aggregate that the src
+          // partitioning already clusters
+          edgesSelf.groupBy(col("src")).agg(min("dst").as("label"))
+            .select(col("src").as("node"), col("label"))
+        } else {
+          // neighbor-min m(v), and l(v) from v's self-loop row, in one
+          // aggregate. A shuffle join: broadcasting the edge frame would
+          // redo its broadcast every round and leave the labels exchange,
+          // which the jump below reuses, to a separate job.
+          val nbrMin = edgesSelf.join(labels.hint("merge"),
+              col("src") === col("node"))
+            .groupBy(col("dst"))
+            .agg(min("label").as("m"),
+              max(when(col("src") === col("dst"), col("label"))).as("lv"))
+          // hook: v and its label target l(v) both take m(v), so a node's
+          // label moves together with the labels that point at it
+          val hooked = nbrMin
+            .select(inline(array(
+              struct(col("dst").as("node"), col("m").as("h")),
+              struct(col("lv").as("node"), col("m").as("h")))))
+            .groupBy(col("node")).agg(min("h").as("h"))
+          // pointer jump through the previous labels: l(v) <- min(h(v),
+          // l(h(v))). Every label IS the id of a node in `labels` (labels
+          // start as node ids and min-merge), so the join is total.
+          hooked.as("x")
+            .join(labels.as("y"), col("x.h") === col("y.node"))
+            .select(col("x.node").as("node"),
+              least(col("x.h"), col("y.label")).as("label"))
+        }
+        // LAZY local checkpoint + the convergence sum as the materializing
+        // action: one job computes and persists every partition of the
+        // round and sums it (a reduce; a sum aggregate would add a
+        // partial-aggregate shuffle job). Reliable mode keeps the eager
+        // checkpoint — there the durable write IS the point.
+        val next =
+          if (reliable) durable(nextPlan) else nextPlan.localCheckpoint(false)
+        val s = next.select(col("label")).as(Encoders.scalaLong).rdd
+          .aggregate(BigInt(0))(_ + _, _ + _)
+        // no edges: round 0's empty labels are the answer
+        converged = empty || prevSum.contains(s)
+        prevSum = Some(s)
+        labels = next
+        i += 1
+      }
     } finally sc.setJobDescription(prevDesc)
     // the last round's checkpoint is materialized: nothing recomputes
     edgesSelf.unpersist(blocking = false)
@@ -1161,13 +1198,15 @@ object Dedup {
 
   /** LSH banding of a [[minHashSignatures]] frame: one (doc_id, band,
     * bucket) row per band, bucket = the concatenated signature rows of
-    * that band (exact equality, no re-hash collisions). */
-  private def bandSignatures(sig: DataFrame, k: Int, bands: Int): DataFrame = {
+    * that band (exact equality, no re-hash collisions), buckets over
+    * `maxBucket` dropped ([[dropHotBuckets]]). */
+  private[llm] def bandSignatures(sig: DataFrame, k: Int, bands: Int,
+                                  maxBucket: Int): DataFrame = {
     val rowsPerBand = k / bands
-    bandRows(sig, Seq("doc_id"), (0 until bands).map { b =>
+    dropHotBuckets(bandRows(sig, Seq("doc_id"), (0 until bands).map { b =>
       concat_ws(",", (b * rowsPerBand until (b + 1) * rowsPerBand)
         .map(i => col(s"mh$i").cast("string")): _*)
-    })
+    }), maxBucket)
   }
 
   /** (keep…, band, bucket) rows, bucket b = `buckets(b)`, from ONE inline
@@ -1210,11 +1249,10 @@ object Dedup {
                          hasher: SeededHash = XxSeededHash,
                          storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
                          maxBucket: Int = 1 << 12): DataFrame = {
-    val sigN0 = minHashSignatures(newDocs, n, k, hasher)
-    val sigN = if (storageLevel == StorageLevel.NONE) sigN0
-               else sigN0.persist(storageLevel)
-    val bN = dropHotBuckets(bandSignatures(sigN, k, bands), maxBucket)
-    val bC = dropHotBuckets(bandSignatures(corpusSigs, k, bands), maxBucket)
+    val sigN = materialize(minHashSignatures(newDocs, n, k, hasher),
+      storageLevel)
+    val bN = bandSignatures(sigN, k, bands, maxBucket)
+    val bC = bandSignatures(corpusSigs, k, bands, maxBucket)
     incrementalJoin(bN, bC, sigN, corpusSigs, k, estThreshold)
   }
 
@@ -1291,7 +1329,7 @@ object Dedup {
     // probe re-opens (guide §6: coalesce on write). repartition on the
     // bucket columns is the same HashPartitioning bucketBy uses, so each
     // task owns whole buckets and writes one file per bucket.
-    dropHotBuckets(bandSignatures(corpusSigs, k, bands), maxBucket)
+    bandSignatures(corpusSigs, k, bands, maxBucket)
       .repartition(numBuckets, col("band"), col("bucket"))
       .write.mode("overwrite")
       .bucketBy(numBuckets, "band", "bucket")
@@ -1360,13 +1398,17 @@ object Dedup {
                                 hasher: SeededHash = XxSeededHash,
                                 storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
                                 maxBucket: Int = 1 << 12): DataFrame = {
-    val sigN0 = minHashSignatures(newDocs, n, k, hasher)
-    val sigN = if (storageLevel == StorageLevel.NONE) sigN0
-               else sigN0.persist(storageLevel)
-    val bN = dropHotBuckets(bandSignatures(sigN, k, bands), maxBucket)
+    val sigN = materialize(minHashSignatures(newDocs, n, k, hasher),
+      storageLevel)
+    val bN = bandSignatures(sigN, k, bands, maxBucket)
     incrementalJoin(bN, spark.table(s"${name}_bands"), sigN,
       spark.table(s"${name}_sigs"), k, estThreshold)
   }
+
+  /** `df` computed once, by the contract stated in [[minHashLsh]]. */
+  private def materialize(df: DataFrame, level: StorageLevel): DataFrame =
+    if (level == StorageLevel.NONE) df
+    else df.localCheckpoint(eager = true, storageLevel = level)
 
   /** Skew guard for the LSH band self-joins: a bucket of size s generates
     * s·(s-1)/2 candidate pairs ON ONE REDUCER — a single degenerate

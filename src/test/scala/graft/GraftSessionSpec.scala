@@ -23,7 +23,8 @@ class GraftSessionSpec extends SparkSpec {
       "spark.sql.session.timeZone" -> "UTC"))
     assert(GraftSession.recommended == GraftSession.core ++ Map(
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
-      "spark.sql.streaming.stateStore.providerClass" -> rocksDb))
+      "spark.sql.streaming.stateStore.providerClass" -> rocksDb,
+      "spark.sql.codegen.cache.maxEntries" -> "512"))
     assert(GraftSession.local("8") -- GraftSession.core.keys == Map(
       "spark.master" -> "local[8]",
       "spark.sql.shuffle.partitions" -> "8",

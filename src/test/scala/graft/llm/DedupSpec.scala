@@ -775,10 +775,13 @@ class DedupSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.expressions.{CreateArray, Inline}
     import org.apache.spark.sql.catalyst.plans.logical.{Generate, Union}
     val docs = spark.read.parquet(s"$Sf0001/documents.parquet")
-    val plan = Dedup.minHashLsh(docs, bands = 4).queryExecution.optimizedPlan
+    // the banded frame as minHashLsh builds it, before it is materialized
+    val banded = Dedup.bandSignatures(Dedup.minHashSignatures(docs, 3, 16),
+      k = 16, bands = 4, maxBucket = 1 << 12)
+    val plan = banded.queryExecution.optimizedPlan
     assert(plan.collect { case u: Union => u }.isEmpty, s"Union in:\n$plan")
-    // the banded frame feeds the hot-bucket aggregate, the anti-join and
-    // both sides of the self-join: every use is the same generator
+    // the banding feeds both the hot-bucket aggregate and the anti-join:
+    // every use is the same generator
     val gens = plan.collect { case g: Generate => g.generator }
     assert(gens.nonEmpty && gens.map(_.sql).distinct.size == 1,
       s"banding Generates in:\n$plan")
@@ -786,6 +789,10 @@ class DedupSpec extends SparkSpec {
       case Inline(a: CreateArray) => assert(a.children.size == 4)
       case g => fail(s"unexpected generator $g")
     }
+    // minHashLsh materializes that frame once: its own plan bands nothing
+    val lsh = Dedup.minHashLsh(docs, bands = 4).queryExecution.optimizedPlan
+    assert(lsh.collect { case g: Generate => g }.isEmpty,
+      s"banding recomputed in:\n$lsh")
   }
 
   test("connected components release their cached edge frame; repeated " +
@@ -833,5 +840,152 @@ class DedupSpec extends SparkSpec {
       System.gc(); Thread.sleep(200)
     }
     assert(stored <= base, s"storage grew from $base to $stored bytes")
+  }
+
+  /** Connected components with the earlier round shape, the parity
+    * witness: a checkpointed pair frame, an edge frame unioned from it,
+    * and a pointer jump that self-joins each round's neighbor-min.
+    * Returns the (doc_id, component, is_keeper) rows and the rounds run. */
+  private def selfJoinComponents(pairs: DataFrame): (Set[(Long, Long, Boolean)], Int) = {
+    val pr = pairs.select(col("doc_a").cast("long").as("src"),
+      col("doc_b").cast("long").as("dst")).localCheckpoint()
+    val both = pr.union(pr.select(col("dst").as("src"), col("src").as("dst")))
+    val edgesSelf = both.union(both.select(col("src"), col("src").as("dst")))
+      .distinct().repartition(col("src")).persist()
+    val empty = edgesSelf.count() == 0
+    var labels = (if (empty) pr else edgesSelf.where(col("src") === col("dst")))
+      .select(col("src").as("node"), col("src").as("label"))
+    var prevSum: java.math.BigDecimal = null
+    var converged = empty
+    var i = 0
+    while (!converged && i < 25) {
+      val nbrMin = edgesSelf.join(labels, col("src") === col("node"))
+        .groupBy(col("dst")).agg(min("label").as("label"))
+        .select(col("dst").as("node"), col("label"))
+      val next = nbrMin.as("x")
+        .join(nbrMin.select(col("node").as("ln"), col("label").as("ll")),
+          col("x.label") === col("ln"))
+        .select(col("x.node").as("node"), least(col("x.label"), col("ll")).as("label"))
+        .localCheckpoint()
+      val s = next.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0)
+      converged = prevSum != null && s.compareTo(prevSum) == 0
+      prevSum = s
+      labels = next
+      i += 1
+    }
+    val out = labels.select(col("node"), col("label"), col("label") === col("node"))
+      .as[(Long, Long, Boolean)].collect().toSet
+    edgesSelf.unpersist()
+    (out, i)
+  }
+
+  /** Runs `body` and returns how many jobs each job description ran. */
+  private def jobsByDescription(body: => Unit): Map[String, Int] = {
+    val sc = spark.sparkContext
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(
+          "spark.job.description"))).foreach(descs.add)
+    }
+    org.apache.spark.sql.graft.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.sql.graft.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    descs.toArray(Array.empty[String]).groupBy(identity).map {
+      case (d, js) => d -> js.length
+    }
+  }
+
+  test("connected components == self-join round witness: chain, star, " +
+    "bridged cliques, duplicate and reversed pairs, empty, reliable") {
+    val chain = (0L until 2999L).map(i => (i, i + 1))
+    val star = (0L until 100L).filter(_ != 50L).map(i => (50L, i))
+    def clique(ids: Seq[Long]) =
+      for (x <- ids; y <- ids if x < y) yield (x, y)
+    val cliques = clique(20L until 30L) ++ clique(100L until 110L) ++
+      Seq((109L, 20L), (500L, 501L))
+    val dups = Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 2L), (2L, 3L),
+      (5L, 5L), (7L, 6L), (6L, 7L))
+    val dir = java.nio.file.Files.createTempDirectory("graft-cc-parity").toString
+    spark.sparkContext.setCheckpointDir(dir)
+    val cases = Seq(
+      ("chain", chain, false),
+      ("star", star, false), ("bridged cliques", cliques, false),
+      ("duplicate and reversed", dups, false),
+      ("empty", Seq.empty[(Long, Long)], false),
+      ("bridged cliques, reliable", cliques, true))
+    cases.foreach { case (name, edges, reliable) =>
+      val pairs = edges.toDF("doc_a", "doc_b")
+      val (want, oldRounds) = selfJoinComponents(pairs)
+      var got = Set.empty[(Long, Long, Boolean)]
+      val jobs = jobsByDescription {
+        got = Dedup.connectedComponents(pairs, reliable = reliable)
+          .select("doc_id", "component", "is_keeper")
+          .as[(Long, Long, Boolean)].collect().toSet
+      }
+      val rounds = jobs.keys.count(_.startsWith("connected_components:round="))
+      assert(got == want, name)
+      assert(rounds <= oldRounds + 1, s"$name: $rounds rounds, witness $oldRounds")
+    }
+  }
+
+  test("connected components: chains and trees in random id order converge " +
+    "in logarithmic rounds") {
+    // the witness round needs 60-150 rounds on such a chain, so it stops
+    // unconverged at maxIter; the hook keeps the jump logarithmic
+    val rnd = new scala.util.Random(7)
+    val perm = rnd.shuffle((0L until 300L).toVector)
+    val shuffledChain = perm.zip(perm.tail)
+    val tree = (1 until 300).map(i => (perm(i), perm(rnd.nextInt(i))))
+    Seq("shuffled chain" -> shuffledChain, "random tree" -> tree).foreach {
+      case (name, edges) =>
+        var got = Map.empty[Long, Long]
+        val jobs = jobsByDescription {
+          got = Dedup.connectedComponents(edges.toDF("doc_a", "doc_b"))
+            .select("doc_id", "component").as[(Long, Long)].collect().toMap
+        }
+        assert(got.size == 300 && got.values.forall(_ == 0L), name)
+        val rounds = jobs.keys.count(_.startsWith("connected_components:round="))
+        assert(rounds <= 16, s"$name: $rounds rounds")
+    }
+  }
+
+  test("LSH operators and connected components leave no cache entry; " +
+    "repeated calls leave storage flat; a round runs at most 5 jobs") {
+    val sc = spark.sparkContext
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def stored = sc.getRDDStorageInfo.map(r => r.memSize + r.diskSize).sum
+    val docs = spark.read.parquet(s"$Sf0001/documents.parquet")
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
+    val calls = Seq[(String, () => Long)](
+      "minHashLsh" -> (() => Dedup.minHashLsh(docs).count()),
+      "simHashPairs" -> (() => Dedup.simHashPairs(docs).count()),
+      "connectedComponents" -> (() => Dedup.connectedComponents(pairs).count()))
+    spark.catalog.clearCache()
+    calls.foreach { case (name, call) =>
+      assert(call() > 0, name)
+      assert(cache.isEmpty, s"$name left a cache entry")
+    }
+    System.gc()
+    val base = stored
+    calls.foreach { case (name, call) =>
+      (1 to 10).foreach(_ => call())
+      assert(cache.isEmpty, name)
+    }
+    // the local checkpoints are released once unreachable
+    val gcDeadline = System.nanoTime() + 20000000000L
+    while (stored > base && System.nanoTime() < gcDeadline) {
+      System.gc(); Thread.sleep(200)
+    }
+    assert(stored <= base, s"storage grew from $base to $stored bytes")
+
+    val jobs = jobsByDescription(Dedup.connectedComponents(pairs).count())
+    val rounds = jobs.filter(_._1.startsWith("connected_components:round="))
+    assert(rounds.nonEmpty && rounds.values.forall(_ <= 5), s"jobs per round $rounds")
   }
 }
