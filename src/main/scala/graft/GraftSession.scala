@@ -31,6 +31,12 @@ import graft.plans.{AnnJoinRewrite, TopKPerKeyStrategy, TopKRewrite}
   *    per query (`StreamingQueries.withRocksDb`).
   *  - **Generated-class cache** (production only): room for a whole
   *    pipeline's generated classes, so a repeated run compiles none.
+  *  - **Local filesystem**: `file:` paths go through
+  *    [[graft.io.NioLocalFileSystem]], which sets each new file's and
+  *    directory's mode in-process instead of forking `chmod`; same files,
+  *    bytes and modes. Hadoop caches one `FileSystem` per scheme for the
+  *    whole JVM, so like the class cache it applies when the session is
+  *    the JVM's first.
   *  - **Registration**: the native expressions (`poly_hash`, `cosine_sim`,
   *    `map_count`, `md5_prefix60`, `misra_gries`, ...), the TopK rewrite +
   *    physical operator, and the (conf-gated, default-off) ANN bucket-join
@@ -58,7 +64,10 @@ object GraftSession {
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
     "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
     "spark.sql.sources.v2.bucketing.enabled" -> "true",
-    "spark.sql.session.timeZone" -> "UTC")
+    "spark.sql.session.timeZone" -> "UTC",
+    // one chmod(2) per created file and directory instead of a chmod
+    // process (Spark ships no libhadoop)
+    "spark.hadoop.fs.file.impl" -> classOf[graft.io.NioLocalFileSystem].getName)
 
   /** The production recipe: [[core]] plus skew-join splitting, the
     * RocksDB state store and a larger generated-class cache. */

@@ -1,6 +1,8 @@
 package graft.io
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Date-partitioned parquet sink — reference K1/K2 (`save_df`,
   * /root/reference/cliqz_etl/testpilot_data.py:72-82: overwrite +
@@ -11,6 +13,12 @@ import org.apache.spark.sql.DataFrame
   * (the behavior profile_daily.py:28,38 silently depends on). At 100 TB the
   * partition column (a date) bounds rewrite scope via dynamic partition
   * overwrite instead of whole-table overwrite.
+  *
+  * File count: `numFiles = Some(n)` gives n files. An input that plans no
+  * exchange and runs at most n partitions (a single-split CSV) is coalesced,
+  * so the write is one job in the scan's own stage; anything else is
+  * repartitioned, so a large input keeps its upstream parallelism.
+  * Partition columns without `numFiles` give one file per partition value.
   */
 object PartitionedWriter {
   def write(
@@ -29,6 +37,7 @@ object PartitionedWriter {
     // partitioned sink on one task. Each partition value still hashes to
     // exactly one task, so every partition directory still gets one file.
     val sized = numFiles match {
+      case Some(n) if narrow(df, n) => df.coalesce(n)
       case Some(n) => df.repartition(n)
       case None if partitionCols.nonEmpty =>
         df.repartition(df.sparkSession.sparkContext.defaultParallelism,
@@ -42,5 +51,19 @@ object PartitionedWriter {
       if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
       else writer
     parted.parquet(path)
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** `df` plans no exchange and runs at most `n` partitions, so
+    * `coalesce(n)` saves a shuffle job without narrowing any stage. The
+    * partition probe runs only on exchange-free plans, where it starts no
+    * job. At n = 1 both write the same rows in the same order: a
+    * one-partition repartition is a single-partition shuffle, which does
+    * not sort. */
+  private def narrow(df: DataFrame, n: Int): Boolean = {
+    val qe = df.queryExecution
+    Plans.find(qe.executedPlan)(_.isInstanceOf[Exchange]).isEmpty &&
+      qe.toRdd.getNumPartitions <= n
   }
 }

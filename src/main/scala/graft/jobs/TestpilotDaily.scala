@@ -85,10 +85,10 @@ object TestpilotDaily {
         clean = c => round(c.cast("double") * 100),
         castTo = Some(LongType))))
 
-  /** Run the daily job: project the three frames (ONE shared telemetry
-    * scan feeds both doc-type configs) and, when `save`, write all three
-    * sinks. Returns (testpilot, testpilottest, search) like the
-    * reference's `main`. */
+  /** Run the daily job: project the three frames (both doc-type configs
+    * project the one telemetry frame, and each sink write scans it once)
+    * and, when `save`, write all three sinks. Returns (testpilot,
+    * testpilottest, search) like the reference's `main`. */
   def run(spark: SparkSession, telemetry: DataFrame, searchCsv: DataFrame,
           sinks: Sinks, save: Boolean = true)
       : (DataFrame, DataFrame, DataFrame) = {

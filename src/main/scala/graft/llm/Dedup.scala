@@ -1037,7 +1037,9 @@ object Dedup {
     * node of the component), so the per-round sum(label) is monotone
     * non-increasing and an unchanged sum is a convergence proof (no
     * separate changed-row count needed). `maxIter` bounds the work
-    * regardless.
+    * regardless: a call that runs out of rounds before two equal sums
+    * throws, naming `maxIter` and its last two sums, rather than return
+    * labels that are not yet components.
     *
     * Scale shape: the edge frame (both directions plus a self-loop at
     * every endpoint) comes from one scan of `pairs` and one shuffle.
@@ -1113,7 +1115,7 @@ object Dedup {
     val sc = spark.sparkContext
     val prevDesc = sc.getLocalProperty("spark.job.description")
     var labels: DataFrame = null
-    var prevSum: Option[BigInt] = None
+    var sums = List.empty[BigInt] // newest first
     var converged = false
     var i = 0
     // the edge frame is filled, with the pair lineage it pulls in, under
@@ -1169,14 +1171,17 @@ object Dedup {
         val s = next.select(col("label")).as(Encoders.scalaLong).rdd
           .aggregate(BigInt(0))(_ + _, _ + _)
         // no edges: round 0's empty labels are the answer
-        converged = empty || prevSum.contains(s)
-        prevSum = Some(s)
+        converged = empty || sums.headOption.contains(s)
+        sums = s :: sums
         labels = next
         i += 1
       }
     } finally sc.setJobDescription(prevDesc)
     // the last round's checkpoint is materialized: nothing recomputes
     edgesSelf.unpersist(blocking = false)
+    if (!converged) throw new IllegalStateException(
+      s"connected components did not converge in maxIter = $maxIter " +
+        s"rounds: the last label sums were ${sums.take(2).reverse.mkString(", ")}")
     labels.select(col("node").as("doc_id"), col("label").as("component"),
       (col("label") === col("node")).as("is_keeper"))
   }

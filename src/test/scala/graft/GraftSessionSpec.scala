@@ -20,7 +20,8 @@ class GraftSessionSpec extends SparkSpec {
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.session.timeZone" -> "UTC"))
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.hadoop.fs.file.impl" -> "graft.io.NioLocalFileSystem"))
     assert(GraftSession.recommended == GraftSession.core ++ Map(
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.streaming.stateStore.providerClass" -> rocksDb,
@@ -42,6 +43,7 @@ class GraftSessionSpec extends SparkSpec {
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.session.timeZone" -> "UTC",
+      "spark.hadoop.fs.file.impl" -> "graft.io.NioLocalFileSystem",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.ui.enabled" -> "false"))
   }

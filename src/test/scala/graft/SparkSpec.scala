@@ -11,6 +11,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  private val FileImpl = "spark.hadoop.fs.file.impl"
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -20,6 +22,8 @@ object SparkSpec {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      // the suite's own file writes set modes without a chmod process
+      .config(FileImpl, GraftSession.core(FileImpl))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -1,12 +1,18 @@
 package graft.io
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListenerBusDrain
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkSpec
 
 /** The small source/sink operators (SURVEY.md §2.1 S4/S6/K3, §2.5 L1/L2)
   * that don't warrant driver-gate queries. */
-class IoSpec extends SparkSpec {
+class IoSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("S4/L1: single-value config load via textFile head") {
@@ -48,13 +54,38 @@ class IoSpec extends SparkSpec {
     assert(out.exceptAll(src).isEmpty && src.exceptAll(out).isEmpty)
   }
 
+  /** The physical plan of each query `body` runs, as its listener saw it. */
+  private def plansOf(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
   test("K1/K2: numFiles controls output file count") {
-    val dir = Files.createTempDirectory("graft-k2").toString
-    PartitionedWriter.write(
-      Tables.table(spark, Sf0001, "nation"), dir, numFiles = Some(1))
-    val files = new java.io.File(dir).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(files == 1)
+    // a one-split scan is coalesced (no exchange, one job); an 8-partition
+    // input keeps its shuffle, so its upstream stage stays 8 tasks wide
+    Seq(
+      ("nation", Tables.table(spark, Sf0001, "nation"), false),
+      ("range/8", spark.range(0, 3000, 1, 8).toDF(), true)
+    ).foreach { case (name, df, shuffles) =>
+      val dir = Files.createTempDirectory("graft-k2").toString
+      val plans = plansOf(PartitionedWriter.write(df, dir, numFiles = Some(1)))
+      val exchanges = plans.flatMap(collect(_) { case e: Exchange => e })
+      assert(plans.nonEmpty && exchanges.nonEmpty == shuffles, s"$name: $plans")
+      val files = new java.io.File(dir).listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      assert(files == 1, name)
+      assert(spark.read.parquet(dir).count() == df.count(), name)
+    }
   }
 
   test("K1: partitioned write leaves one file per partition value") {

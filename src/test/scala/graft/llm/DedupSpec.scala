@@ -952,6 +952,13 @@ class DedupSpec extends SparkSpec {
         val rounds = jobs.keys.count(_.startsWith("connected_components:round="))
         assert(rounds <= 16, s"$name: $rounds rounds")
     }
+    // too few rounds for a proof: an error, not partial components
+    val err = intercept[IllegalStateException] {
+      Dedup.connectedComponents(shuffledChain.toDF("doc_a", "doc_b"), maxIter = 2)
+    }
+    assert(err.getMessage.contains("maxIter = 2") &&
+      """sums were \d+, \d+$""".r.findFirstIn(err.getMessage).nonEmpty,
+      err.getMessage)
   }
 
   test("LSH operators and connected components leave no cache entry; " +
