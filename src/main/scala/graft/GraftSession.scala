@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -40,8 +40,8 @@ import graft.plans.{AnnJoinRewrite, TopKPerKeyStrategy, TopKRewrite}
   *  - **Registration**: the native expressions (`poly_hash`, `cosine_sim`,
   *    `map_count`, `md5_prefix60`, `misra_gries`, ...), the TopK rewrite +
   *    physical operator, and the (conf-gated, default-off) ANN bucket-join
-  *    rewrite — through [[setup]] on a built session or [[GraftExtensions]]
-  *    at build time, from the same lists.
+  *    rewrite — through [[setup]] on a built session, the one
+  *    registration path (the test session uses it too).
   *
   * Shuffle-partition count is deliberately NOT in [[recommended]]: it is a
   * cluster-size decision (rule of thumb: 2-3× total executor cores; with
@@ -147,15 +147,4 @@ object GraftSession {
   /** Build (or reuse) the [[local]] harness session, then [[setup]]. */
   def localSession(cpus: String): SparkSession =
     setup(SparkSession.builder().config(local(cpus)).getOrCreate())
-}
-
-/** Builder-time registration for `spark.sql.extensions` (cluster deploys,
-  * the test session): injects the same lists [[GraftSession.setup]]
-  * registers. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftSession.functions.foreach(ext.injectFunction)
-    GraftSession.rules.foreach(r => ext.injectOptimizerRule(_ => r))
-    GraftSession.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
-  }
 }

@@ -1051,24 +1051,16 @@ object Dedup {
     * the first join's labels exchange — narrow (long, long) shuffles
     * over edge count, never materializing components or all-pairs
     * closures — and its convergence sum is one job: five jobs a round.
-    * Iteration state is `localCheckpoint`ed, not persisted:
-    * checkpointing truncates the lineage to a LogicalRDD, so (a) the
-    * (possibly very expensive — LSH!) pair source is computed exactly
-    * once, (b) per-round plans stay constant-size instead of growing with
-    * the iteration count, and (c) there is no cache-invalidation cascade
-    * from releasing a superseded round (Dataset.unpersist recompiles and
-    * lazily recomputes dependent cache entries — measured as every round
-    * re-running the whole LSH pipeline). On a real cluster pass
-    * `reliable = true` for reliable `checkpoint()` (localCheckpoint
-    * blocks die with an executor, and losing one mid-iteration loses the
-    * truncated lineage — there is nothing to recompute from); it writes
-    * the edge frame and each round to
+    * The edge frame is a persisted static and each round's labels a
+    * lazy local checkpoint filled by the convergence sum ([[Rounds]] has
+    * the why). On a real cluster pass `reliable = true` for a reliable
+    * `checkpoint()` of the edge frame and of each round, written to
     * `spark.sparkContext.getCheckpointDir`, WHICH MUST BE SET (to
-    * cluster-durable storage — HDFS/object store) before the call. The
-    * default stays localCheckpoint: right for local mode and for callers
-    * preferring retry-the-stage over per-round remote writes. Both modes
-    * are value-identical (asserted in DedupSpec). The convergence sum is
-    * a BigInt — no overflow at any id range.
+    * cluster-durable storage) before the call. The default stays
+    * localCheckpoint: right for local mode and for callers preferring
+    * retry-the-stage over per-round remote writes. Both modes are
+    * value-identical (asserted in DedupSpec). The convergence sum is a
+    * BigInt — no overflow at any id range.
     *
     * Input: (doc_a, doc_b) candidate pairs. Output: one row per document
     * that appears in any pair — (doc_id, component, is_keeper). Documents
@@ -1077,58 +1069,36 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
                           reliable: Boolean = false): DataFrame = {
     require(maxIter > 0, s"maxIter must be positive, got $maxIter")
-    // reliable checkpoint() writes in a SECOND job that recomputes the
-    // lineage unless it is cached — the (possibly expensive LSH) pair
-    // source and every round twice — so persist around it. Old rounds'
-    // files stay under the checkpoint dir for the app's lifetime unless
-    // spark.cleaner.referenceTracking.cleanCheckpoints is set.
-    def durable(df: DataFrame): DataFrame = {
-      df.persist(StorageLevel.MEMORY_AND_DISK)
-      val out = df.checkpoint() // eager: caches, then writes from cache
-      df.unpersist(blocking = false)
-      out
-    }
-    // ONE setup frame from one scan of the pairs: both edge directions
-    // plus a self-loop at every endpoint from one generator (a union
-    // plans the whole pair lineage once per branch), deduped under the
-    // src shuffle, which already clusters every (src, dst). Self-loops
-    // make "min over self + neighbors" one join + groupBy per round.
-    // PERSISTED, not checkpointed, partitioned on its join key at a fixed
-    // width: under AQE a checkpoint reports UnknownPartitioning, and a
-    // width-less repartition lets AQE coalesce the cached plan, which then
-    // reports none either; this InMemoryRelation keeps the
-    // HashPartitioning, so every round's edgesSelf ⋈ labels reuses this
-    // one exchange. Reliable mode keeps the durable checkpoint.
     val spark = pairs.sparkSession
-    val a = col("doc_a").cast("long")
-    val b = col("doc_b").cast("long")
-    val edgesSelfPlan = pairs
-      .select(inline(array(Seq((a, b), (b, a), (a, a), (b, b)).map {
-        case (from, to) => struct(from.as("src"), to.as("dst"))
-      }: _*)))
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("src"))
-      .distinct()
-    val edgesSelf =
-      if (reliable) durable(edgesSelfPlan)
-      else edgesSelfPlan.persist(StorageLevel.MEMORY_AND_DISK)
-    val sc = spark.sparkContext
-    val prevDesc = sc.getLocalProperty("spark.job.description")
-    var labels: DataFrame = null
-    var sums = List.empty[BigInt] // newest first
-    var converged = false
-    var i = 0
-    // the edge frame is filled, with the pair lineage it pulls in, under
-    // its own description, by an RDD count: one job, where a DataFrame
-    // count adds an aggregate shuffle and isEmpty fills only a prefix of
-    // the lazy persist. AQE runs a round's shuffle stages when its lazy
-    // checkpoint is planned, so a round's description spans the whole
-    // round body.
-    try {
-      sc.setJobDescription("connected_components:edges")
-      val empty = edgesSelf.rdd.count() == 0
-      while (!converged && i < maxIter) {
-        sc.setJobDescription(s"connected_components:round=$i")
+    Rounds("connected_components", spark, reliable = reliable) { r =>
+      // ONE setup frame from one scan of the pairs: both edge directions
+      // plus a self-loop at every endpoint from one generator (a union
+      // plans the whole pair lineage once per branch), deduped under the
+      // src shuffle, which already clusters every (src, dst). Self-loops
+      // make "min over self + neighbors" one join + groupBy per round.
+      // Partitioned on its join key at a fixed width, so every round's
+      // edgesSelf ⋈ labels reuses this one exchange.
+      val a = col("doc_a").cast("long")
+      val b = col("doc_b").cast("long")
+      val edgesSelf = r.persist(pairs
+        .select(inline(array(Seq((a, b), (b, a), (a, a), (b, b)).map {
+          case (from, to) => struct(from.as("src"), to.as("dst"))
+        }: _*)))
+        .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+          col("src"))
+        .distinct())
+      var labels: DataFrame = null
+      var sums = List.empty[BigInt] // newest first
+      var converged = false
+      var i = 0
+      // the edge frame is filled, with the pair lineage it pulls in, under
+      // its own description, by an RDD count: one job, where a DataFrame
+      // count adds an aggregate shuffle and isEmpty fills only a prefix of
+      // the lazy persist. AQE runs a round's shuffle stages when its lazy
+      // checkpoint is planned, so a round's description spans the whole
+      // round body.
+      val empty = r.phase("edges")(edgesSelf.rdd.count() == 0)
+      while (!converged && i < maxIter) r.round(i) {
         val nextPlan = if (i == 0) {
           // every label starts as its own node id, so the hook and the jump
           // are identities and the neighbor-min is the min over a node's
@@ -1166,8 +1136,7 @@ object Dedup {
         // round and sums it (a reduce; a sum aggregate would add a
         // partial-aggregate shuffle job). Reliable mode keeps the eager
         // checkpoint — there the durable write IS the point.
-        val next =
-          if (reliable) durable(nextPlan) else nextPlan.localCheckpoint(false)
+        val next = r.checkpoint(nextPlan, eager = false)
         val s = next.select(col("label")).as(Encoders.scalaLong).rdd
           .aggregate(BigInt(0))(_ + _, _ + _)
         // no edges: round 0's empty labels are the answer
@@ -1176,14 +1145,13 @@ object Dedup {
         labels = next
         i += 1
       }
-    } finally sc.setJobDescription(prevDesc)
-    // the last round's checkpoint is materialized: nothing recomputes
-    edgesSelf.unpersist(blocking = false)
-    if (!converged) throw new IllegalStateException(
-      s"connected components did not converge in maxIter = $maxIter " +
-        s"rounds: the last label sums were ${sums.take(2).reverse.mkString(", ")}")
-    labels.select(col("node").as("doc_id"), col("label").as("component"),
-      (col("label") === col("node")).as("is_keeper"))
+      if (!converged) throw new IllegalStateException(
+        s"connected components did not converge in maxIter = $maxIter " +
+          s"rounds: the last label sums were ${sums.take(2).reverse.mkString(", ")}")
+      // the last round's checkpoint is materialized: nothing recomputes
+      labels.select(col("node").as("doc_id"), col("label").as("component"),
+        (col("label") === col("node")).as("is_keeper"))
+    }
   }
 
   /** End of the near-dup pipeline: keep only cluster keepers. `clusters`

@@ -663,66 +663,13 @@ object Similarity {
         (col("rk") > ceil(col("csz") * pruneFrac)).as("kept"))
   }
 
+  /** Fixed-point k-means over the whole `corpus` (vec_id, embedding):
+    * [[kmeansTrainKeyed]]'s rounds with no subspace key. Returns
+    * (assign (vec_id, cid), cent (cid, d, m)). */
   def kmeansTrain(corpus: DataFrame, k: Int = 8, iters: Int = 2,
                   hasher: SeededHash = XxSeededHash)
-      : (DataFrame, DataFrame) = {
-    // ONE corpus shuffle for the whole trainer: hash-partition on vec_id
-    // BEFORE the explode (array rows are narrower than exploded rows) and
-    // PERSIST with that partitioning. persist (not localCheckpoint) is
-    // deliberate: under AQE a checkpointed Dataset records
-    // UnknownPartitioning (AdaptiveSparkPlanExec exposes no output
-    // partitioning), while InMemoryRelation keeps the cached plan's —
-    // so every per-round operator keyed by vec_id or a superset (the
-    // dot-product groupBy(vec_id, cid) after the broadcast centroid
-    // join, the nx equi-join, the argmax topK, the centroid-recompute
-    // join) reuses this single exchange, where the former layout
-    // re-shuffled the exploded frame (and the k-way dot frame) once per
-    // EM round. The static frames never re-enter their own lineage, so
-    // the checkpointing-vs-caching loop concern (see the round state
-    // below) does not apply to them.
-    val ex = corpus
-      .repartition(col("vec_id"))
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "x")))
-      .select(col("vec_id"), col("d"),
-        round(col("x").cast("double") * 1000).cast("long").as("xi"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // derived from ex's cached blocks without an exchange — co-partitioned
-    // with ex by construction, so the per-round join back is shuffle-free
-    val nx = ex.groupBy("vec_id")
-      .agg(sum(col("xi") * col("xi")).as("nx"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val seeds = corpus
-      .select(col("vec_id").as("cid"))
-      .orderBy(hasher.hash(col("cid"), 5).asc, col("cid").asc)
-      .limit(k)
-    // a seed's initial "cluster" is itself: centroid sums = its components
-    var cent = ex.join(seeds, col("vec_id") === col("cid"))
-      .select(col("cid"), col("d"), col("xi").as("m"))
-      .localCheckpoint()
-    require(iters >= 1, "kmeansAssign needs at least one round")
-    var assign: DataFrame = null
-    val wA = Window.partitionBy(col("vec_id"))
-      .orderBy(col("sim").desc, col("cid"))
-    for (i <- 0 until iters) {
-      val nm = cent.groupBy("cid").agg(sum(col("m") * col("m")).as("nm"))
-      assign = ex.join(broadcast(cent), "d")
-        .groupBy("vec_id", "cid").agg(sum(col("xi") * col("m")).as("dot"))
-        .join(broadcast(nm), "cid")
-        .join(nx, "vec_id")
-        .withColumn("sim", round(col("dot").cast("double") /
-          (sqrt(col("nx").cast("double")) * sqrt(col("nm").cast("double"))), 4))
-        .withColumn("rn", row_number().over(wA))
-        .where(col("rn") === 1)
-        .select(col("vec_id"), col("cid"))
-        .localCheckpoint()
-      if (i < iters - 1)
-        cent = ex.join(assign, "vec_id")
-          .groupBy("cid", "d").agg(sum(col("xi")).as("m"))
-          .localCheckpoint()
-    }
-    // cent is the frame the LAST assignment round ranked against
-    (assign, cent)
-  }
+      : (DataFrame, DataFrame) =
+    kmeansRounds(corpus, Nil, k, iters, hasher)
 
   /** Cluster-separation audit over [[kmeansTrain]]'s result — the
     * clustering-quality counterpart of the q131 ANN recall report:
@@ -846,50 +793,71 @@ object Similarity {
     * (assign (s, vec_id, cid), cent (s, cid, d, m)). */
   def kmeansTrainKeyed(sub: DataFrame, k: Int = 8, iters: Int = 2,
                        hasher: SeededHash = XxSeededHash)
+      : (DataFrame, DataFrame) =
+    kmeansRounds(sub, Seq("s"), k, iters, hasher)
+
+  /** The k-means rounds of [[kmeansTrain]] (`keys` empty) and
+    * [[kmeansTrainKeyed]] (`keys` = the subspace column): every
+    * aggregation, window and join is keyed by `keys` plus its own
+    * columns. */
+  private def kmeansRounds(vecs: DataFrame, keys: Seq[String], k: Int,
+                           iters: Int, hasher: SeededHash)
       : (DataFrame, DataFrame) = {
-    // same one-shuffle persisted layout as [[kmeansTrain]], keyed by
-    // (s, vec_id): every round's aggregation/join/window clusters on a
-    // superset of these keys, so the rounds reuse this single exchange
-    val ex = sub
-      .repartition(col("s"), col("vec_id"))
-      .select(col("s"), col("vec_id"), posexplode(col("embedding")).as(Seq("d", "x")))
-      .select(col("s"), col("vec_id"), col("d"),
-        round(col("x").cast("double") * 1000).cast("long").as("xi"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nx = ex.groupBy("s", "vec_id")
-      .agg(sum(col("xi") * col("xi")).as("nx"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val wSeed = Window.partitionBy(col("s"))
-      .orderBy(hasher.hash(col("cid"), 5).asc, col("cid").asc)
-    val seeds = sub.select(col("s"), col("vec_id").as("cid"))
-      .withColumn("srn", row_number().over(wSeed)).where(col("srn") <= k)
-      .select("s", "cid")
-    var cent = ex
-      .join(seeds.withColumn("vec_id", col("cid")), Seq("s", "vec_id"))
-      .select(col("s"), col("cid"), col("d"), col("xi").as("m"))
-      .localCheckpoint()
-    require(iters >= 1, "kmeansTrainKeyed needs at least one round")
-    var assign: DataFrame = null
-    val wA = Window.partitionBy(col("s"), col("vec_id"))
-      .orderBy(col("sim").desc, col("cid"))
-    for (i <- 0 until iters) {
-      val nm = cent.groupBy("s", "cid").agg(sum(col("m") * col("m")).as("nm"))
-      assign = ex.join(broadcast(cent), Seq("s", "d"))
-        .groupBy("s", "vec_id", "cid").agg(sum(col("xi") * col("m")).as("dot"))
-        .join(broadcast(nm), Seq("s", "cid"))
-        .join(nx, Seq("s", "vec_id"))
-        .withColumn("sim", round(col("dot").cast("double") /
-          (sqrt(col("nx").cast("double")) * sqrt(col("nm").cast("double"))), 4))
-        .withColumn("rn", row_number().over(wA))
-        .where(col("rn") === 1)
-        .select(col("s"), col("vec_id"), col("cid"))
-        .localCheckpoint()
-      if (i < iters - 1)
-        cent = ex.join(assign, Seq("s", "vec_id"))
-          .groupBy("s", "cid", "d").agg(sum(col("xi")).as("m"))
-          .localCheckpoint()
+    require(iters >= 1, "k-means needs at least one round")
+    def by(cs: String*): Seq[Column] = (keys ++ cs).map(col)
+    def on(cs: String*): Seq[String] = keys ++ cs
+    Rounds("kmeans", vecs.sparkSession) { r =>
+      // ONE corpus shuffle for the whole trainer: hash-partition on
+      // (keys, vec_id) BEFORE the explode (array rows are narrower than
+      // exploded rows) and persist with that partitioning, so every
+      // per-round operator keyed by (keys, vec_id) or a superset (the
+      // dot-product groupBy after the broadcast centroid join, the nx
+      // equi-join, the argmax window, the centroid-recompute join) reuses
+      // this single exchange
+      val ex = r.persist(vecs
+        .repartition(by("vec_id"): _*)
+        .select(by("vec_id") :+ posexplode(col("embedding")).as(Seq("d", "x")): _*)
+        .select(by("vec_id", "d") :+
+          round(col("x").cast("double") * 1000).cast("long").as("xi"): _*))
+      // derived from ex's cached blocks without an exchange — co-partitioned
+      // with ex by construction, so the per-round join back is shuffle-free
+      val nx = r.persist(ex.groupBy(by("vec_id"): _*)
+        .agg(sum(col("xi") * col("xi")).as("nx")))
+      // the k seeds per key, in hash order; without keys a global ordered
+      // limit, since a window over one constant key adds an exchange and
+      // a job per call
+      val seedOrder = Seq(hasher.hash(col("cid"), 5).asc, col("cid").asc)
+      val ids = vecs.select(by() :+ col("vec_id").as("cid"): _*)
+      val seeds =
+        if (keys.isEmpty) ids.orderBy(seedOrder: _*).limit(k)
+        else ids.withColumn("srn", row_number().over(
+            Window.partitionBy(by(): _*).orderBy(seedOrder: _*)))
+          .where(col("srn") <= k).select(by("cid"): _*)
+      // a seed's initial "cluster" is itself: centroid sums = its components
+      var cent = r.checkpoint(ex
+        .join(seeds.withColumn("vec_id", col("cid")), on("vec_id"))
+        .select(by("cid", "d") :+ col("xi").as("m"): _*))
+      var assign: DataFrame = null
+      val wA = Window.partitionBy(by("vec_id"): _*)
+        .orderBy(col("sim").desc, col("cid"))
+      for (i <- 1 to iters) r.round(i) {
+        val nm = cent.groupBy(by("cid"): _*).agg(sum(col("m") * col("m")).as("nm"))
+        assign = r.checkpoint(ex.join(broadcast(cent), on("d"))
+          .groupBy(by("vec_id", "cid"): _*).agg(sum(col("xi") * col("m")).as("dot"))
+          .join(broadcast(nm), on("cid"))
+          .join(nx, on("vec_id"))
+          .withColumn("sim", round(col("dot").cast("double") /
+            (sqrt(col("nx").cast("double")) * sqrt(col("nm").cast("double"))), 4))
+          .withColumn("rn", row_number().over(wA))
+          .where(col("rn") === 1)
+          .select(by("vec_id", "cid"): _*))
+        if (i < iters)
+          cent = r.checkpoint(ex.join(assign, on("vec_id"))
+            .groupBy(by("cid", "d"): _*).agg(sum(col("xi")).as("m")))
+      }
+      // cent is the frame the LAST assignment round ranked against
+      (assign, cent)
     }
-    (assign, cent)
   }
 
   /** Product quantization + asymmetric-distance search (Jégou et al.
@@ -1426,52 +1394,55 @@ object Similarity {
                          edges: DataFrame, entry: DataFrame, k: Int,
                          beam: Int = 8, rounds: Int = 4): DataFrame = {
     require(beam >= k, s"beam=$beam must be >= k=$k")
-    val e = edges.select(col("src"), col("dst"))
-    // undirected adjacency, deduped — walkable both directions
-    val adj = e
-      .union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint()
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb"))
-    val nodeEmb = corpus.select(col("vec_id").as("node"),
-      col("embedding").as("n_emb"))
-    // (query_id, node) candidates -> scored vs the query, self excluded
-    def score(cands: DataFrame): DataFrame =
-      nodeEmb.join(broadcast(cands), "node")
-        .join(broadcast(q), "query_id")
-        .where(col("node") =!= col("query_id"))
-        .select(col("query_id"), col("node"),
-          round(cosine(col("q_emb"), col("n_emb")), 4).as("sim"))
-    def topB(df: DataFrame): DataFrame = {
+    Rounds("graph_search", corpus.sparkSession) { r =>
+      val e = edges.select(col("src"), col("dst"))
+      // undirected adjacency, deduped — walkable both directions
+      val adj = r.checkpoint(e
+        .union(e.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct())
+      val q = queries.select(col("vec_id").as("query_id"),
+        col("embedding").as("q_emb"))
+      val nodeEmb = corpus.select(col("vec_id").as("node"),
+        col("embedding").as("n_emb"))
+      // (query_id, node) candidates -> scored vs the query, self excluded
+      def score(cands: DataFrame): DataFrame =
+        nodeEmb.join(broadcast(cands), "node")
+          .join(broadcast(q), "query_id")
+          .where(col("node") =!= col("query_id"))
+          .select(col("query_id"), col("node"),
+            round(cosine(col("q_emb"), col("n_emb")), 4).as("sim"))
+      def topB(df: DataFrame): DataFrame = {
+        val w = Window.partitionBy("query_id")
+          .orderBy(col("sim").desc, col("node"))
+        df.withColumn("rn", row_number().over(w)).where(col("rn") <= beam)
+          .select("query_id", "node", "sim")
+      }
+      val entryBeam = r.checkpoint(topB(score(q.select("query_id")
+        .crossJoin(entry.select(col("node"))))))
+      val beamDf = (1 to rounds).foldLeft(entryBeam) { (beamDf, i) =>
+        r.round(i) {
+          // the beam is ≤ Q·beam rows BY CONSTRUCTION (topB caps it), but it
+          // sits behind a checkpoint whose size the planner cannot estimate —
+          // unhinted, the expansion planned as a sort-merge join that
+          // re-shuffled the (static, |edges|-sized) adjacency list every
+          // round. Broadcasting the beam makes the expansion a map-side
+          // lookup: the adjacency list never moves (guide §3.1 — hint the
+          // side you KNOW is small).
+          val nbrs = broadcast(beamDf.select("query_id", "node"))
+            .join(adj.withColumnRenamed("src", "node"), "node")
+            .select(col("query_id"), col("dst").as("node")).distinct()
+          val all = beamDf.unionByName(score(nbrs))
+            .dropDuplicates("query_id", "node")
+          r.checkpoint(topB(all))
+        }
+      }
       val w = Window.partitionBy("query_id")
         .orderBy(col("sim").desc, col("node"))
-      df.withColumn("rn", row_number().over(w)).where(col("rn") <= beam)
-        .select("query_id", "node", "sim")
+      beamDf.withColumn("rn", row_number().over(w).cast("long"))
+        .where(col("rn") <= k)
+        .select(col("query_id"), col("rn"), col("node").as("neighbor_id"),
+          col("sim"))
     }
-    var beamDf = topB(score(q.select("query_id")
-        .crossJoin(entry.select(col("node")))))
-      .localCheckpoint()
-    (1 to rounds).foreach { _ =>
-      // the beam is ≤ Q·beam rows BY CONSTRUCTION (topB caps it), but it
-      // sits behind a checkpoint whose size the planner cannot estimate —
-      // unhinted, the expansion planned as a sort-merge join that
-      // re-shuffled the (static, |edges|-sized) adjacency list every
-      // round. Broadcasting the beam makes the expansion a map-side
-      // lookup: the adjacency list never moves (guide §3.1 — hint the
-      // side you KNOW is small).
-      val nbrs = broadcast(beamDf.select("query_id", "node"))
-        .join(adj.withColumnRenamed("src", "node"), "node")
-        .select(col("query_id"), col("dst").as("node")).distinct()
-      val all = beamDf.unionByName(score(nbrs))
-        .dropDuplicates("query_id", "node")
-      beamDf = topB(all).localCheckpoint()
-    }
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("node"))
-    beamDf.withColumn("rn", row_number().over(w).cast("long"))
-      .where(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("node").as("neighbor_id"),
-        col("sim"))
   }
 
   /** ENTRY POINTS from the coarse quantizer — for each trained k-means

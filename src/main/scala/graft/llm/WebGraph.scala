@@ -48,48 +48,15 @@ object WebGraph {
     * Shuffle shape at 100 TB: `edges` is already host-level (see
     * [[hostLinkGraph]]); each round re-joins the fresh rank frame to the
     * static weighted edge list, so the edge frame is persisted once and
-    * each round moves only (node, long) pairs. Rounds are
+    * each round moves only (node, long, long) rows. Rounds are
     * `localCheckpoint`ed to keep plans constant-size across iterations
-    * (the q63 connected-components convention). */
+    * (see [[Rounds]]). */
   def pageRank(edges: DataFrame, iters: Int = 5, dampingPct: Long = 85)
-      : DataFrame = {
-    require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    val e = edges.select(col("src").cast("string").as("src"),
-      col("dst").cast("string").as("dst"), col("w").cast("long").as("w"))
-    // out-weight folded onto each edge once: the per-round join then
-    // needs only the rank frame
-    // static per-round join sides PERSISTED partitioned on their join
-    // keys (persist, not localCheckpoint: under AQE a checkpointed
-    // Dataset records UnknownPartitioning, a cached plan keeps its
-    // HashPartitioning) — each power-iteration round then re-shuffles
-    // only the rank frame, never the edge list or the node set
-    val ew = e.join(
-        e.groupBy(col("src").as("osrc")).agg(sum("w").as("ow")),
-        col("src") === col("osrc"))
-      .select(col("src"), col("dst"), col("w"), col("ow"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = ew.select(col("src").as("node"))
-      .union(ew.select(col("dst").as("node")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val teleport = ((100 - dampingPct) * Fp) / 100
-    var ranks = nodes.select(col("node"), lit(Fp).as("rank_fp"))
-    var i = 0
-    while (i < iters) {
-      val contribs = ew.join(ranks, col("src") === col("node"))
-        .select(col("dst"),
-          expr("(rank_fp * w) div ow").as("contrib"))
-        .groupBy("dst").agg(sum("contrib").as("s"))
-      ranks = nodes.join(contribs, col("node") === col("dst"), "left")
-        .select(col("node"),
-          expr(s"$teleport + (($dampingPct * coalesce(s, cast(0 as bigint))) div 100)")
-            .as("rank_fp"))
-        .localCheckpoint()
-      i += 1
-    }
-    ranks
-  }
+      : DataFrame =
+    powerIterate("page_rank", edges, iters, dampingPct)(
+      _.select(col("node"), lit(teleport(dampingPct)).as("tele"),
+        lit(Fp).as("rank_fp")))
+      .select("node", "rank_fp")
 
   /** Semi-supervised LABEL PROPAGATION over a weighted directed graph
     * (Zhu & Ghahramani 2002, in the iterated-kNN-classifier form): seed
@@ -114,33 +81,29 @@ object WebGraph {
   def labelPropagate(edges: DataFrame, seeds: DataFrame, rounds: Int = 3)
       : DataFrame = {
     require(rounds >= 1, "labelPropagate needs at least one round")
-    // the static edge list is joined on `dst` every round — persisted
-    // partitioned on it (see [[pageRank]] for the persist-vs-checkpoint
-    // rationale); the seed frame is tiny and read three ways, a plain
-    // persist suffices
-    val e = edges.select(col("src"), col("dst"),
-        col("w").cast("long").as("w"))
-      .repartition(col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val s0 = seeds.select(col("vec_id"), col("lab").cast("long").as("lab"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = s0
-    var r = 0
-    while (r < rounds) {
-      val votes = e.join(labels.withColumnRenamed("vec_id", "dst"), "dst")
-        .groupBy(col("src"), col("lab"))
-        .agg(sum("w").as("wsum"))
+    Rounds("label_propagate", edges.sparkSession) { r =>
+      // the static edge list is joined on `dst` every round, so it is
+      // persisted partitioned on it; the seed frame is tiny and read
+      // three ways
+      val e = r.persist(edges.select(col("src"), col("dst"),
+          col("w").cast("long").as("w"))
+        .repartition(col("dst")))
+      val s0 = r.persist(
+        seeds.select(col("vec_id"), col("lab").cast("long").as("lab")))
       val w = Window.partitionBy("src")
         .orderBy(col("wsum").desc, col("lab"))
-      val assigned = votes
-        .withColumn("rk", row_number().over(w)).where(col("rk") === 1)
-        .select(col("src").as("vec_id"), col("lab"))
-        .join(s0.select("vec_id"), Seq("vec_id"), "left_anti")
-      labels = s0.unionByName(assigned.select("vec_id", "lab"))
-        .localCheckpoint()
-      r += 1
+      (1 to rounds).foldLeft(s0) { (labels, i) =>
+        r.round(i) {
+          val assigned = e.join(labels.withColumnRenamed("vec_id", "dst"), "dst")
+            .groupBy(col("src"), col("lab"))
+            .agg(sum("w").as("wsum"))
+            .withColumn("rk", row_number().over(w)).where(col("rk") === 1)
+            .select(col("src").as("vec_id"), col("lab"))
+            .join(s0.select("vec_id"), Seq("vec_id"), "left_anti")
+          r.checkpoint(s0.unionByName(assigned.select("vec_id", "lab")))
+        }
+      }
     }
-    labels
   }
 
   /** TrustRank (Gyöngyi, Garcia-Molina & Pedersen 2004): PageRank with
@@ -154,44 +117,54 @@ object WebGraph {
     * are exact longs, every round SQL-replayable. Seeds start at Fp,
     * others at 0; per-round teleport lands on seeds only. */
   def trustRank(edges: DataFrame, seeds: DataFrame, iters: Int = 5,
-                dampingPct: Long = 85): DataFrame = {
+                dampingPct: Long = 85): DataFrame =
+    powerIterate("trust_rank", edges, iters, dampingPct) { nodes =>
+      val tele = when(col("_t"), lit(teleport(dampingPct))).otherwise(lit(0L))
+      nodes.join(seeds.select(col("node").cast("string").as("node"))
+          .distinct().withColumn("_t", lit(true)), Seq("node"), "left")
+        .select(col("node"), tele.as("tele"),
+          when(tele > 0, lit(Fp)).otherwise(lit(0L)).as("rank_fp"))
+    }.select(col("node"), col("rank_fp"), (col("tele") > 0).as("is_seed"))
+
+  private def teleport(dampingPct: Long): Long = ((100 - dampingPct) * Fp) / 100
+
+  /** The power iteration [[pageRank]] and [[trustRank]] share. `init`
+    * maps the (node) frame to the round state (node, tele, rank_fp): each
+    * node's per-round teleport and starting rank. Per round, per edge
+    * `contrib = (rank(src) * w) div outw(src)`, per node
+    * `rank' = tele + (dampingPct * Σ contrib) div 100`. The state carries
+    * `tele`, so the result is the last round's checkpoint. */
+  private def powerIterate(op: String, edges: DataFrame, iters: Int,
+                           dampingPct: Long)(
+      init: DataFrame => DataFrame): DataFrame = {
     require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    val e = edges.select(col("src").cast("string").as("src"),
-      col("dst").cast("string").as("dst"), col("w").cast("long").as("w"))
-    // same persisted-static layout as [[pageRank]]
-    val ew = e.join(
-        e.groupBy(col("src").as("osrc")).agg(sum("w").as("ow")),
-        col("src") === col("osrc"))
-      .select(col("src"), col("dst"), col("w"), col("ow"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val teleport = ((100 - dampingPct) * Fp) / 100
-    val nodesT = ew.select(col("src").as("node"))
-      .union(ew.select(col("dst").as("node")))
-      .distinct()
-      .join(seeds.select(col("node").cast("string").as("node"))
-        .distinct().withColumn("_t", lit(true)), Seq("node"), "left")
-      .select(col("node"),
-        when(col("_t"), lit(teleport)).otherwise(lit(0L)).as("tele"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var ranks = nodesT.select(col("node"),
-      when(col("tele") > 0, lit(Fp)).otherwise(lit(0L)).as("rank_fp"))
-    var i = 0
-    while (i < iters) {
-      val contribs = ew.join(ranks, col("src") === col("node"))
-        .select(col("dst"),
-          expr("(rank_fp * w) div ow").as("contrib"))
-        .groupBy("dst").agg(sum("contrib").as("s"))
-      ranks = nodesT.join(contribs, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (col("tele") +
-            expr(s"($dampingPct * coalesce(s, cast(0 as bigint))) div 100"))
-            .as("rank_fp"))
-        .localCheckpoint()
-      i += 1
+    Rounds(op, edges.sparkSession) { r =>
+      val e = edges.select(col("src").cast("string").as("src"),
+        col("dst").cast("string").as("dst"), col("w").cast("long").as("w"))
+      // out-weight folded onto each edge once, and the edge list
+      // partitioned on src: each round then re-shuffles only the ranks
+      val ew = r.persist(e.join(
+          e.groupBy(col("src").as("osrc")).agg(sum("w").as("ow")),
+          col("src") === col("osrc"))
+        .select(col("src"), col("dst"), col("w"), col("ow"))
+        .repartition(col("src")))
+      val nodes = ew.select(col("src").as("node"))
+        .union(ew.select(col("dst").as("node")))
+        .distinct()
+      (1 to iters).foldLeft(init(nodes)) { (ranks, i) =>
+        r.round(i) {
+          val contribs = ew.join(ranks, col("src") === col("node"))
+            .select(col("dst"),
+              expr("(rank_fp * w) div ow").as("contrib"))
+            .groupBy("dst").agg(sum("contrib").as("s"))
+          r.checkpoint(ranks.join(contribs, col("node") === col("dst"), "left")
+            .select(col("node"), col("tele"),
+              (col("tele") +
+                expr(s"($dampingPct * coalesce(s, cast(0 as bigint))) div 100"))
+                .as("rank_fp")))
+        }
+      }
     }
-    nodesT.join(ranks, "node")
-      .select(col("node"), col("rank_fp"), (col("tele") > 0).as("is_seed"))
   }
 
   /** TRIANGLE COUNTS + local clustering coefficient (Watts & Strogatz

@@ -149,9 +149,9 @@ object TopKPerKey {
   /** DataFrame API: exact per-key top-k with rank column `rankName`.
     * Sort keys must yield a total order (include a unique tie-breaker)
     * for deterministic results. Precondition: the session was built by
-    * [[graft.GraftSession]] (or passed to [[graft.GraftSession.setup]]) or
-    * carries [[graft.GraftExtensions]] — [[TopKPerKeyStrategy]] must be
-    * registered, or planning the node fails. */
+    * [[graft.GraftSession]] (or passed to [[graft.GraftSession.setup]]) —
+    * [[TopKPerKeyStrategy]] must be registered, or planning the node
+    * fails. */
   def apply(df: DataFrame, keyNames: Seq[String], orderBy: Seq[SortKey],
             k: Int, rankName: String = "rn"): DataFrame = {
     val spark = df.sparkSession

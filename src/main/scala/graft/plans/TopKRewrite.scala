@@ -19,8 +19,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * PARTITION BY key — a global (unpartitioned) top-k stays on Spark's window
   * path, since TopKPerKeyExec requires a ClusteredDistribution over the keys
   * and ClusteredDistribution(Nil) is rejected at planning. Registered by
-  * [[graft.GraftSession.setup]] or `spark.sql.extensions`
-  * ([[graft.GraftExtensions]]); `spark.sql.optimizer.excludedRules` can
+  * [[graft.GraftSession.setup]]; `spark.sql.optimizer.excludedRules` can
   * switch it off per session.
   */
 object TopKRewrite extends Rule[LogicalPlan] {

@@ -6,9 +6,8 @@ import graft.plans.{AnnJoinRewrite, TopKPerKeyStrategy, TopKRewrite}
   *
   * The recipes are asserted as maps, not read back from a session: suites
   * share one JVM and one SparkContext, so a builder's confs reach a session
-  * only when it is the JVM's first. `setup` runs on a `newSession()` so the
-  * shared test session (registered once, through `spark.sql.extensions`)
-  * keeps a single copy of each rule. */
+  * only when it is the JVM's first. `setup` runs on a `newSession()`,
+  * which starts with none of the engine's registrations. */
 class GraftSessionSpec extends SparkSpec {
 
   private val rocksDb =
@@ -50,10 +49,10 @@ class GraftSessionSpec extends SparkSpec {
 
   test("setup: functions, rules and strategy, each once after two calls") {
     val s = spark.newSession()
-    // a new session inherits the extension-injected functions: drop them
-    // so the check below sees what setup registers
     val registry = s.sessionState.functionRegistry
-    GraftSession.functions.foreach { case (id, _, _) => registry.dropFunction(id) }
+    GraftSession.functions.foreach { case (id, _, _) =>
+      assert(!registry.functionExists(id), id)
+    }
     assert(GraftSession.setup(GraftSession.setup(s)) eq s)
     GraftSession.functions.foreach { case (id, _, _) =>
       assert(registry.functionExists(id), id)
@@ -61,5 +60,22 @@ class GraftSessionSpec extends SparkSpec {
     assert(s.sql("SELECT poly_hash('abc')").head().getLong(0) != 0L)
     assert(s.experimental.extraOptimizations == Seq(TopKRewrite, AnnJoinRewrite))
     assert(s.experimental.extraStrategies == Seq(TopKPerKeyStrategy))
+  }
+
+  test("test session: each rule and strategy once, in the experimental hooks") {
+    // the session Bench, Verify and etlbench plan on: rules run once, in
+    // the optimizer's last batch, not inside the operator-optimization
+    // batches where spark.sql.extensions would put them
+    assert(spark.experimental.extraOptimizations == GraftSession.rules)
+    assert(spark.experimental.extraStrategies == GraftSession.strategies)
+    val batches = spark.sessionState.optimizer.batches
+    GraftSession.rules.foreach { rule =>
+      assert(batches.map(_.rules.count(_ eq rule)).sum == 1, rule.ruleName)
+      assert(batches.exists(b => b.name == "User Provided Optimizers" &&
+        b.rules.contains(rule)), rule.ruleName)
+    }
+    GraftSession.strategies.foreach { strategy =>
+      assert(spark.sessionState.planner.strategies.count(_ eq strategy) == 1)
+    }
   }
 }

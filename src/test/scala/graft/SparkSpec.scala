@@ -13,6 +13,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 object SparkSpec {
   private val FileImpl = "spark.hadoop.fs.file.impl"
 
+  /** Registered through [[GraftSession.setup]], as Bench, Verify and
+    * etlbench are, so the specs plan what the harness runs. */
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -21,11 +23,10 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       // the suite's own file writes set modes without a chmod process
       .config(FileImpl, GraftSession.core(FileImpl))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    s
+    GraftSession.setup(s)
   }
 }

@@ -49,8 +49,8 @@ class ExpressionsSpec extends SparkSpec {
     }
   }
 
-  test("poly_hash SQL function registered via extensions config") {
-    // SparkSpec sets spark.sql.extensions=graft.GraftExtensions
+  test("poly_hash SQL function registered by GraftSession.setup") {
+    // SparkSpec registers the test session through GraftSession.setup
     val got = spark.sql("SELECT poly_hash('abc')").as[Long].head()
     assert(got == ((97L * 31 + 98) % 2147483647L * 31 + 99) % 2147483647L)
   }

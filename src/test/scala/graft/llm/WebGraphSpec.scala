@@ -47,6 +47,16 @@ class WebGraphSpec extends SparkSpec {
     assert(r == Map("a" -> 1000000L, "b" -> 1000000L))
   }
 
+  test("undamped 2-cycle keeps both nodes at Fp: every node starts at Fp") {
+    // dampingPct = 100: teleport is 0, so only the starting rank carries
+    // mass. PageRank starts every node at Fp; TrustRank starts only nodes
+    // with a positive teleport there, so "every node a seed" is not it.
+    val r = WebGraph.pageRank(Seq(("a", "b", 1L), ("b", "a", 1L))
+        .toDF("src", "dst", "w"), iters = 3, dampingPct = 100)
+      .as[(String, Long)].collect().toMap
+    assert(r == Map("a" -> WebGraph.Fp, "b" -> WebGraph.Fp))
+  }
+
   test("rank is independent of input partitioning") {
     val edges = (0L until 200L)
       .map(i => (s"h${i % 17}", s"h${(i * 13 + 5) % 23}", 1L + i % 3))
