@@ -20,14 +20,17 @@ final case class ColumnSpec(
     name: String,
     source: Column,
     castTo: Option[DataType] = None,
-    clean: Column => Column = identity) {
+    clean: Column => Column = identity,
+    jsonField: Option[String] = None) {
 
   /** Compile to one output column: clean → (try-)cast → alias.
     * Cast uses TRY semantics so any malformed cell degrades to NULL — the
     * reference's `try: ... except: return None` per-cell contract
     * (testpilot_data.py:57-61), expressed once at plan level instead of per
-    * row. */
+    * row. A JSON column compiles only inside a [[FrameConfig]], which
+    * parses its payload first. */
   def compile: Column = {
+    require(jsonField.isEmpty, s"JSON column $name compiles in a FrameConfig")
     val cleaned = clean(source)
     castTo.fold(cleaned)(dt => cleaned.try_cast(dt)).as(name)
   }
@@ -42,6 +45,21 @@ object ColumnSpec {
       case head :: tail => tail.foldLeft(col(head))(_.getField(_))
       case Nil          => throw new IllegalArgumentException("empty path")
     }
+
+  /** A top-level `field` of the JSON string column `payload` (the
+    * reference's JSON-blob properties, testpilot_data.py:128-134), then
+    * `clean` and the try-cast. [[FrameConfig]] parses each payload ONCE
+    * per row for all of its fields — one `json_tuple` generator — so a
+    * post-filter on the field reads the parsed value instead of parsing
+    * again. Missing key, JSON null, invalid or empty payload and a null
+    * payload all give NULL; a nested object or array gives its JSON
+    * text; a string gives its unquoted value. Unlike `get_json_object`,
+    * a DUPLICATE key takes its LAST value (`{"k":1,"k":2}` gives 2, as
+    * Python's `json.loads` does), not its first. */
+  def json(name: String, payload: Column, field: String,
+           castTo: Option[DataType] = None,
+           clean: Column => Column = identity): ColumnSpec =
+    ColumnSpec(name, payload, castTo, clean, Some(field))
 }
 
 /** A frame-level extraction config: row pre-filter (the reference's
@@ -53,28 +71,50 @@ final case class FrameConfig(
     preFilter: Option[Column] = None,
     postFilter: Option[Column] = None) {
 
-  /** Apply as one Catalyst plan: filter → select → filter.
+  /** Apply as one Catalyst plan: filter → parse → select → filter.
+    *
+    * The parse step is one `json_tuple` generator per distinct JSON
+    * payload ([[ColumnSpec.json]]) over all of that payload's fields; a
+    * post-filter on a parsed field cannot move below it, so each payload
+    * is parsed once per row, while filters on other columns still push
+    * down to the scan.
     *
     * Missing-path semantics follow the reference: `get_pings_properties`
     * fills paths absent from a ping with None rather than failing
     * (moztelemetry path extraction; consumed at testpilot_data.py:41,56),
-    * so a [[ColumnSpec]] whose source does not resolve against THIS
-    * frame's schema compiles to a typed NULL column instead of an
-    * AnalysisException — one schema probe per column at plan-build time,
-    * nothing at run time. */
+    * so a [[ColumnSpec]] whose source (a JSON column's payload) does not
+    * resolve against THIS frame's schema compiles to a typed NULL column
+    * instead of an AnalysisException — one schema probe per column at
+    * plan-build time, nothing at run time. */
   def apply(df: DataFrame): DataFrame = {
     val pre = preFilter.fold(df)(df.filter)
-    val compiled = columns.map { c =>
-      val resolves =
-        try { pre.select(c.compile); true }
-        catch { case _: org.apache.spark.sql.AnalysisException => false }
-      if (resolves) c.compile
-      else {
-        val nul = org.apache.spark.sql.functions.lit(null)
-        c.castTo.fold(nul)(nul.cast).as(c.name)
-      }
+    def resolves(c: Column): Boolean =
+      try { pre.select(c); true }
+      catch { case _: org.apache.spark.sql.AnalysisException => false }
+    val fields = columns.collect {
+      case ColumnSpec(_, p, _, _, Some(f)) => (p, f)
+    }.distinct
+    val payloads = fields.map(_._1).distinct.filter(resolves)
+    // (payload, field) -> the generator output column holding its value
+    val slot = fields.filter(pf => payloads.contains(pf._1)).zipWithIndex
+      .map { case (pf, i) => pf -> s"__json$i" }.toMap
+    val parsed = payloads.foldLeft(pre) { (frame, p) =>
+      val outs = fields.filter(_._1 == p)
+      frame.select(col("*"),
+        json_tuple(p, outs.map(_._2): _*).as(outs.map(slot)))
     }
-    val projected = pre.select(compiled: _*)
+    val compiled = columns.map { c =>
+      val spec = c.jsonField match {
+        case Some(f) => slot.get((c.source, f))
+          .map(n => c.copy(source = col(n), jsonField = None))
+        case None => Some(c).filter(s => resolves(s.compile))
+      }
+      spec.fold {
+        val nul = lit(null)
+        c.castTo.fold(nul)(nul.cast).as(c.name)
+      }(_.compile)
+    }
+    val projected = parsed.select(compiled: _*)
     postFilter.fold(projected)(projected.filter)
   }
 }

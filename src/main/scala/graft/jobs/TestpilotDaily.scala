@@ -55,8 +55,7 @@ object TestpilotDaily {
       ColumnSpec("day", date_format(col("ts"), "yyyy-MM-dd")),
       ColumnSpec("user_id", col("user_id")),
       ColumnSpec("event", col("event_type")),
-      ColumnSpec("prop_k", get_json_object(col("props"), "$.k"),
-        castTo = Some(LongType))),
+      ColumnSpec.json("prop_k", col("props"), "k", castTo = Some(LongType))),
     preFilter = Some(col("event_type").isin("click", "view")),
     postFilter = Some(col("prop_k").isNotNull))
 
@@ -88,20 +87,58 @@ object TestpilotDaily {
   /** Run the daily job: project the three frames (both doc-type configs
     * project the one telemetry frame, and each sink write scans it once)
     * and, when `save`, write all three sinks. Returns (testpilot,
-    * testpilottest, search) like the reference's `main`. */
+    * testpilottest, search) like the reference's `main`.
+    *
+    * The three sinks do not depend on each other, so their writes run
+    * CONCURRENTLY, one driver thread each, and share the executors: the
+    * scans, shuffles, commits and the one-task CSV stage of one sink
+    * overlap the others'. Every write job carries the caller's SparkContext
+    * local properties (job group, description, scheduler pool) and active
+    * session. `run` returns only after every sink is committed. If a write
+    * fails, `run` still waits for the other writes to end, then throws the
+    * first failure in sink order (testpilot, testpilottest, search) with
+    * the later ones attached as suppressed; the sinks that did not fail
+    * are complete. */
   def run(spark: SparkSession, telemetry: DataFrame, searchCsv: DataFrame,
           sinks: Sinks, save: Boolean = true)
       : (DataFrame, DataFrame, DataFrame) = {
     val testpilot = testpilotConfig(telemetry)
     val testpilottest = testpilottestConfig(telemetry)
     val search = searchConfig(searchCsv)
-    if (save) {
-      PartitionedWriter.write(testpilot, sinks.testpilot,
-        partitionCols = Seq("day"))
-      PartitionedWriter.write(testpilottest, sinks.testpilottest,
-        partitionCols = Seq("day"))
-      PartitionedWriter.write(search, sinks.search, numFiles = Some(1))
-    }
+    if (save) concurrently(Seq(
+      () => PartitionedWriter.write(testpilot, sinks.testpilot,
+        partitionCols = Seq("day")),
+      () => PartitionedWriter.write(testpilottest, sinks.testpilottest,
+        partitionCols = Seq("day")),
+      () => PartitionedWriter.write(search, sinks.search, numFiles = Some(1))))
     (testpilot, testpilottest, search)
+  }
+
+  /** Run every body on a new thread and wait until all have ended. A new
+    * thread inherits the caller's SparkContext local properties (a copy)
+    * and active session, both inheritable thread-locals, so its jobs are
+    * the caller's jobs. An interrupt of the caller is kept until then. */
+  private def concurrently(bodies: Seq[() => Unit]): Unit = {
+    val failures = new Array[Throwable](bodies.size)
+    val threads = bodies.zipWithIndex.map { case (body, i) =>
+      val t = new Thread(() =>
+        try body() catch { case e: Throwable => failures(i) = e },
+        s"testpilot-daily-write-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    failures.filter(_ != null) match {
+      case Array(first, rest @ _*) =>
+        rest.foreach(first.addSuppressed)
+        throw first
+      case _ =>
+    }
   }
 }

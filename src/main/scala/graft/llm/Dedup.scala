@@ -1379,7 +1379,7 @@ object Dedup {
   }
 
   /** `df` computed once, by the contract stated in [[minHashLsh]]. */
-  private def materialize(df: DataFrame, level: StorageLevel): DataFrame =
+  private[llm] def materialize(df: DataFrame, level: StorageLevel): DataFrame =
     if (level == StorageLevel.NONE) df
     else df.localCheckpoint(eager = true, storageLevel = level)
 

@@ -154,10 +154,11 @@ object LanguageModel {
     * bounded top-K sort-limit, a BROADCAST join of the ≤K phrase table
     * against the token stream (no driver collect — the model never
     * leaves the cluster), and per-doc windows that all share one
-    * doc_id exchange. Each round's token frame is persisted (each is
-    * read by the next round's counts AND its merge pass — without reuse
-    * the lineage re-executes multiplicatively across rounds); the final
-    * round skips the merge entirely (its vocab is the last output).
+    * doc_id exchange. Each round's token frame and phrase table are
+    * round state of one [[Rounds]] scope, checkpointed (each token frame
+    * is read by the next round's counts AND its merge pass — without
+    * reuse the lineage re-executes multiplicatively across rounds); the
+    * final round skips the merge entirely (its vocab is the last output).
     *
     * Output: (merge_round, w1, w2, c_ab, pmi) — the learned phrase
     * vocabulary, `merge_round` ascending then the q121 cut-line order.
@@ -170,35 +171,37 @@ object LanguageModel {
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
     import org.apache.spark.sql.expressions.Window
     val byDoc = Window.partitionBy("doc_id").orderBy("pos")
-    def persisted(df: DataFrame): DataFrame =
-      if (storageLevel == StorageLevel.NONE) df else df.persist(storageLevel)
-
-    var frame = persisted(docs.select(col("doc_id"),
-      posexplode(TextAnalysis.tokens(col("text"))).as(Seq("pos", "tok"))))
-    val vocabs = (1 to rounds).map { r =>
-      val pairs = frame.select(col("doc_id"), col("pos"), col("tok"),
-          lead("tok", 1).over(byDoc).as("nxt"))
-        .where(col("nxt").isNotNull)
-      val big = pairs.groupBy(col("tok").as("w1"), col("nxt").as("w2"))
-        .agg(count(lit(1)).as("c_ab"))
-      val uni = frame.groupBy(col("tok").as("w")).agg(count(lit(1)).as("c"))
-      val total = pairs.agg(count(lit(1)).as("n"))
-      val top = persisted(big.where(col("c_ab") >= minCount)
-        .join(uni.select(col("w").as("w1"), col("c").as("c_1")), "w1")
-        .join(uni.select(col("w").as("w2"), col("c").as("c_2")), "w2")
-        .crossJoin(broadcast(total))
-        .select(col("w1"), col("w2"), col("c_ab"),
-          round(log(col("c_ab").cast("double") * col("n").cast("double") /
-            (col("c_1").cast("double") * col("c_2").cast("double"))), 4)
-            .as("pmi"))
-        .orderBy(col("pmi").desc, col("w1"), col("w2"))
-        .limit(topK))
-      if (r < rounds)
-        frame = persisted(mergeBigrams(frame, top, joiner, byDoc))
-      top.select(lit(r).cast("long").as("merge_round"),
-        col("w1"), col("w2"), col("c_ab"), col("pmi"))
+    Rounds("train_phrases", docs.sparkSession, storageLevel) { r =>
+      var frame = r.checkpoint(docs.select(col("doc_id"),
+        posexplode(TextAnalysis.tokens(col("text"))).as(Seq("pos", "tok"))))
+      val vocabs = (1 to rounds).map { i =>
+        r.round(i) {
+          val pairs = frame.select(col("doc_id"), col("pos"), col("tok"),
+              lead("tok", 1).over(byDoc).as("nxt"))
+            .where(col("nxt").isNotNull)
+          val big = pairs.groupBy(col("tok").as("w1"), col("nxt").as("w2"))
+            .agg(count(lit(1)).as("c_ab"))
+          val uni = frame.groupBy(col("tok").as("w"))
+            .agg(count(lit(1)).as("c"))
+          val total = pairs.agg(count(lit(1)).as("n"))
+          val top = r.checkpoint(big.where(col("c_ab") >= minCount)
+            .join(uni.select(col("w").as("w1"), col("c").as("c_1")), "w1")
+            .join(uni.select(col("w").as("w2"), col("c").as("c_2")), "w2")
+            .crossJoin(broadcast(total))
+            .select(col("w1"), col("w2"), col("c_ab"),
+              round(log(col("c_ab").cast("double") *
+                col("n").cast("double") / (col("c_1").cast("double") *
+                col("c_2").cast("double"))), 4).as("pmi"))
+            .orderBy(col("pmi").desc, col("w1"), col("w2"))
+            .limit(topK))
+          if (i < rounds)
+            frame = r.checkpoint(mergeBigrams(frame, top, joiner, byDoc))
+          top.select(lit(i).cast("long").as("merge_round"),
+            col("w1"), col("w2"), col("c_ab"), col("pmi"))
+        }
+      }
+      vocabs.reduce(_ unionByName _)
     }
-    vocabs.reduce(_ unionByName _)
   }
 
   /** APPLY a trained phrase vocabulary to the corpus — the inference side
@@ -211,9 +214,9 @@ object LanguageModel {
     *
     * Scale shape: the vocabulary is ≤ rounds·topK rows and BROADCASTS to
     * every merge join; per-round work is the per-doc gaps-and-islands
-    * windows over the exploded token frame — one doc_id exchange reused
-    * across rounds (Spark re-sorts within partitions only); the final
-    * per-doc reassembly is one aggregation. No driver actions. */
+    * windows over the exploded token frame, each round's result a
+    * checkpoint of one [[Rounds]] scope; the final per-doc reassembly is
+    * one aggregation. No data reaches the driver. */
   def applyPhrases(docs: DataFrame, vocab: DataFrame, rounds: Int,
                    joiner: String = "_",
                    storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK)
@@ -221,23 +224,22 @@ object LanguageModel {
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
     import org.apache.spark.sql.expressions.Window
     val byDoc = Window.partitionBy("doc_id").orderBy("pos")
-    def persisted(df: DataFrame): DataFrame =
-      if (storageLevel == StorageLevel.NONE) df else df.persist(storageLevel)
-    val t0 = persisted(docs.select(col("doc_id"),
-      posexplode(TextAnalysis.tokens(col("text"))).as(Seq("pos", "tok"))))
-    var frame = t0
-    (1 to rounds).foreach { r =>
-      frame = persisted(mergeBigrams(frame,
-        vocab.where(col("merge_round") === r).select("w1", "w2"),
-        joiner, byDoc))
+    Rounds("apply_phrases", docs.sparkSession, storageLevel) { r =>
+      val t0 = r.checkpoint(docs.select(col("doc_id"),
+        posexplode(TextAnalysis.tokens(col("text"))).as(Seq("pos", "tok"))))
+      val frame = (1 to rounds).foldLeft(t0) { (frame, i) =>
+        r.round(i)(r.checkpoint(mergeBigrams(frame,
+          vocab.where(col("merge_round") === i).select("w1", "w2"),
+          joiner, byDoc)))
+      }
+      val raw = t0.groupBy("doc_id").agg(count(lit(1)).as("n_tokens_raw"))
+      val merged = frame.groupBy("doc_id").agg(
+        count(lit(1)).as("n_tokens_merged"),
+        array_join(
+          transform(array_sort(collect_list(struct(col("pos"), col("tok")))),
+            x => x.getField("tok")), " ").as("text_merged"))
+      raw.join(merged, "doc_id")
     }
-    val raw = t0.groupBy("doc_id").agg(count(lit(1)).as("n_tokens_raw"))
-    val merged = frame.groupBy("doc_id").agg(
-      count(lit(1)).as("n_tokens_merged"),
-      array_join(
-        transform(array_sort(collect_list(struct(col("pos"), col("tok")))),
-          x => x.getField("tok")), " ").as("text_merged"))
-    raw.join(merged, "doc_id")
   }
 
   /** One greedy left-to-right merge pass over an exploded token frame
@@ -625,39 +627,9 @@ object LanguageModel {
     require(shrinkTo.forall(_ >= 1), "shrink target must be >= 1")
     import org.apache.spark.sql.expressions.Window
     Rounds("unigram", docs.sparkSession, storageLevel) { r =>
-      // the ONLY corpus-scale pass (trainBpe's contract)
-      val words = r.checkpoint(docs
-        .select(explode(TextAnalysis.tokens(col("text"))).as("w"))
-        .where(length(col("w")) > 0)
-        .groupBy("w").agg(count(lit(1)).as("cnt")))
-      val maxLen = words.agg(coalesce(max(length(col("w"))), lit(0)))
-        .head().getInt(0) // 1-row metadata agg: the loud cap check
-      require(maxLen <= maxWordLen,
-        s"unigram DP caps word length at $maxWordLen; corpus has $maxLen")
-      // all candidate spans (w, i, j, piece), i exclusive-start 0-based,
-      // j = i + pieceLen — the DP's edge set, vocabulary-sized
-      val spans = r.checkpoint(words.select(col("w"), col("cnt"), explode(expr(
-          s"""flatten(transform(sequence(0, length(w) - 1),
-             i -> transform(sequence(1, least($maxPieceLen, length(w) - i)),
-             l -> named_struct('i', i, 'j', i + l,
-                               'piece', substr(w, i + 1, l)))))"""))
-          .as("sp"))
-        .select(col("w"), col("cnt"), col("sp.i").as("i"),
-          col("sp.j").as("j"), col("sp.piece").as("piece")))
-      val singles = spans.where(length(col("piece")) === 1)
-        .select("piece").distinct()
-      val seedCounts = spans.groupBy("piece").agg(sum("cnt").as("freq"))
-      val wSeed = Window.partitionBy(lit(1))
-        .orderBy(col("freq").desc, col("piece"))
-      var vocab = r.checkpoint(seedCounts
-        .withColumn("rn", row_number().over(wSeed))
-        .where(col("rn") <= seedSize).drop("rn")
-        .unionByName(seedCounts.join(
-            seedCounts.withColumn("rn", row_number().over(wSeed))
-              .where(col("rn") <= seedSize).select("piece"),
-            Seq("piece"), "left_anti")
-          .where(length(col("piece")) === 1))
-        .dropDuplicates("piece"))
+      val (spans, singles, seed) =
+        unigramSeed(r, docs, seedSize, maxPieceLen, maxWordLen, scale = 1L)
+      var vocab = seed
       var lastSeg: DataFrame = null
       (1 to rounds).foreach { i =>
         r.round(i) {
@@ -780,6 +752,49 @@ object LanguageModel {
     }
   }
 
+  /** The unigram trainers' shared setup, round state of `r`: the
+    * distinct-word counts (the ONLY corpus-scale pass, [[trainBpe]]'s
+    * contract), the loud word-length cap, every candidate span (w, cnt,
+    * i, j, piece) — i the 0-based exclusive start, j = i + pieceLen, the
+    * DP's vocabulary-sized edge set — the single characters, and the
+    * seed vocabulary (piece, freq): the top `seedSize` pieces by (freq
+    * DESC, piece) plus every single character, freq the occurrence count
+    * times `scale`. */
+  private def unigramSeed(r: Rounds, docs: DataFrame, seedSize: Int,
+                          maxPieceLen: Int, maxWordLen: Int, scale: Long)
+      : (DataFrame, DataFrame, DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    val words = r.checkpoint(docs
+      .select(explode(TextAnalysis.tokens(col("text"))).as("w"))
+      .where(length(col("w")) > 0)
+      .groupBy("w").agg(count(lit(1)).as("cnt")))
+    val maxLen = words.agg(coalesce(max(length(col("w"))), lit(0)))
+      .head().getInt(0) // 1-row metadata agg: the loud cap check
+    require(maxLen <= maxWordLen,
+      s"unigram DP caps word length at $maxWordLen; corpus has $maxLen")
+    val spans = r.checkpoint(words.select(col("w"), col("cnt"), explode(expr(
+        s"""flatten(transform(sequence(0, length(w) - 1),
+           i -> transform(sequence(1, least($maxPieceLen, length(w) - i)),
+           l -> named_struct('i', i, 'j', i + l,
+                             'piece', substr(w, i + 1, l)))))"""))
+        .as("sp"))
+      .select(col("w"), col("cnt"), col("sp.i").as("i"),
+        col("sp.j").as("j"), col("sp.piece").as("piece")))
+    val singles = spans.where(length(col("piece")) === 1)
+      .select("piece").distinct()
+    val seedCounts = spans.groupBy("piece")
+      .agg((sum("cnt") * lit(scale)).as("freq"))
+    val top = seedCounts.withColumn("rn", row_number().over(
+        Window.partitionBy(lit(1)).orderBy(col("freq").desc, col("piece"))))
+      .where(col("rn") <= seedSize)
+    val seed = r.checkpoint(top.drop("rn")
+      .unionByName(seedCounts.join(top.select("piece"), Seq("piece"),
+          "left_anti")
+        .where(length(col("piece")) === 1))
+      .dropDuplicates("piece"))
+    (spans, singles, seed)
+  }
+
   /** The trained unigram vocabulary, ranked — (rank, piece, freq) by
     * (freq DESC, piece). See [[unigramCore]]. */
   def trainUnigram(docs: DataFrame, seedSize: Int = 48, rounds: Int = 2,
@@ -829,40 +844,11 @@ object LanguageModel {
                                    storageLevel: StorageLevel)
       : (DataFrame, DataFrame) = {
     require(rounds >= 1 && seedSize >= 1 && maxPieceLen >= 1)
-    import org.apache.spark.sql.expressions.Window
     Rounds("unigram_soft", docs.sparkSession, storageLevel) { r =>
-      val words = r.checkpoint(docs
-        .select(explode(TextAnalysis.tokens(col("text"))).as("w"))
-        .where(length(col("w")) > 0)
-        .groupBy("w").agg(count(lit(1)).as("cnt")))
-      val maxLen = words.agg(coalesce(max(length(col("w"))), lit(0)))
-        .head().getInt(0)
-      require(maxLen <= maxWordLen,
-        s"unigram DP caps word length at $maxWordLen; corpus has $maxLen")
-      val spans = r.checkpoint(words.select(col("w"), col("cnt"), explode(expr(
-          s"""flatten(transform(sequence(0, length(w) - 1),
-             i -> transform(sequence(1, least($maxPieceLen, length(w) - i)),
-             l -> named_struct('i', i, 'j', i + l,
-                               'piece', substr(w, i + 1, l)))))"""))
-          .as("sp"))
-        .select(col("w"), col("cnt"), col("sp.i").as("i"),
-          col("sp.j").as("j"), col("sp.piece").as("piece")))
-      val singles = spans.where(length(col("piece")) === 1)
-        .select("piece").distinct()
       // seed counts in fixed point: integer occurrence counts ·10⁶
-      val seedCounts = spans.groupBy("piece")
-        .agg((sum("cnt") * lit(1000000L)).as("freq"))
-      val wSeed = Window.partitionBy(lit(1))
-        .orderBy(col("freq").desc, col("piece"))
-      var vocab = r.checkpoint(seedCounts
-        .withColumn("rn", row_number().over(wSeed))
-        .where(col("rn") <= seedSize).drop("rn")
-        .unionByName(seedCounts.join(
-            seedCounts.withColumn("rn", row_number().over(wSeed))
-              .where(col("rn") <= seedSize).select("piece"),
-            Seq("piece"), "left_anti")
-          .where(length(col("piece")) === 1))
-        .dropDuplicates("piece"))
+      val (spans, singles, seed) = unigramSeed(r, docs, seedSize,
+        maxPieceLen, maxWordLen, scale = 1000000L)
+      var vocab = seed
       // forward α: position 0 is the base case; each reached position's
       // log-prob is a fixed-point LSE over its incoming spans, summands
       // folded in the pre-sorted span order (the array is sorted by

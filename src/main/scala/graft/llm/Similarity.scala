@@ -1295,9 +1295,12 @@ object Similarity {
           .where(col("_bsz") > maxBucket).select("t", "sig")
         sig0.join(broadcast(hot), Seq("t", "sig"), "left_anti")
       }
-    val sigd0 = corpus.join(sigCapped, "vec_id")
-    val sigd = if (storageLevel == StorageLevel.NONE) sigd0
-               else sigd0.persist(storageLevel)
+    // both the signature frame (the two collision-join sides) and the edge
+    // list (the transpose join reads it twice) are computed once, by an
+    // eager local checkpoint at `storageLevel` ([[Dedup.minHashLsh]]'s
+    // contract): no cache entry outlives the call
+    val sigd = Dedup.materialize(corpus.join(sigCapped, "vec_id"),
+      storageLevel)
     val a = sigd.select(col("t"), col("sig"),
       col("vec_id").as("src"), col("embedding").as("s_emb"))
     val b = sigd.select(col("t"), col("sig"),
@@ -1309,14 +1312,9 @@ object Similarity {
       .dropDuplicates("src", "dst")
     val w = Window.partitionBy(col("src"))
       .orderBy(round(col("sim"), 4).desc, col("dst"))
-    val edges0 = scored
+    val edges = Dedup.materialize(scored
       .withColumn("rn", row_number().over(w).cast("long"))
-      .where(col("rn") <= k)
-    // persist the ≤k·n-row edge list: the transpose join below reads it
-    // from BOTH sides — unpersisted, the whole collision+score+top-k
-    // pipeline (the dominant cost) would execute twice
-    val edges = if (storageLevel == StorageLevel.NONE) edges0
-                else edges0.persist(storageLevel)
+      .where(col("rn") <= k), storageLevel)
     val rev = edges.select(col("dst").as("src"), col("src").as("dst"),
       lit(true).as("_mut"))
     edges.join(rev, Seq("src", "dst"), "left")
@@ -1389,7 +1387,14 @@ object Similarity {
     * cost is O(rounds · Q · beam · degree) score evaluations plus one
     * corpus-scan lookup join per round, INDEPENDENT of how the graph
     * was built and of corpus size beyond the scan — the property that
-    * makes graph ANN the high-recall scale path. */
+    * makes graph ANN the high-recall scale path.
+    *
+    * Driver-size bound: the QUERY BATCH must be driver-sized. Every round
+    * broadcasts the beam (≤ Q·beam rows of (query_id, node)), the scored
+    * candidates (≤ Q·beam·degree rows) and the Q query embeddings, and a
+    * broadcast is collected and built on the driver (Spark caps one at
+    * 8 GB), so a caller with a large Q splits it into batches; the corpus
+    * and the edge list never reach the driver. */
   def graphSearchIndexed(queries: DataFrame, corpus: DataFrame,
                          edges: DataFrame, entry: DataFrame, k: Int,
                          beam: Int = 8, rounds: Int = 4): DataFrame = {

@@ -26,8 +26,8 @@ object PipelineQueries {
         ColumnSpec("user_id", col("user_id")),
         ColumnSpec("event_type", col("event_type")),
         // JSON path extraction (P1/§2.7) + typed cast with null-on-error (P3)
-        ColumnSpec("prop_k", get_json_object(col("props"), "$.k"),
-                   castTo = Some(org.apache.spark.sql.types.LongType)),
+        ColumnSpec.json("prop_k", col("props"), "k",
+                        castTo = Some(org.apache.spark.sql.types.LongType)),
         ColumnSpec("value_r", round(col("value"), 2))),
       // F1 analog of `ping_filter` (testpilot_data.py:20,41-42)
       preFilter = Some(col("event_type") =!= "error"),

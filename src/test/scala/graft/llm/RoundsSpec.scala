@@ -5,7 +5,8 @@ import graft.SparkSpec
 
 /** Every iterative operator runs its rounds through [[Rounds]]: statics are
   * released on exit, repeated calls leave storage flat, and each round is
-  * named in the job description. Connected components has its own release
+  * named in the job description. `knnGraph`, which runs no rounds, is held
+  * to the same release checks. Connected components has its own release
   * spec in DedupSpec. */
 class RoundsSpec extends SparkSpec {
   import spark.implicits._
@@ -21,6 +22,8 @@ class RoundsSpec extends SparkSpec {
     .toDF("vec_id", "embedding")
   private lazy val docs = Seq((1L, "low lower lowest newer wider"),
     (2L, "new newest low slower")).toDF("doc_id", "text")
+  private def phraseDocs(n: Int) = Seq((1L + n, "new york is big new york"),
+    (2L, "big new york")).toDF("doc_id", "text")
 
   private val loops = Seq[(String, Int => Long)](
     "page_rank" -> (n => WebGraph.pageRank(edges(n), iters = 2).count()),
@@ -42,7 +45,16 @@ class RoundsSpec extends SparkSpec {
     "unigram" -> (_ =>
       LanguageModel.trainUnigram(docs, seedSize = 8, rounds = 2).count()),
     "unigram_soft" -> (_ =>
-      LanguageModel.trainUnigramSoft(docs, seedSize = 8, rounds = 2).count()))
+      LanguageModel.trainUnigramSoft(docs, seedSize = 8, rounds = 2).count()),
+    "train_phrases" -> (n => LanguageModel.trainPhrases(phraseDocs(n),
+      minCount = 1).count()),
+    "apply_phrases" -> (n => LanguageModel.applyPhrases(phraseDocs(n),
+      LanguageModel.trainPhrases(phraseDocs(n), minCount = 1), rounds = 2)
+      .count()))
+
+  /** Operators that materialize frames but run no rounds. */
+  private val oneShot = Seq[(String, Int => Long)](
+    "knn_graph" -> (n => Similarity.knnGraph(emb(n), k = 3).count()))
 
   private def cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     .sharedState.cacheManager
@@ -60,7 +72,7 @@ class RoundsSpec extends SparkSpec {
     spark.catalog.clearCache()
     org.apache.spark.sql.graft.ListenerBusDrain(sc)
     sc.addSparkListener(listener)
-    try loops.foreach { case (op, call) =>
+    try (loops ++ oneShot).foreach { case (op, call) =>
       descs.clear()
       sc.setJobDescription("outer")
       try {
@@ -69,17 +81,20 @@ class RoundsSpec extends SparkSpec {
         assert(sc.getLocalProperty("spark.job.description") == "outer", op)
       } finally sc.setJobDescription(null)
       assert(cache.isEmpty, s"$op left a cache entry")
-      assert(descs.contains(s"$op:round=1"), s"$op: ${descs.toArray.distinct.toSeq}")
+      assert(oneShot.exists(_._1 == op) || descs.contains(s"$op:round=1"),
+        s"$op: ${descs.toArray.distinct.toSeq}")
     } finally sc.removeSparkListener(listener)
   }
 
+  // also trainPhrases, applyPhrases and knnGraph
   test("repeated pageRank, trustRank, labelPropagate and kmeansTrain calls " +
     "leave storage flat") {
     val sc = spark.sparkContext
     def stored = sc.getRDDStorageInfo.map(r => r.memSize + r.diskSize).sum
     val repeated = loops.filter { case (op, _) =>
-      Set("page_rank", "trust_rank", "label_propagate").contains(op)
-    } :+ loops.find(_._1 == "kmeans").get
+      Set("page_rank", "trust_rank", "label_propagate", "train_phrases",
+        "apply_phrases").contains(op)
+    } ++ loops.find(_._1 == "kmeans") ++ oneShot
     spark.catalog.clearCache()
     repeated.foreach { case (_, call) => call(0) }
     System.gc()
