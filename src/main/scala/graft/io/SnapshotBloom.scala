@@ -116,10 +116,8 @@ object SnapshotBloom {
         emptyBloom
       }
     }
-    val json = s"""{"bloom_col":"$col","files":[${files
-        .map(f => "\"" + f + "\"").mkString(",")}],"blooms":[${blooms
-        .map(b => "\"" + b + "\"").mkString(",")}]}"""
-    Files.write(sidecar(dir, col, v).toPath, json.getBytes(UTF_8))
+    Files.write(sidecar(dir, col, v).toPath,
+      LogCodec.renderBloom(col, files, blooms).getBytes(UTF_8))
     v
   }
 
@@ -127,21 +125,9 @@ object SnapshotBloom {
                         v: Int): Option[Seq[(String, BloomFilter)]] = {
     val f = sidecar(dir, col, v)
     if (!f.exists()) None
-    else {
-      val json = new String(Files.readAllBytes(f.toPath), UTF_8)
-      // `"".split(",")` yields Array("") — guard the legitimately-empty
-      // snapshot version (zero files) before Base64/readFrom see a ""
-      def list(key: String): Seq[String] = {
-        val body = ("\"" + key + """":\[([^\]]*)\]""").r.unanchored
-          .findFirstMatchIn(json).get.group(1)
-        if (body.isEmpty) Seq.empty
-        else body.split(",").toSeq.map(_.stripPrefix("\"").stripSuffix("\""))
-      }
-      val files = list("files")
-      val blooms = list("blooms")
-        .map(b => BloomFilter.readFrom(Base64.getDecoder.decode(b)))
-      Some(files.zip(blooms))
-    }
+    else Some(LogCodec.decodeBloom(
+      new String(Files.readAllBytes(f.toPath), UTF_8)).map { case (mf, b) =>
+        mf -> BloomFilter.readFrom(Base64.getDecoder.decode(b)) })
   }
 
   /** The manifest files that MIGHT contain `value` — the planning

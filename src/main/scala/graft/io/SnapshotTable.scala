@@ -3,7 +3,6 @@ package graft.io
 import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
-import java.util.Base64
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
@@ -62,24 +61,9 @@ object SnapshotTable {
   private[io] val dataChange =
     new scala.util.DynamicVariable[Boolean](true)
 
-  // partition-tuple framing inside the base64 payload: values joined by
-  // \u0001, NULL spelled \u0000 (values may not contain either)
-  private val PartSep = "\u0001"
-  private val PartNull = "\u0000"
-  // the PARTITION-SPEC-EVOLUTION marker: a file written before the
-  // current spec recorded no value for this column -- it survives every
-  // partition prune (may-contain) until a rewrite re-derives its true
-  // values, Iceberg's old-files-keep-their-spec semantics flattened
-  // onto one tuple shape
-  private val PartUnknown = "\u0002"
-
-  /** True when this recorded value is the spec-evolution UNKNOWN marker
-    * (the file predates the current spec for this column): exact
-    * pruning must decline and metadata DML must refuse toward
-    * copy-on-write for such files. */
   private[graft] def isUnknownPart(v: Option[String]): Boolean =
-    v.contains(PartUnknown)
-  private[graft] def unknownPart: Option[String] = Some(PartUnknown)
+    v.contains(LogCodec.PartUnknown)
+  private[graft] def unknownPart: Option[String] = Some(LogCodec.PartUnknown)
 
   private def logDir(dir: String) = new File(dir, "_log")
   private def manifestFile(dir: String, v: Int) =
@@ -94,15 +78,25 @@ object SnapshotTable {
     }.toSeq.sorted
   }
 
-  /** `private[io]` so the spec can drive the CAS path directly — the
-    * lost-race window (two writers computing the same next version) is
-    * not reachable deterministically through [[commit]]. */
+  /** Publish version `v` as a full manifest over `files`. Per-file ROW
+    * COUNTS and BYTE SIZES (count(*) and scan statistics from manifest
+    * bytes, zero data IO / zero status calls per scan) reuse what
+    * `carried` (the base version) recorded for re-referenced immutable
+    * files; only genuinely new files pay a footer read / one status
+    * call, once, at commit. A count or size that cannot be read leaves
+    * that tier unrecorded (readers decline the metadata answer rather
+    * than guess). The
+    * multi-column min/max `stats`, null counts, partition tuples,
+    * merge-on-read state and rename epochs are recorded as given — see
+    * [[Manifest]]. `private[io]` so the spec can drive the CAS path
+    * directly — the lost-race window (two writers computing the same
+    * next version) is not reachable deterministically through
+    * [[commit]]. */
   private[io] def writeManifest(dir: String, v: Int, action: String,
                             files: Seq[String],
                             stats: Seq[(String, Seq[(Long, Long)])] = Nil,
                             schema: Option[StructType] = None,
-                            knownRows: Map[String, Long] = Map.empty,
-                            knownSizes: Map[String, Long] = Map.empty,
+                            carried: Manifest = Manifest(),
                             parts: Option[(Seq[String],
                               Seq[Seq[Option[String]]])] = None,
                             nulls: Seq[(String, Seq[Long])] = Nil,
@@ -113,175 +107,40 @@ object SnapshotTable {
                             sepoch: Seq[Int] = Nil,
                             ptrans: Seq[String] = Nil)
       : Unit = {
-    // MERGE-ON-READ positional deletes: `dels` lists the delete-sidecar
-    // parquet files ((file, pos) rows) in force at this version,
-    // `dirty` the data files they apply to (dirty ⊆ files — scans
-    // anti-join ONLY those; clean files keep the vectorized fast
-    // path), `ndel` the live deleted-row count (keeps count(*)
-    // pushdown exact). All three carry forward until a rewrite folds
-    // the deletes in.
-    require(dirty.forall(files.contains),
-      s"dirty files not in manifest: ${dirty.filterNot(files.contains)}")
-    require(dels.isEmpty == dirty.isEmpty,
-      "delete sidecars and dirty files must be recorded together")
-    // MULTI-COLUMN min/max file stats: the FIRST column keeps the
-    // original stats_col/mins/maxs spelling (pre-multi manifests parse
-    // unchanged — it is also compact's range-cluster column); every
-    // further column rides as xcols + xmins<i>/xmaxs<i> arrays.
-    // Pruning consults EVERY recorded column (Iceberg records a stats
-    // map per file for the same reason: real query predicates rarely
-    // all hit one column).
-    stats.foreach { case (_, mm) =>
-      require(mm.length == files.length,
-        s"stats/files length mismatch: ${mm.length} != ${files.length}")
-    }
-    require(stats.map(_._1).distinct.length == stats.length,
-      s"duplicate stats columns: ${stats.map(_._1).mkString(",")}")
-    val statsJson = stats.headOption.map { case (c, mm) =>
-      s""","stats_col":"$c","mins":[${mm.map(_._1).mkString(",")}],""" +
-        s""""maxs":[${mm.map(_._2).mkString(",")}]"""
-    }.getOrElse("")
-    val xstatsJson =
-      if (stats.length <= 1) ""
-      else {
-        val extra = stats.tail
-        s""","xcols":[${extra.map(e => "\"" + e._1 + "\"").mkString(",")}]""" +
-          extra.zipWithIndex.map { case ((_, mm), i) =>
-            s""","xmins$i":[${mm.map(_._1).mkString(",")}]""" +
-              s""","xmaxs$i":[${mm.map(_._2).mkString(",")}]"""
-          }.mkString
-      }
-    // Per-file NULL COUNTS per stats column (`ncols` + `nulls<i>`
-    // arrays): IS NULL prunes to files with nullCount > 0, IS NOT NULL
-    // to files with nullCount < rows — the Iceberg null_value_counts
-    // tier. Written only for columns whose count is known for EVERY
-    // file (decline, never half-state).
-    val nullsJson =
-      if (nulls.isEmpty) ""
-      else {
-        nulls.foreach { case (c, ns) => require(ns.length == files.length,
-          s"nulls/files length mismatch for $c: " +
-            s"${ns.length} != ${files.length}") }
-        s""","ncols":[${nulls.map(n => "\"" + n._1 + "\"").mkString(",")}]""" +
-          nulls.zipWithIndex.map { case ((_, ns), i) =>
-            s""","nulls$i":[${ns.mkString(",")}]"""
-          }.mkString
-      }
-    // Per-file ROW COUNTS — the other half of manifest-planned metadata
-    // (Delta/Iceberg record them at write): count(*) and stats-column
-    // min/max answer from manifest bytes with ZERO data IO (the DSv2
-    // aggregate pushdown in SnapshotScanBuilder). Counts a caller
-    // carried (append/restore re-reference immutable files) are reused;
-    // only genuinely new files pay a footer read — metadata-only, no
-    // data pages. A count that cannot be read leaves rows unrecorded
-    // (readers decline pushdown rather than guess).
-    val rowsJson = {
-      val counts = files.map(f => knownRows.get(f).orElse(footerRows(dir, f)))
-      if (counts.forall(_.isDefined))
-        s""","rows":[${counts.map(_.get).mkString(",")}]"""
-      else ""
-    }
-    // the TABLE SCHEMA lives in the log (the Delta insight): readers
-    // plan with it instead of sampling parquet footers, which is what
-    // makes add-column evolution O(0) data work — old files simply
-    // null-fill the new columns at read time. Base64 keeps the
-    // manifest's line-regex parsing trivial (StructType json is full of
-    // brackets that would otherwise need a real JSON parser).
-    val schemaJson = schema.map { st =>
-      s""","schema_b64":"${Base64.getEncoder.encodeToString(
-        st.json.getBytes(UTF_8))}""""
-    }.getOrElse("")
-    // Per-file BYTE SIZES (Delta's add-file `size`): planning serves
-    // scan statistics and byte-range splits from MANIFEST BYTES instead
-    // of one getFileStatus per file per query — at 10^6 files on an
-    // object store the per-scan status storm is a planning stall and a
-    // listing-consistency hazard. Carried files reuse recorded sizes;
-    // only genuinely new files pay one status call AT COMMIT (O(new),
-    // once — not O(all files) per scan). Decline-never-guess like rows.
-    val sizesJson = {
-      val sizes = files.map(f => knownSizes.get(f).orElse(fileLen(dir, f)))
-      if (sizes.forall(_.isDefined))
-        s""","sizes":[${sizes.map(_.get).mkString(",")}]"""
-      else ""
-    }
-    // HIVE-STYLE PARTITION COLUMNS (the Delta/Iceberg identity
-    // transform): the manifest records the partition column names and
-    // each file's exact value tuple — files are VALUE-PURE by
-    // construction ([[commitPartitioned]] writes one file set per
-    // value), so equality/IN predicates prune files exactly from
-    // manifest bytes. Unlike hive layout the partition column STAYS in
-    // the data files (partition-column-as-data, the reference's §3.1
-    // semantics — readers need no path reconstruction and RLE
-    // compresses a per-file constant to nothing). Value tuples are
-    // base64-framed (values may hold commas/quotes; base64's alphabet
-    // cannot collide with the manifest's regex parsing), columns joined
-    // by \u0001, NULL as a \u0000 marker.
-    val partsJson = parts.map { case (cols, vals) =>
-      require(vals.length == files.length,
-        s"pvals/files length mismatch: ${vals.length} != ${files.length}")
-      val encoded = vals.map { tuple =>
-        require(tuple.length == cols.length,
-          s"partition tuple arity ${tuple.length} != ${cols.length}")
-        tuple.foreach(_.foreach(s => require(
-          !s.contains(PartNull) && !s.contains(PartSep) &&
-            (s == PartUnknown || !s.contains(PartUnknown)),
-          "partition values may not contain \\u0000/\\u0001/\\u0002")))
-        Base64.getEncoder.encodeToString(
-          tuple.map(_.getOrElse(PartNull)).mkString(PartSep)
-            .getBytes(UTF_8))
-      }
-      s""","pcols":[${cols.map(c => "\"" + c + "\"").mkString(",")}]""" +
-        s""","pvals":[${encoded.map(e => "\"" + e + "\"").mkString(",")}]"""
-    }.getOrElse("")
-    // HIDDEN-PARTITIONING transform specs, parallel to pcols (Iceberg
-    // partition transforms): recorded values are TRANSFORM-space, and
-    // readers map source-column predicates through the spec. Omitted
-    // for all-identity tables — manifests stay byte-identical.
-    val ptransJson =
-      if (!ptrans.exists(_ != "id")) ""
-      else {
-        require(parts.exists(_._1.length == ptrans.length),
-          s"ptrans arity ${ptrans.length} != pcols arity " +
-            s"${parts.map(_._1.length).getOrElse(0)}")
-        s""","ptrans":[${ptrans.map(t => "\"" + t + "\"").mkString(",")}]"""
-      }
-    val delsJson =
-      if (dels.isEmpty) ""
-      else s""","dels":[${dels.map(f => "\"" + f + "\"").mkString(",")}]""" +
-        s""","dirty":[${dirty.map(f => "\"" + f + "\"").mkString(",")}]""" +
-        s""","ndel":$ndel"""
-    // COLUMN-ID RENAME epochs (Iceberg field IDs, flattened onto the
-    // add-column-only invariant: a column's SCHEMA POSITION is its
-    // stable id — positions never shift because evolution only
-    // appends). `epochs` lists each CLOSED rename epoch's full name
-    // list; `sepoch` says which epoch each file's columns were written
-    // under (epochs.length = the open epoch = current schema names).
-    // Readers resolve a file's physical column names by position
-    // through its epoch — rename rewrites ZERO data bytes.
-    val epochsJson =
-      if (epochs.isEmpty) ""
-      else {
-        require(sepoch.length == files.length,
-          s"sepoch/files length mismatch: ${sepoch.length} != " +
-            s"${files.length}")
-        require(sepoch.forall(e => e >= 0 && e <= epochs.length),
-          s"sepoch out of range [0, ${epochs.length}]")
-        epochs.foreach(_.foreach(n => require(
-          !n.contains(PartSep) && !n.contains("\"") && !n.contains("\\"),
-          s"epoch column name '$n' would corrupt the manifest")))
-        s""","epochs":[${epochs.map(e =>
-          "\"" + Base64.getEncoder.encodeToString(
-            e.mkString(PartSep).getBytes(UTF_8)) + "\"").mkString(",")}]""" +
-          s""","sepoch":[${sepoch.mkString(",")}]"""
-      }
-    val dcJson = if (dataChange.value) "" else ""","dataChange":false"""
-    val json = s"""{"version":$v,"action":"$action","ts":${clock.value()}""" +
-      dcJson + s""","files":[""" +
-      files.map(f => "\"" + f + "\"").mkString(",") + "]" + statsJson +
-      xstatsJson + nullsJson + rowsJson + sizesJson + partsJson +
-      ptransJson + delsJson + epochsJson + schemaJson + "}"
-    casPublish(dir, v, json)
+    publishManifest(dir, v, action, probeTiers(dir, Manifest(files = files,
+      stats = stats, nulls = nulls,
+      pcols = parts.map(_._1).getOrElse(Nil), pvals = parts.map(_._2),
+      ptrans = ptrans, dels = dels, dirty = dirty, ndel = ndel,
+      epochs = epochs, sepoch = if (epochs.isEmpty) None else Some(sepoch),
+      schema = schema), carried))
   }
+
+  /** `m` with its unrecorded ROWS and SIZES tiers filled per file: what
+    * `carried` recorded for the file first, then a footer read / status
+    * call. A file that cannot answer leaves the tier unrecorded. */
+  private def probeTiers(dir: String, m: Manifest,
+                         carried: Manifest = Manifest()): Manifest = {
+    def tier(rec: Option[Seq[Long]], known: Option[Seq[Long]],
+             probe: String => Option[Long]) = rec.orElse {
+      val byFile = known.fold(Map.empty[String, Long])(
+        carried.files.zip(_).toMap)
+      val xs = m.files.map(f => byFile.get(f).orElse(probe(f)))
+      if (xs.forall(_.isDefined)) Some(xs.flatten) else None
+    }
+    m.copy(rows = tier(m.rows, carried.rows, footerRows(dir, _)),
+      sizes = tier(m.sizes, carried.sizes, fileLen(dir, _)))
+  }
+
+  /** CAS-publish `m` as version `v`'s full manifest, [[stamp]]ed. */
+  private def publishManifest(dir: String, v: Int, action: String,
+                              m: Manifest): Unit =
+    casPublish(dir, v, LogCodec.render(stamp(v, action, m)))
+
+  /** `m` as version `v`: its action, the commit clock and the scoped
+    * [[dataChange]] bit. */
+  private def stamp(v: Int, action: String, m: Manifest): Manifest =
+    m.copy(version = v, action = action, ts = Some(clock.value()),
+      dataChange = dataChange.value)
 
   /** The commit point shared by full and SEGMENTED manifests. PER-WRITER
     * tmp name: two writers racing the same version must not share a
@@ -338,246 +197,95 @@ object SnapshotTable {
       Some(p.getFileSystem(hadoopConf()).getFileStatus(p).getLen)
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  private val FilesRe = """"files":\[([^\]]*)\]""".r.unanchored
-  private val MinsRe = """"mins":\[([^\]]*)\]""".r.unanchored
-  private val MaxsRe = """"maxs":\[([^\]]*)\]""".r.unanchored
-  private val RowsRe = """"rows":\[([^\]]*)\]""".r.unanchored
-  private val SizesRe = """"sizes":\[([^\]]*)\]""".r.unanchored
-  private val XColsRe = """"xcols":\[([^\]]*)\]""".r.unanchored
-  private val NColsRe = """"ncols":\[([^\]]*)\]""".r.unanchored
-  private def nullsRe(i: Int) =
-    (""""nulls""" + i + """":\[([^\]]*)\]""").r.unanchored
+  /** One decoded version: the manifest file's (mtime, length) stamp,
+    * the segment names a manifest list references (empty for a full
+    * manifest) and the version assembled as one [[Manifest]]. */
+  private final case class Loaded(mtime: Long, len: Long,
+                                  segments: Seq[String], manifest: Manifest)
 
-  /** Per-file NULL COUNTS per stats column at `v`, aligned with
-    * [[readManifest]]'s file order; empty for manifests that predate
-    * the tier (readers then decline null-predicate pruning). */
-  private[graft] def readNullCounts(dir: String, v: Int)
-      : Map[String, Seq[Long]] = {
-    val json = manifestJson(dir, v)
-    json match {
-      case NColsRe(list) if list.nonEmpty =>
-        list.split(",").toSeq
-          .map(_.stripPrefix("\"").stripSuffix("\"")).zipWithIndex
-          .flatMap { case (c, i) =>
-            nullsRe(i).findFirstMatchIn(json)
-              .filter(_.group(1).nonEmpty)
-              .map(m => c -> m.group(1).split(",").map(_.toLong).toSeq)
-          }.toMap
-      case _ => Map.empty
-    }
-  }
-  private val PColsRe = """"pcols":\[([^\]]*)\]""".r.unanchored
-  private val PValsRe = """"pvals":\[([^\]]*)\]""".r.unanchored
-  private val DelsRe = """"dels":\[([^\]]*)\]""".r.unanchored
-  private val DirtyRe = """"dirty":\[([^\]]*)\]""".r.unanchored
-  private val NdelRe = """"ndel":(\d+)""".r.unanchored
-
-  /** The MERGE-ON-READ delete-sidecar files in force at `v` (relative
-    * paths; empty when the version carries none — every scan then
-    * stays on the plain path). */
-  private[graft] def readDeletes(dir: String, v: Int): Seq[String] =
-    manifestJson(dir, v) match {
-      case DelsRe(list) if list.nonEmpty =>
-        list.split(",").toSeq.map(_.stripPrefix("\"").stripSuffix("\""))
-      case _ => Seq.empty
-    }
-
-  /** The data files at `v` with at least one positional delete — the
-    * only files whose scan pays the anti-join. */
-  private[graft] def readDirty(dir: String, v: Int): Seq[String] =
-    manifestJson(dir, v) match {
-      case DirtyRe(list) if list.nonEmpty =>
-        list.split(",").toSeq.map(_.stripPrefix("\"").stripSuffix("\""))
-      case _ => Seq.empty
-    }
-
-  /** Live positionally-deleted row count at `v` (keeps manifest
-    * count(*) answers exact on merge-on-read tables). */
-  private[graft] def readNdel(dir: String, v: Int): Long =
-    manifestJson(dir, v) match {
-      case NdelRe(n) => n.toLong
-      case _ => 0L
-    }
-  private def xMinsRe(i: Int) =
-    (""""xmins""" + i + """":\[([^\]]*)\]""").r.unanchored
-  private def xMaxsRe(i: Int) =
-    (""""xmaxs""" + i + """":\[([^\]]*)\]""").r.unanchored
-  private val StatsColRe = """"stats_col":"([^"]*)"""".r.unanchored
-  private val SchemaRe = """"schema_b64":"([^"]*)"""".r.unanchored
-
-  /** Small (mtime, length)-validated LRU over raw manifest bytes: one
+  /** Small (mtime, length)-validated LRU over DECODED manifests: one
     * PLANNING pass consults the same manifest many times (file list,
-    * stats, partition values, null counts, row counts each re-read it)
-    * — at 10^6 files that is re-reading a ~100 MB JSON five-plus times
-    * per query. Manifests are immutable once CAS-published, so the
+    * stats, partition values, null counts, row counts), and each of
+    * those is a field access on the value decoded once here — at 10^6
+    * files re-parsing a ~100 MB JSON per reader would dominate
+    * planning. Manifests are immutable once CAS-published, so the
     * validation stamp only exists for vacuumed files (entry dies with
     * the file) and tests that rewrite a manifest in place (stamp
     * changes → reload). Bounded at 64 entries; thread-safe via the
     * map's own lock (the driver-side metadata path, never per-row). */
   private val manifestCache =
-    new java.util.LinkedHashMap[String, (Long, Long, String)](
-      16, 0.75f, true) {
+    new java.util.LinkedHashMap[String, Loaded](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Long, Long, String)]): Boolean =
-        size() > 64
+          e: java.util.Map.Entry[String, Loaded]): Boolean = size() > 64
     }
 
-  private def manifestJson(dir: String, v: Int): String = {
+  private def loaded(dir: String, v: Int): Loaded = {
     val f = manifestFile(dir, v)
     val key = f.getAbsolutePath
     val (mtime, len) = (f.lastModified(), f.length())
+    def read(file: File) = new String(Files.readAllBytes(file.toPath), UTF_8)
     manifestCache.synchronized {
       manifestCache.get(key) match {
-        case (m, l, json) if m == mtime && l == len => json
+        case l: Loaded if l.mtime == mtime && l.len == len => l
         case _ =>
-          val raw = new String(Files.readAllBytes(f.toPath), UTF_8)
+          val what = s"manifest v$v in $dir"
           // a SEGMENTED manifest (the O(delta)-per-commit append path)
-          // assembles into the legacy full shape ONCE here; every
-          // regex reader downstream is storage-agnostic, and the LRU
-          // caches the assembled view (segments are immutable)
-          val json = raw match {
-            case SegmentsRe(list) if list.nonEmpty =>
-              assembleSegments(dir, raw,
-                list.split(",").toSeq
-                  .map(_.stripPrefix("\"").stripSuffix("\"")))
-            case _ => raw
+          // assembles ONCE here; every reader downstream is
+          // storage-agnostic, and the LRU caches the assembled version
+          // (segments are immutable)
+          val l = LogCodec.decode(read(f), what) match {
+            case Right(m) => Loaded(mtime, len, Nil, m)
+            case Left(list) => Loaded(mtime, len, list.segments,
+              list.assemble(list.segments.map(n => LogCodec.decodeSegment(
+                read(new File(logDir(dir), n)), s"segment $n of $what")),
+                what))
           }
-          manifestCache.put(key, (mtime, len, json))
-          json
+          manifestCache.put(key, l)
+          l
       }
     }
   }
 
-  private val SegmentsRe = """"segments":\[([^\]]*)\]""".r.unanchored
+  /** Version `v` of the table at `dir`, decoded (and assembled from its
+    * segments) once. */
+  private[io] def manifest(dir: String, v: Int): Manifest =
+    loaded(dir, v).manifest
 
-  /** The segment files a (raw) manifest-list references; empty for a
-    * full manifest. Reads the RAW bytes (never the assembled cache) —
-    * vacuum's segment-liveness sweep depends on it. */
-  private[io] def readSegments(dir: String, v: Int): Seq[String] = {
-    val f = manifestFile(dir, v)
-    if (!f.exists()) return Seq.empty
-    new String(Files.readAllBytes(f.toPath), UTF_8) match {
-      case SegmentsRe(list) if list.nonEmpty =>
-        list.split(",").toSeq.map(_.stripPrefix("\"").stripSuffix("\""))
-      case _ => Seq.empty
-    }
-  }
+  /** Per-file NULL COUNTS per stats column at `v`, aligned with
+    * [[readManifest]]'s file order; empty for manifests that predate
+    * the tier (readers then decline null-predicate pruning). */
+  private[graft] def readNullCounts(dir: String, v: Int)
+      : Map[String, Seq[Long]] = manifest(dir, v).nulls.toMap
 
-  /** One raw `"key":[...]` array body out of a json fragment. */
-  private def rawArr(json: String, k: String): Option[String] =
-    ("\"" + k + "\":\\[([^\\]]*)\\]").r
-      .findFirstMatchIn(json).map(_.group(1))
-  private def rawStr(json: String, k: String): Option[String] =
-    ("\"" + k + "\":\"([^\"]*)\"").r
-      .findFirstMatchIn(json).map(_.group(1))
+  /** The MERGE-ON-READ delete-sidecar files in force at `v` (relative
+    * paths; empty when the version carries none — every scan then
+    * stays on the plain path). */
+  private[graft] def readDeletes(dir: String, v: Int): Seq[String] =
+    manifest(dir, v).dels
 
-  /** Concatenate the per-file arrays of every referenced segment into
-    * ONE legacy-shaped manifest json (global fields — action, ts,
-    * dataChange, schema, MoR delete state — come from the list
-    * itself). A per-file tier survives assembly only when EVERY
-    * segment records it (decline-never-guess — readers then skip that
-    * metadata answer, exactly as for a legacy manifest without the
-    * tier); column-NAME fields must be identical across segments (the
-    * segmented writer enforces it; a mismatch drops the tier). */
-  private def assembleSegments(dir: String, listJson: String,
-                               segs: Seq[String]): String = {
-    val bodies = segs.map { n =>
-      new String(Files.readAllBytes(
-        new File(logDir(dir), n).toPath), UTF_8)
-    }
-    def concat(k: String): Option[String] = {
-      val parts = bodies.map(rawArr(_, k))
-      if (parts.exists(_.isEmpty)) None
-      else Some(parts.flatten.filter(_.nonEmpty).mkString(","))
-    }
-    def same(k: String, arr: Boolean): Option[String] = {
-      val vs = bodies.map(b => if (arr) rawArr(b, k) else rawStr(b, k))
-      if (vs.exists(_.isEmpty) || vs.distinct.length != 1) None
-      else vs.head
-    }
-    val sb = new StringBuilder
-    sb ++= s"""{"version":${rawStr(listJson, "version").orElse(
-      ("\"version\":(\\d+)".r.findFirstMatchIn(listJson).map(_.group(1)))
-    ).getOrElse("0")}"""
-    rawStr(listJson, "action").foreach(a => sb ++= s""","action":"$a"""")
-    """"ts":(\d+)""".r.findFirstMatchIn(listJson)
-      .foreach(m => sb ++= s""","ts":${m.group(1)}""")
-    if (listJson.contains(""""dataChange":false"""))
-      sb ++= ""","dataChange":false"""
-    sb ++= s""","files":[${concat("files").getOrElse(
-      throw new IllegalStateException(
-        s"corrupt segmented manifest in $dir: a segment lost its file " +
-          s"list (${segs.mkString(",")})"))}]"""
-    for {
-      c <- same("stats_col", arr = false)
-      mins <- concat("mins"); maxs <- concat("maxs")
-    } {
-      sb ++= s""","stats_col":"$c","mins":[$mins],"maxs":[$maxs]"""
-      same("xcols", arr = true).foreach { xc =>
-        val n = if (xc.isEmpty) 0 else xc.split(",").length
-        val xs = (0 until n).map(i =>
-          (concat(s"xmins$i"), concat(s"xmaxs$i")))
-        if (xs.forall(p => p._1.isDefined && p._2.isDefined)) {
-          sb ++= s""","xcols":[$xc]"""
-          xs.zipWithIndex.foreach { case ((mn, mx), i) =>
-            sb ++= s""","xmins$i":[${mn.get}],"xmaxs$i":[${mx.get}]"""
-          }
-        }
-      }
-      same("ncols", arr = true).foreach { nc =>
-        val n = if (nc.isEmpty) 0 else nc.split(",").length
-        val ns = (0 until n).map(i => concat(s"nulls$i"))
-        if (ns.forall(_.isDefined)) {
-          sb ++= s""","ncols":[$nc]"""
-          ns.zipWithIndex.foreach { case (x, i) =>
-            sb ++= s""","nulls$i":[${x.get}]"""
-          }
-        }
-      }
-    }
-    concat("rows").foreach(r => sb ++= s""","rows":[$r]""")
-    concat("sizes").foreach(r => sb ++= s""","sizes":[$r]""")
-    for (pc <- same("pcols", arr = true); pv <- concat("pvals")) {
-      sb ++= s""","pcols":[$pc],"pvals":[$pv]"""
-      same("ptrans", arr = true).foreach(t => sb ++= s""","ptrans":[$t]""")
-    }
-    for (ds <- rawArr(listJson, "dels"); dy <- rawArr(listJson, "dirty");
-         nd <- """"ndel":(\d+)""".r.findFirstMatchIn(listJson)
-           .map(_.group(1)))
-      sb ++= s""","dels":[$ds],"dirty":[$dy],"ndel":$nd"""
-    // rename epochs are CORRECTNESS-bearing (they name each file's
-    // physical columns): a chain that records them but cannot assemble
-    // the per-file indexes is corrupt — refuse, never tier-drop
-    rawArr(listJson, "epochs").foreach { eps =>
-      val sep = concat("sepoch").getOrElse(
-        throw new IllegalStateException(
-          s"corrupt segmented manifest in $dir: rename epochs " +
-            s"recorded but a segment lost its sepoch array " +
-            s"(${segs.mkString(",")})"))
-      sb ++= s""","epochs":[$eps],"sepoch":[$sep]"""
-    }
-    rawStr(listJson, "schema_b64").foreach(b =>
-      sb ++= s""","schema_b64":"$b"""")
-    sb += '}'
-    sb.toString
-  }
+  /** The data files at `v` with at least one positional delete — the
+    * only files whose scan pays the anti-join. */
+  private[graft] def readDirty(dir: String, v: Int): Seq[String] =
+    manifest(dir, v).dirty
+
+  /** Live positionally-deleted row count at `v` (keeps manifest
+    * count(*) answers exact on merge-on-read tables). */
+  private[graft] def readNdel(dir: String, v: Int): Long =
+    manifest(dir, v).ndel
+
+  /** The segment files a manifest list references; empty for a full
+    * manifest (and for a version vacuum already removed) — vacuum's
+    * segment-liveness sweep depends on it. */
+  private[io] def readSegments(dir: String, v: Int): Seq[String] =
+    if (!manifestFile(dir, v).exists()) Seq.empty
+    else loaded(dir, v).segments
 
   private[io] def readManifest(dir: String, v: Int): Seq[String] =
-    manifestJson(dir, v) match {
-      case FilesRe(list) =>
-        if (list.isEmpty) Seq.empty
-        else list.split(",").toSeq.map(_.stripPrefix("\"").stripSuffix("\""))
-      case json => throw new IllegalStateException(
-        s"corrupt manifest v$v in $dir: $json")
-    }
+    manifest(dir, v).files
 
   /** The table schema recorded at `v`; None on a pre-schema manifest. */
   def readSchema(dir: String, v: Int): Option[StructType] =
-    manifestJson(dir, v) match {
-      case SchemaRe(b64) => Some(DataType.fromJson(
-        new String(Base64.getDecoder.decode(b64), UTF_8)).asInstanceOf[StructType])
-      case _ => None
-    }
+    manifest(dir, v).schema
 
   /** The CLOSED rename-epoch name lists recorded at `v` (empty when no
     * column was ever renamed — the overwhelmingly common case pays
@@ -585,29 +293,22 @@ object SnapshotTable {
     * schema position = field id) that files of epoch `e` were written
     * under; `epochs.length` is the OPEN epoch (current schema names). */
   private[graft] def readEpochs(dir: String, v: Int): Seq[Seq[String]] =
-    rawArr(manifestJson(dir, v), "epochs") match {
-      case Some(list) if list.nonEmpty =>
-        list.split(",").toSeq.map(b => new String(
-          Base64.getDecoder.decode(b.stripPrefix("\"").stripSuffix("\"")),
-          UTF_8).split(PartSep, -1).toSeq)
-      case _ => Nil
-    }
+    manifest(dir, v).epochs
 
   /** Per-file schema-epoch indexes, aligned with [[readManifest]]'s
     * file list. Present exactly when [[readEpochs]] is non-empty —
     * epochs are correctness-bearing (they name the physical columns),
     * so a manifest with epochs but no per-file indexes is corrupt and
     * refuses loudly rather than mis-reading history. */
-  private[graft] def readSepoch(dir: String, v: Int): Seq[Int] =
-    rawArr(manifestJson(dir, v), "sepoch") match {
-      case Some(list) if list.nonEmpty =>
-        list.split(",").toSeq.map(_.trim.toInt)
-      case _ =>
-        if (readEpochs(dir, v).isEmpty) Nil
-        else throw new IllegalStateException(
-          s"corrupt manifest v$v in $dir: rename epochs recorded " +
-            "without per-file sepoch indexes")
+  private[graft] def readSepoch(dir: String, v: Int): Seq[Int] = {
+    val m = manifest(dir, v)
+    m.sepoch.getOrElse {
+      if (m.epochs.isEmpty) Nil
+      else throw new IllegalStateException(
+        s"corrupt manifest v$v in $dir: rename epochs recorded " +
+          "without per-file sepoch indexes")
     }
+  }
 
   /** The physical column names files of epoch `e` were written under,
     * resolved BY POSITION against the current schema `cur`: positions
@@ -636,22 +337,10 @@ object SnapshotTable {
     }
   }
 
-  /** The stats column name recorded at `v`, if any. */
-  private def readStatsCol(dir: String, v: Int): Option[String] =
-    manifestJson(dir, v) match {
-      case StatsColRe(c) => Some(c)
-      case _ => None
-    }
-
-  private val TsRe = """"ts":(\d+)""".r.unanchored
-
   /** The commit wall-clock (epoch millis) recorded at `v`; None on a
     * manifest that predates timestamped commits. */
   def commitTimestamp(dir: String, v: Int): Option[Long] =
-    manifestJson(dir, v) match {
-      case TsRe(t) => Some(t.toLong)
-      case _ => None
-    }
+    manifest(dir, v).ts
 
   /** `TIMESTAMP AS OF` resolution: the LATEST version whose recorded
     * commit timestamp is <= `tsMillis` (the Delta/Iceberg contract — a
@@ -720,38 +409,18 @@ object SnapshotTable {
   /** The stats column recorded at `v`, if the version carries min/max
     * file stats (the q154 skipping tier). Multi-stats manifests answer
     * their FIRST (range-cluster) column here. */
-  def statsColumn(dir: String, v: Int): Option[String] = readStatsCol(dir, v)
+  def statsColumn(dir: String, v: Int): Option[String] =
+    manifest(dir, v).stats.headOption.map(_._1)
 
   /** EVERY stats column recorded at `v`, primary first. */
   def statsColumns(dir: String, v: Int): Seq[String] =
-    readStatsCol(dir, v).toSeq ++ (manifestJson(dir, v) match {
-      case XColsRe(list) if list.nonEmpty =>
-        list.split(",").toSeq.map(_.stripPrefix("\"").stripSuffix("\""))
-      case _ => Nil
-    })
+    manifest(dir, v).stats.map(_._1)
 
   /** Per-file (min, max) of EVERY recorded stats column at `v`, primary
     * first, each aligned with [[readManifest]]'s file order. */
   private[graft] def readAllStats(dir: String, v: Int)
-      : Seq[(String, Seq[(Long, Long)])] = {
-    val cols = statsColumns(dir, v)
-    if (cols.isEmpty) Nil
-    else {
-      val json = manifestJson(dir, v)
-      def parse(minsRe: scala.util.matching.Regex,
-                maxsRe: scala.util.matching.Regex): Seq[(Long, Long)] =
-        (json, json) match {
-          case (minsRe(mins), maxsRe(maxs)) if mins.nonEmpty =>
-            mins.split(",").map(_.toLong)
-              .zip(maxs.split(",").map(_.toLong)).toSeq
-          case _ => Seq.empty
-        }
-      val primary = readStats(dir, v).map(cols.head -> _).toSeq
-      primary ++ cols.tail.zipWithIndex.map { case (c, i) =>
-        c -> parse(xMinsRe(i), xMaxsRe(i))
-      }.filter(_._2.nonEmpty)
-    }
-  }
+      : Seq[(String, Seq[(Long, Long)])] =
+    manifest(dir, v).stats.filter(_._2.nonEmpty)
 
   /** The version's manifest file list (table-root-relative paths),
     * stats-pruned to files that MAY intersect `[lo, hi]` on the
@@ -772,21 +441,13 @@ object SnapshotTable {
   /** The hive-style partition columns recorded at `v` (empty for an
     * unpartitioned version). */
   def partitionColumns(dir: String, v: Int): Seq[String] =
-    manifestJson(dir, v) match {
-      case PColsRe(list) if list.nonEmpty =>
-        list.split(",").toSeq.map(_.stripPrefix("\"").stripSuffix("\""))
-      case _ => Nil
-    }
+    manifest(dir, v).pcols
 
   /** HIDDEN-PARTITIONING transform specs at `v`, parallel to
     * [[partitionColumns]] — `"id"`-filled when the manifest predates
     * transforms or partitions by identity (the common case). */
   def readPartTransforms(dir: String, v: Int): Seq[String] =
-    rawArr(manifestJson(dir, v), "ptrans") match {
-      case Some(list) if list.nonEmpty =>
-        list.split(",").toSeq.map(_.stripPrefix("\"").stripSuffix("\""))
-      case _ => partitionColumns(dir, v).map(_ => "id")
-    }
+    manifest(dir, v).transforms
 
   /** The parsed [[PartTransform]]s at `v` (source names from pcols). */
   private[graft] def partTransformsOf(dir: String, v: Int)
@@ -801,19 +462,7 @@ object SnapshotTable {
     * None inside a tuple = NULL partition value. */
   def readPartValues(dir: String, v: Int)
       : Option[Seq[Seq[Option[String]]]] =
-    manifestJson(dir, v) match {
-      case PValsRe(list) =>
-        Some(
-          if (list.isEmpty) Seq.empty
-          else list.split(",").toSeq.map { b64 =>
-            val raw = new String(Base64.getDecoder.decode(
-              b64.stripPrefix("\"").stripSuffix("\"")), UTF_8)
-            // -1: keep trailing empty values ("" is a legal value)
-            raw.split(PartSep, -1).toSeq.map(v =>
-              if (v == PartNull) None else Some(v))
-          })
-      case _ => None
-    }
+    manifest(dir, v).pvals
 
   /** [[manifestFiles]] pruned on EVERY filtered stats column at once:
     * a file survives only if, for each (col → [lo, hi]) bound with
@@ -830,11 +479,12 @@ object SnapshotTable {
                           partRange: Map[String,
                             (Option[String], Option[String])] =
                             Map.empty): Seq[String] = {
-    val files = readManifest(dir, v)
+    val m = manifest(dir, v)
+    val files = m.files
     if (bounds.isEmpty && partKeep.isEmpty && nullKeep.isEmpty &&
         partRange.isEmpty)
       return files
-    val tracked = readAllStats(dir, v).toMap
+    val tracked = m.stats.toMap
     val active = bounds.toSeq.flatMap { case (c, b) =>
       tracked.get(c).map(mm => (b, mm))
     }
@@ -842,8 +492,8 @@ object SnapshotTable {
     // IS NOT NULL keeps files with nullCount < rows (all-null files
     // drop); a column without recorded counts — or IS NOT NULL without
     // per-file rows — declines (may-contain stays sound)
-    val ncounts = readNullCounts(dir, v)
-    val rowsRec = readRows(dir, v)
+    val ncounts = m.nulls.toMap
+    val rowsRec = m.rows
     val activeNulls: Seq[(Seq[Long], Boolean)] =
       nullKeep.toSeq.flatMap { case (c, wantNull) =>
         ncounts.get(c).map(ns => (ns, wantNull))
@@ -853,8 +503,8 @@ object SnapshotTable {
     // partition column (constraints on non-partition columns are
     // ignored — may-contain stays sound). Files are value-pure, so
     // this prune is EXACT, not just may-contain.
-    val pcols = partitionColumns(dir, v)
-    val pvals = readPartValues(dir, v)
+    val pcols = m.pcols
+    val pvals = m.pvals
     val activeParts: Seq[(Int, Set[Option[String]])] =
       if (pvals.isEmpty) Nil
       else partKeep.toSeq.flatMap { case (c, keep) =>
@@ -866,7 +516,7 @@ object SnapshotTable {
     // recorded cell value falls inside [lo, hi] under the transform's
     // own ordering; NULL cells drop (a source comparison is never true
     // on NULL rows), UNKNOWN markers survive (may-contain)
-    val ptrans = readPartTransforms(dir, v)
+    val ptrans = m.transforms
     val activeRanges: Seq[(Int, Option[String], Option[String],
         Ordering[String])] =
       if (pvals.isEmpty) Nil
@@ -898,28 +548,15 @@ object SnapshotTable {
   /** Per-file (min, max) of the stats column, aligned with
     * [[readManifest]]'s file order; None when the version carries no
     * stats. */
-  private def readStats(dir: String, v: Int): Option[Seq[(Long, Long)]] = {
-    val json = manifestJson(dir, v)
-    (json, json) match {
-      case (MinsRe(mins), MaxsRe(maxs)) if mins.nonEmpty =>
-        Some(mins.split(",").map(_.toLong)
-          .zip(maxs.split(",").map(_.toLong)).toSeq)
-      case _ => None
-    }
-  }
+  private def readStats(dir: String, v: Int): Option[Seq[(Long, Long)]] =
+    manifest(dir, v).stats.headOption.map(_._2).filter(_.nonEmpty)
 
   /** Per-file row counts recorded at `v`, aligned with
     * [[readManifest]]'s file order; None on a manifest that predates
     * row-count recording. Readers use these for METADATA-ONLY answers
     * (count(*) via the DSv2 aggregate pushdown) — a missing record
     * declines the shortcut, never estimates. */
-  def readRows(dir: String, v: Int): Option[Seq[Long]] =
-    manifestJson(dir, v) match {
-      case RowsRe(rs) =>
-        Some(if (rs.isEmpty) Seq.empty
-             else rs.split(",").toSeq.map(_.toLong))
-      case _ => None
-    }
+  def readRows(dir: String, v: Int): Option[Seq[Long]] = manifest(dir, v).rows
 
   /** Per-file byte sizes recorded at `v`, aligned with
     * [[readManifest]]'s file order; None on a manifest that predates
@@ -927,20 +564,7 @@ object SnapshotTable {
     * splits from these — zero per-file status calls on a size-bearing
     * table. */
   def readSizes(dir: String, v: Int): Option[Seq[Long]] =
-    manifestJson(dir, v) match {
-      case SizesRe(ss) =>
-        Some(if (ss.isEmpty) Seq.empty
-             else ss.split(",").toSeq.map(_.toLong))
-      case _ => None
-    }
-
-  /** rel-path → recorded size map at `v` (empty for a pre-size
-    * manifest) — the carry source every commit path reuses so carried
-    * files never re-stat. */
-  private def sizeMap(dir: String, v: Int): Map[String, Long] =
-    readSizes(dir, v)
-      .map(ss => readManifest(dir, v).zip(ss).toMap)
-      .getOrElse(Map.empty)
+    manifest(dir, v).sizes
 
   /** Manifest-only `count(*)` at `v` — the sum of recorded per-file row
     * counts; None when any file predates row-count recording (decline,
@@ -956,7 +580,7 @@ object SnapshotTable {
     * are meaningless); requires row counts AND stats to be recorded and
     * aligned, and at least one non-empty file — otherwise None. */
   def manifestMinMax(dir: String, v: Int): Option[(String, Long, Long)] =
-    readStatsCol(dir, v).flatMap(c =>
+    statsColumn(dir, v).flatMap(c =>
       manifestMinMaxAll(dir, v).get(c).map { case (lo, hi) => (c, lo, hi) })
 
   /** Manifest-only global (min, max) per recorded stats column at `v`
@@ -1173,6 +797,12 @@ object SnapshotTable {
     -1 // unreachable
   }
 
+  /** The version a commit onto `prev` builds on — empty for a fresh
+    * table or an overwrite. */
+  private def baseManifest(dir: String, prev: Seq[Int],
+                           overwrite: Boolean): Manifest =
+    if (overwrite || prev.isEmpty) Manifest() else manifest(dir, prev.last)
+
   private def commitStagedOnce(dir: String, relFiles: Seq[String],
                                writeSchema: StructType,
                                overwrite: Boolean,
@@ -1183,9 +813,9 @@ object SnapshotTable {
                                nulls: Seq[(String, Seq[Long])]): Int = {
     val prev = versions(dir)
     val v = prev.lastOption.getOrElse(0) + 1
-    val base =
-      if (overwrite || prev.isEmpty) Seq.empty
-      else readManifest(dir, prev.last)
+    val pm = baseManifest(dir, prev, overwrite)
+    val base = pm.files
+    val prevOrder = pm.stats.map(_._1).zipWithIndex.toMap
     // partitioned-table append protocol for externally staged writers
     // (DSv2 INSERT, streaming sink): the writer must declare the SAME
     // partition columns and per-file value tuples (its tasks route
@@ -1193,7 +823,7 @@ object SnapshotTable {
     // onto a partitioned table would half-state the manifest and is
     // refused toward the partition-aware paths
     if (base.nonEmpty) {
-      val prevP = partitionColumns(dir, prev.last)
+      val prevP = pm.pcols
       require(prevP == parts.map(_._1).getOrElse(Nil),
         s"append partitioned by " +
           s"[${parts.map(_._1).getOrElse(Nil).mkString(",")}] onto " +
@@ -1208,7 +838,7 @@ object SnapshotTable {
           s"pvals/files length mismatch: ${vals.length} != ${relFiles.length}")
         val carried: Seq[Seq[Option[String]]] =
           if (base.isEmpty) Seq.empty
-          else readPartValues(dir, prev.last).getOrElse(
+          else pm.pvals.getOrElse(
             throw new IllegalStateException(
               s"version ${prev.last} declares partition columns but " +
                 "records no values"))
@@ -1218,15 +848,14 @@ object SnapshotTable {
     // base tracks (a column silently dropped would half-state the
     // manifest and disable its pruning without a trace)
     if (base.nonEmpty && stats.nonEmpty) {
-      val prevCols = statsColumns(dir, prev.last).toSet
+      val prevCols = prevOrder.keySet
       val newCols = stats.map(_._1).toSet
       require(prevCols.subsetOf(newCols),
         s"append tracks stats for ${newCols.mkString(",")} but version " +
           s"${prev.last} tracks ${prevCols.mkString(",")} — cover every " +
           "base column or commit stats-free")
     }
-    val prevAll: Map[String, Seq[(Long, Long)]] =
-      if (base.isEmpty) Map.empty else readAllStats(dir, prev.last).toMap
+    val prevAll = pm.stats.toMap
     val fullStats = stats.map { case (c, mm) =>
       require(mm.length == relFiles.length,
         s"stats/files length mismatch: ${mm.length} != ${relFiles.length}")
@@ -1240,12 +869,7 @@ object SnapshotTable {
     // keep the base's column order on append (the primary — compact's
     // range-cluster column — must not flip with a writer's option order)
     val orderedStats =
-      if (base.isEmpty) fullStats
-      else {
-        val prevOrder = statsColumns(dir, prev.last).zipWithIndex.toMap
-        fullStats.sortBy { case (c, _) =>
-          prevOrder.getOrElse(c, Int.MaxValue) }
-      }
+      fullStats.sortBy { case (c, _) => prevOrder.getOrElse(c, Int.MaxValue) }
     txn.foreach { case (qid, _) =>
       require(qid.matches("[A-Za-z0-9_-]+"),
         s"txn query id '$qid' would corrupt the manifest action field") }
@@ -1255,23 +879,16 @@ object SnapshotTable {
     // the STREAMING sink's per-epoch commits are the heaviest
     // full-manifest-rewrite offenders (one commit per epoch, forever)
     if (base.nonEmpty && !overwrite && {
-      val prevOrder = statsColumns(dir, prev.last).zipWithIndex.toMap
       val newStats = stats.sortBy { case (c, _) =>
         prevOrder.getOrElse(c, Int.MaxValue) }
-      val prevNullsCols = readNullCounts(dir, prev.last).keySet
+      val prevNullsCols = pm.nulls.map(_._1).toSet
       trySegmentedAppend(dir, prev, v, action, relFiles, newStats,
         nulls.filter(n => prevNullsCols.contains(n._1)), parts,
         evolvedSchemaFrom(dir, prev, writeSchema, overwrite))
     }) return v
-    val carriedRows =
-      if (base.isEmpty) Map.empty[String, Long]
-      else readRows(dir, prev.last)
-        .map(rs => readManifest(dir, prev.last).zip(rs).toMap)
-        .getOrElse(Map.empty)
     // null counts: carried by column like stats; a column the base
     // never recorded declines rather than half-state
-    val prevNulls: Map[String, Seq[Long]] =
-      if (base.isEmpty) Map.empty else readNullCounts(dir, prev.last)
+    val prevNulls = pm.nulls.toMap
     val fullNulls: Seq[(String, Seq[Long])] = nulls.flatMap {
       case (c, ns) =>
         val carriedNs: Option[Seq[Long]] =
@@ -1279,7 +896,7 @@ object SnapshotTable {
         carriedNs.map(cs => (c, cs ++ ns))
     }
     if (base.nonEmpty)
-      require(readPartTransforms(dir, prev.last).forall(_ == "id"),
+      require(pm.transforms.forall(_ == "id"),
         "staged/DSv2 writes onto a hidden-partition-transform table " +
           "are not supported — append through " +
           "commitPartitionedTransforms (the writer must derive " +
@@ -1289,33 +906,29 @@ object SnapshotTable {
       else carryEpochs(dir, prev.last, base ++ relFiles)
     writeManifest(dir, v, action, base ++ relFiles, orderedStats,
       evolvedSchemaFrom(dir, prev, writeSchema, overwrite),
-      knownRows = carriedRows,
-      knownSizes = if (base.isEmpty) Map.empty
-                   else sizeMap(dir, prev.last),
-      parts = fullParts, nulls = fullNulls, epochs = eps, sepoch = sep)
+      carried = pm, parts = fullParts, nulls = fullNulls, epochs = eps,
+      sepoch = sep)
     v
   }
 
-  private val TxnRe =
-    """"action":"[a-z]+@txn([A-Za-z0-9_-]+):epoch(-?\d+)"""".r.unanchored
+  // the action string's own txn grammar: '<kind>@txn<queryId>:epoch<e>'
+  private val TxnRe = """[a-z]+@txn([A-Za-z0-9_-]+):epoch(-?\d+)""".r
   // manifests written before the (queryId, epoch) ledger keyed actions
   // as 'append@epoch<e>' with no query id; they parse to a sentinel id
   // so a pre-upgrade table's epochs still dedup a replayed micro-batch
   // instead of double-appending (the ledger must never read as empty
   // just because the log predates the format)
   private[io] val LegacyTxnQueryId = "<legacy>"
-  private val LegacyTxnRe =
-    """"action":"[a-z]+@epoch(-?\d+)"""".r.unanchored
-  private val ActionRe = """"action":"([a-z]+)""".r.unanchored
+  private val LegacyTxnRe = """[a-z]+@epoch(-?\d+)""".r
 
   /** The commit kind recorded at `v` — "append" or "overwrite" (epoch
     * suffixes stripped). The streaming SOURCE branches on this: append
     * versions feed incrementally, anything else fails loudly. */
   def readAction(dir: String, v: Int): String =
-    manifestJson(dir, v) match {
-      case ActionRe(a) => a
-      case json => throw new IllegalStateException(
-        s"corrupt manifest v$v in $dir: $json")
+    manifest(dir, v).action.takeWhile(c => c >= 'a' && c <= 'z') match {
+      case "" => throw new IllegalStateException(
+        s"corrupt manifest v$v in $dir: no action recorded")
+      case a => a
     }
 
   /** Whether version `v` changed the table's logical content — false
@@ -1323,7 +936,7 @@ object SnapshotTable {
     * recorded `dataChange:false`; absent (legacy/normal manifests)
     * means true. */
   def isDataChange(dir: String, v: Int): Boolean =
-    !manifestJson(dir, v).contains(""""dataChange":false""")
+    manifest(dir, v).dataChange
 
   /** Stream epochs already committed to the log BY `queryId` — the
     * exactly-once check for the streaming writer: a replayed
@@ -1348,7 +961,7 @@ object SnapshotTable {
     * actions surface under [[LegacyTxnQueryId]]. */
   def committedTxns(dir: String): Set[(String, Long)] =
     versions(dir).flatMap { v =>
-      manifestJson(dir, v) match {
+      manifest(dir, v).action match {
         case TxnRe(qid, e) => Some((qid, e.toLong))
         case LegacyTxnRe(e) => Some((LegacyTxnQueryId, e.toLong))
         case _ => None
@@ -1677,7 +1290,7 @@ object SnapshotTable {
     * drift, unreadable new-file rows/sizes where the base records
     * them, chain at cap): the caller then takes the full-manifest
     * path. Metadata IO per append becomes O(delta); readers are
-    * storage-agnostic (assembly in [[manifestJson]]). */
+    * storage-agnostic (assembly in [[loaded]]). */
   private def trySegmentedAppend(dir: String, prev: Seq[Int], v: Int,
       action: String,
       newFiles: Seq[String],
@@ -1685,149 +1298,41 @@ object SnapshotTable {
       newNulls: Seq[(String, Seq[Long])],
       newParts: Option[(Seq[String], Seq[Seq[Option[String]]])],
       schema: Option[StructType]): Boolean = {
-    val prevV = prev.last
-    if (statsColumns(dir, prevV) != newStats.map(_._1)) return false
-    if (partitionColumns(dir, prevV) !=
-        newParts.map(_._1).getOrElse(Nil)) return false
+    val pm = manifest(dir, prev.last)
+    if (pm.stats.map(_._1) != newStats.map(_._1)) return false
+    if (pm.pcols != newParts.map(_._1).getOrElse(Nil)) return false
     // nulls tier: the base's recorded columns (in their recorded
     // order) must all be coverable from the new arrays
-    val prevNullCols = manifestJson(dir, prevV) match {
-      case NColsRe(list) if list.nonEmpty =>
-        list.split(",").toSeq.map(_.stripPrefix("\"").stripSuffix("\""))
-      case _ => Nil
-    }
     val newNullsMap = newNulls.toMap
-    if (!prevNullCols.forall(newNullsMap.contains)) return false
+    if (!pm.nulls.forall(n => newNullsMap.contains(n._1))) return false
     // rows/sizes tiers: where the base records them, every new file
     // must answer, else the tier would silently half-state
-    val rowsOpt: Option[Seq[Long]] =
-      if (readRows(dir, prevV).isEmpty) None
-      else {
-        val rs = newFiles.map(f => footerRows(dir, f))
-        if (rs.exists(_.isEmpty)) return false
-        Some(rs.flatten)
-      }
-    val sizesOpt: Option[Seq[Long]] =
-      if (readSizes(dir, prevV).isEmpty) None
-      else {
-        val ss = newFiles.map(f => fileLen(dir, f))
-        if (ss.exists(_.isEmpty)) return false
-        Some(ss.flatten)
-      }
-    val prevSegs = readSegments(dir, prevV)
+    val rows = pm.rows.map(_ => newFiles.map(footerRows(dir, _)))
+    val sizes = pm.sizes.map(_ => newFiles.map(fileLen(dir, _)))
+    if ((rows ++ sizes).exists(_.exists(_.isEmpty))) return false
+    val prevSegs = readSegments(dir, prev.last)
     if (prevSegs.length + 1 > MaxSegments) return false
     // a full prev manifest becomes the chain's first segment (copied —
     // the manifest file itself dies with its version at vacuum, the
     // segment lives by reference-liveness)
     val carriedSegs =
       if (prevSegs.nonEmpty) prevSegs
-      else {
-        val pj = manifestJson(dir, prevV)
-        val sb = new StringBuilder
-        sb ++= s"""{"files":[${rawArr(pj, "files").getOrElse(
-          return false)}]"""
-        for (c <- rawStr(pj, "stats_col"); mn <- rawArr(pj, "mins");
-             mx <- rawArr(pj, "maxs"))
-          sb ++= s""","stats_col":"$c","mins":[$mn],"maxs":[$mx]"""
-        rawArr(pj, "xcols").foreach { xc =>
-          sb ++= s""","xcols":[$xc]"""
-          val n = if (xc.isEmpty) 0 else xc.split(",").length
-          (0 until n).foreach { i =>
-            for (mn <- rawArr(pj, s"xmins$i"); mx <- rawArr(pj, s"xmaxs$i"))
-              sb ++= s""","xmins$i":[$mn],"xmaxs$i":[$mx]"""
-          }
-        }
-        rawArr(pj, "ncols").foreach { nc =>
-          sb ++= s""","ncols":[$nc]"""
-          val n = if (nc.isEmpty) 0 else nc.split(",").length
-          (0 until n).foreach(i => rawArr(pj, s"nulls$i").foreach(x =>
-            sb ++= s""","nulls$i":[$x]"""))
-        }
-        rawArr(pj, "rows").foreach(r => sb ++= s""","rows":[$r]""")
-        rawArr(pj, "sizes").foreach(r => sb ++= s""","sizes":[$r]""")
-        for (pc <- rawArr(pj, "pcols"); pv <- rawArr(pj, "pvals"))
-          sb ++= s""","pcols":[$pc],"pvals":[$pv]"""
-        rawArr(pj, "ptrans").foreach(t => sb ++= s""","ptrans":[$t]""")
-        rawArr(pj, "sepoch").foreach(s => sb ++= s""","sepoch":[$s]""")
-        sb += '}'
-        Seq(writeSegmentFile(dir, sb.toString))
-      }
-    val prevEpochs = rawArr(manifestJson(dir, prevV), "epochs")
-    // the new files' segment, in the exact full-manifest field grammar
-    val sb = new StringBuilder
-    sb ++= s"""{"files":[${newFiles.map(f => "\"" + f + "\"")
-      .mkString(",")}]"""
-    newStats.headOption.foreach { case (c, mm) =>
-      sb ++= s""","stats_col":"$c","mins":[${mm.map(_._1).mkString(",")}]""" +
-        s""","maxs":[${mm.map(_._2).mkString(",")}]"""
-      if (newStats.length > 1) {
-        val extra = newStats.tail
-        sb ++= s""","xcols":[${extra.map(e => "\"" + e._1 + "\"")
-          .mkString(",")}]"""
-        extra.zipWithIndex.foreach { case ((_, mm2), i) =>
-          sb ++= s""","xmins$i":[${mm2.map(_._1).mkString(",")}]""" +
-            s""","xmaxs$i":[${mm2.map(_._2).mkString(",")}]"""
-        }
-      }
-      if (prevNullCols.nonEmpty) {
-        sb ++= s""","ncols":[${prevNullCols.map(n => "\"" + n + "\"")
-          .mkString(",")}]"""
-        prevNullCols.zipWithIndex.foreach { case (nc, i) =>
-          sb ++= s""","nulls$i":[${newNullsMap(nc).mkString(",")}]"""
-        }
-      }
-    }
-    rowsOpt.foreach(rs => sb ++= s""","rows":[${rs.mkString(",")}]""")
-    sizesOpt.foreach(ss => sb ++= s""","sizes":[${ss.mkString(",")}]""")
-    newParts.foreach { case (cols, vals) =>
-      val encoded = vals.map { tuple =>
-        require(tuple.length == cols.length,
-          s"partition tuple arity ${tuple.length} != ${cols.length}")
-        tuple.foreach(_.foreach(s => require(
-          !s.contains(PartNull) && !s.contains(PartSep) &&
-            (s == PartUnknown || !s.contains(PartUnknown)),
-          "partition values may not contain \\u0000/\\u0001/\\u0002")))
-        Base64.getEncoder.encodeToString(
-          tuple.map(_.getOrElse(PartNull)).mkString(PartSep)
-            .getBytes(UTF_8))
-      }
-      sb ++= s""","pcols":[${cols.map(c => "\"" + c + "\"")
-        .mkString(",")}]""" +
-        s""","pvals":[${encoded.map(e => "\"" + e + "\"").mkString(",")}]"""
-      val prevTrans = readPartTransforms(dir, prevV)
-      if (prevTrans.exists(_ != "id"))
-        sb ++= s""","ptrans":[${prevTrans.map(t => "\"" + t + "\"")
-          .mkString(",")}]"""
-    }
-    // renamed table: new files are written at the OPEN epoch
-    prevEpochs.foreach { eps =>
-      val cur = if (eps.isEmpty) 0 else eps.split(",").length
-      sb ++= s""","sepoch":[${newFiles.map(_ => cur).mkString(",")}]"""
-    }
-    sb += '}'
-    val newSeg = writeSegmentFile(dir, sb.toString)
-    // the list: globals only — this is the O(delta) write
-    val dcJson = if (dataChange.value) "" else ""","dataChange":false"""
-    val dels = readDeletes(dir, prevV)
-    val delsJson =
-      if (dels.isEmpty) ""
-      else s""","dels":[${dels.map(f => "\"" + f + "\"").mkString(",")}]""" +
-        s""","dirty":[${readDirty(dir, prevV)
-          .map(f => "\"" + f + "\"").mkString(",")}]""" +
-        s""","ndel":${readNdel(dir, prevV)}"""
-    val schemaJson = schema.map { st =>
-      s""","schema_b64":"${Base64.getEncoder.encodeToString(
-        st.json.getBytes(UTF_8))}""""
-    }.getOrElse("")
-    // epochs are GLOBAL (one name-list table per manifest) — they ride
-    // the list like the schema; per-file sepoch concatenates from the
-    // segments like every other per-file tier
-    val epochsJson = prevEpochs.fold("")(e => s""","epochs":[$e]""")
-    casPublish(dir, v,
-      s"""{"version":$v,"action":"$action","ts":${clock.value()}""" +
-        dcJson + s""","segments":[${(carriedSegs :+ newSeg)
-        .map(s => "\"" + s + "\"").mkString(",")}]""" +
-        delsJson + epochsJson + schemaJson + "}")
+      else Seq(writeSegmentFile(dir, LogCodec.renderSegment(pm)))
+    // the new files' segment; a renamed table's new files are written
+    // at the OPEN epoch
+    val newSeg = writeSegmentFile(dir, LogCodec.renderSegment(Manifest(
+      files = newFiles, stats = newStats,
+      nulls = pm.nulls.map { case (c, _) => c -> newNullsMap(c) },
+      rows = rows.map(_.flatten), sizes = sizes.map(_.flatten),
+      pcols = pm.pcols, pvals = newParts.map(_._2), ptrans = pm.ptrans,
+      sepoch = if (pm.epochs.isEmpty) None
+               else Some(newFiles.map(_ => pm.epochs.length)))))
+    // the list: globals only — this is the O(delta) write. Epochs are
+    // GLOBAL (one name-list table per manifest) and ride the list like
+    // the schema; per-file sepoch concatenates from the segments
+    casPublish(dir, v, LogCodec.render(ManifestList(stamp(v, action,
+      Manifest(dels = pm.dels, dirty = pm.dirty, ndel = pm.ndel,
+        epochs = pm.epochs, schema = schema)), carriedSegs :+ newSeg)))
     true
   }
 
@@ -1850,11 +1355,11 @@ object SnapshotTable {
                                   Seq[Option[String]], Seq[Long])]): Int = {
     val partCols = partTs.map(_.src)
     val ptrans = partTs.map(_.spec)
-    val base =
-      if (overwrite || prev.isEmpty) Seq.empty
-      else readManifest(dir, prev.last)
+    val pm = baseManifest(dir, prev, overwrite)
+    val base = pm.files
+    val prevOrder = pm.stats.map(_._1).zipWithIndex.toMap
     if (base.nonEmpty && statsCols.nonEmpty) {
-      val prevCols = statsColumns(dir, prev.last).toSet
+      val prevCols = prevOrder.keySet
       require(prevCols.subsetOf(statsCols.toSet),
         s"append tracks stats for ${statsCols.mkString(",")} but version " +
           s"${prev.last} tracks ${prevCols.mkString(",")} — cover every " +
@@ -1867,8 +1372,8 @@ object SnapshotTable {
     // spec lacked become the UNKNOWN marker — never prunable, never
     // wrong; a later rewrite re-derives true values). Old data is
     // never rewritten — the point of spec evolution at 100 TB.
-    val prevP = if (base.isEmpty) Nil else partitionColumns(dir, prev.last)
-    val prevT = if (base.isEmpty) Nil else readPartTransforms(dir, prev.last)
+    val prevP = pm.pcols
+    val prevT = pm.transforms
     if (base.nonEmpty && prevP != partCols) {
       require(evolveSpec,
         s"append partitioned by [${partCols.mkString(",")}] onto " +
@@ -1889,14 +1394,8 @@ object SnapshotTable {
           s"version ${prev.last} with [${prevT.mkString(",")}] — " +
           "appends must keep the table's partition transforms; only " +
           "an overwrite may change them")
-    val prevAll: Map[String, Seq[(Long, Long)]] =
-      if (base.isEmpty) Map.empty else readAllStats(dir, prev.last).toMap
-    val ordered =
-      if (base.isEmpty) statsCols
-      else {
-        val prevOrder = statsColumns(dir, prev.last).zipWithIndex.toMap
-        statsCols.sortBy(c => prevOrder.getOrElse(c, Int.MaxValue))
-      }
+    val prevAll = pm.stats.toMap
+    val ordered = statsCols.sortBy(c => prevOrder.getOrElse(c, Int.MaxValue))
     // O(delta) METADATA COMMIT (Iceberg's manifest-list layering,
     // flattened to one level): an append whose column sets match the
     // base writes ONE SEGMENT with the new files' arrays plus a tiny
@@ -1936,7 +1435,7 @@ object SnapshotTable {
         val carried: Seq[Seq[Option[String]]] =
           if (base.isEmpty) Seq.empty
           else if (prevP == partCols)
-            readPartValues(dir, prev.last).getOrElse(
+            pm.pvals.getOrElse(
               throw new IllegalStateException(
                 s"version ${prev.last} declares partition columns but " +
                   "records no values"))
@@ -1946,8 +1445,7 @@ object SnapshotTable {
             // exact values (still prunable), columns it lacked become
             // UNKNOWN (this file survives every prune on them)
             val old: Seq[Seq[Option[String]]] =
-              readPartValues(dir, prev.last)
-                .getOrElse(base.map(_ => Seq.empty[Option[String]]))
+              pm.pvals.getOrElse(base.map(_ => Seq.empty[Option[String]]))
             val oldIdx = prevP.zipWithIndex.toMap
             old.map(t => partCols.map(c =>
               oldIdx.get(c).map(t).getOrElse(unknownPart)))
@@ -1957,37 +1455,26 @@ object SnapshotTable {
     // null counts carry by column: a column the base recorded keeps
     // its tier (fresh files from the same fileMeta pass), one it
     // didn't declines — never half-stated
-    val prevNulls: Map[String, Seq[Long]] =
-      if (base.isEmpty) Map.empty else readNullCounts(dir, prev.last)
+    val prevNulls = pm.nulls.toMap
     val nulls: Seq[(String, Seq[Long])] = ordered.flatMap { c =>
       val i = statIdx(c)
       val carriedNs: Option[Seq[Long]] =
         if (base.isEmpty) Some(Seq.empty) else prevNulls.get(c)
       carriedNs.map(ns => (c, ns ++ written.map(f => meta(f)._3(i))))
     }
-    // carried base files keep their recorded counts — an append never
-    // re-reads the footers of the history it builds on
-    val carriedRows =
-      if (base.isEmpty) Map.empty[String, Long]
-      else readRows(dir, prev.last)
-        .map(rs => readManifest(dir, prev.last).zip(rs).toMap)
-        .getOrElse(Map.empty)
     val (eps, sep) =
       if (base.isEmpty) (Nil, Nil)
       else carryEpochs(dir, prev.last, base ++ written)
     writeManifest(dir, v, if (overwrite) "overwrite" else "append",
       base ++ written, stats, evolvedSchema(dir, prev, df, overwrite),
-      knownRows = carriedRows,
-      knownSizes = if (base.isEmpty) Map.empty
-                   else sizeMap(dir, prev.last),
-      parts = parts, nulls = nulls, epochs = eps, sepoch = sep,
-      ptrans = ptrans,
+      // carried base files keep their recorded counts and sizes — an
+      // append never re-reads the footers of the history it builds on
+      carried = pm, parts = parts, nulls = nulls, epochs = eps,
+      sepoch = sep, ptrans = ptrans,
       // an append touches no existing file: merge-on-read delete
       // state carries verbatim; an overwrite replaces the content and
       // resets it
-      dels = if (base.isEmpty) Nil else readDeletes(dir, prev.last),
-      dirty = if (base.isEmpty) Nil else readDirty(dir, prev.last),
-      ndel = if (base.isEmpty) 0L else readNdel(dir, prev.last))
+      dels = pm.dels, dirty = pm.dirty, ndel = pm.ndel)
     v
   }
 
@@ -2226,12 +1713,13 @@ object SnapshotTable {
     val vs = versions(dir)
     require(vs.nonEmpty, s"no snapshot log at $dir")
     val prevV = vs.last
-    val pcols = partitionColumns(dir, prevV)
+    val pm = manifest(dir, prevV)
+    val pcols = pm.pcols
     partIn.keys.foreach(c => require(pcols.contains(c),
       s"'$c' is not a partition column of v$prevV (have " +
         s"${pcols.mkString(",")})"))
-    val files = readManifest(dir, prevV)
-    val pvals = readPartValues(dir, prevV).getOrElse(
+    val files = pm.files
+    val pvals = pm.pvals.getOrElse(
       throw new IllegalStateException(
         s"version $prevV declares partition columns but records no values"))
     val idx = partIn.map { case (c, xs) =>
@@ -2256,39 +1744,25 @@ object SnapshotTable {
       s"partition delete would empty the table at $dir; use an " +
         "overwrite commit")
     val keepSet = keep.toSet
-    val stats = readAllStats(dir, prevV).map { case (c, mm) =>
-      (c, files.zip(mm).collect { case (f, s) if keepSet(f) => s })
-    }
-    val parts = Some((pcols, files.zip(pvals).collect {
-      case (f, t) if keepSet(f) => t
-    }))
-    val carriedRows = readRows(dir, prevV)
-      .map(rs => files.zip(rs).toMap).getOrElse(Map.empty)
-    val nulls = readNullCounts(dir, prevV).toSeq.map { case (c, ns) =>
-      (c, files.zip(ns).collect { case (f, n) if keepSet(f) => n })
-    }
     // merge-on-read carry: dirty files that survive keep their
     // deletes; dropping a dirty partition re-counts the live
     // tombstones (one metadata-scale job through the active session)
-    val prevDirty = readDirty(dir, prevV)
-    val dirtyNew = prevDirty.filter(keepSet)
-    val delsNew = if (dirtyNew.isEmpty) Nil else readDeletes(dir, prevV)
+    val dirtyNew = pm.dirty.filter(keepSet)
+    val delsNew = if (dirtyNew.isEmpty) Nil else pm.dels
     val ndelNew =
       if (delsNew.isEmpty) 0L
-      else if (dirtyNew == prevDirty) readNdel(dir, prevV)
+      else if (dirtyNew == pm.dirty) pm.ndel
       else {
         import org.apache.spark.sql.functions.col
         SparkSession.active.read
           .parquet(delsNew.map(f => s"$dir/$f"): _*)
           .where(col("file").isin(dirtyNew: _*)).count()
       }
-    val (eps, sep) = carryEpochs(dir, prevV, keep)
-    writeManifest(dir, prevV + 1, "delete", keep, stats,
-      readSchema(dir, prevV), knownRows = carriedRows,
-      knownSizes = sizeMap(dir, prevV), parts = parts, nulls = nulls,
-      dels = delsNew, dirty = dirtyNew, ndel = ndelNew,
-      epochs = eps, sepoch = sep,
-      ptrans = readPartTransforms(dir, prevV))
+    // every other tier, epoch indexes included, keeps the survivors'
+    // recorded values
+    publishManifest(dir, prevV + 1, "delete", probeTiers(dir,
+      pm.retain(keepSet).copy(dels = delsNew, dirty = dirtyNew,
+        ndel = ndelNew)))
     prevV + 1
   }
 
@@ -2417,11 +1891,12 @@ object SnapshotTable {
                       writtenSub: Option[String] = None,
                       newDels: Seq[String] = Nil,
                       newDirty: Seq[String] = Nil): Int = {
-    val files = readManifest(dir, prevV)
+    val pm = manifest(dir, prevV)
+    val files = pm.files
     val untouchedSet = untouched.toSet
-    val prevAll = readAllStats(dir, prevV)
+    val prevAll = pm.stats
     val cols = prevAll.map(_._1)
-    val pcols = partitionColumns(dir, prevV)
+    val pcols = pm.pcols
     val meta: Map[String,
         (Seq[(Long, Long)], Seq[Option[String]], Seq[Long])] =
       if ((cols.isEmpty && pcols.isEmpty) || written.isEmpty) Map.empty
@@ -2462,7 +1937,7 @@ object SnapshotTable {
     val parts: Option[(Seq[String], Seq[Seq[Option[String]]])] =
       if (pcols.isEmpty) None
       else {
-        val carried = files.zip(readPartValues(dir, prevV).getOrElse(
+        val carried = files.zip(pm.pvals.getOrElse(
           throw new IllegalStateException(
             s"version $prevV declares partition columns but records " +
               "no values"))).collect {
@@ -2476,7 +1951,7 @@ object SnapshotTable {
     // null counts: untouched files carry, rewritten files answer from
     // the same fileMeta pass (a zero-row anchor holds zero nulls);
     // columns the previous version never recorded decline
-    val prevNulls = readNullCounts(dir, prevV)
+    val prevNulls = pm.nulls.toMap
     val nulls: Seq[(String, Seq[Long])] = cols.zipWithIndex.flatMap {
       case (c, i) =>
         prevNulls.get(c).map { ns =>
@@ -2485,10 +1960,6 @@ object SnapshotTable {
             meta.get(f).map(_._3(i)).getOrElse(0L)))
         }
     }
-    // extra entries are harmless: knownRows is consulted per manifest
-    // file, and a rewritten file's fresh name is never in the old map
-    val carriedRows = readRows(dir, prevV)
-      .map(rs => files.zip(rs).toMap).getOrElse(Map.empty)
     // MERGE-ON-READ carry: a dirty file that stays carries its deletes;
     // one this commit REWROTE drops out (the rewrite read the logical
     // rows, so its deletes are folded in — the dead positions reference
@@ -2496,15 +1967,14 @@ object SnapshotTable {
     // dirty file remains; the live deleted-row count recomputes only
     // when the dirty set actually changed (one small metadata-scale
     // job), else carries.
-    val prevDels = readDeletes(dir, prevV)
-    val prevDirty = readDirty(dir, prevV)
+    val prevDels = pm.dels
+    val prevDirty = pm.dirty
     val dirtyNew = (prevDirty.filter(untouchedSet) ++ newDirty).distinct
     val delsNew =
       if (dirtyNew.isEmpty) Nil else (prevDels ++ newDels).distinct
     val ndelNew =
       if (delsNew.isEmpty) 0L
-      else if (delsNew == prevDels && dirtyNew == prevDirty)
-        readNdel(dir, prevV)
+      else if (delsNew == prevDels && dirtyNew == prevDirty) pm.ndel
       else {
         import org.apache.spark.sql.functions.col
         spark.read.parquet(delsNew.map(f => s"$dir/$f"): _*)
@@ -2512,11 +1982,9 @@ object SnapshotTable {
       }
     val (eps, sep) = carryEpochs(dir, prevV, untouched ++ written)
     writeManifest(dir, v, action, untouched ++ written, stats, schema,
-      knownRows = carriedRows, knownSizes = sizeMap(dir, prevV),
-      parts = parts, nulls = nulls,
+      carried = pm, parts = parts, nulls = nulls,
       dels = delsNew, dirty = dirtyNew, ndel = ndelNew,
-      epochs = eps, sepoch = sep,
-      ptrans = readPartTransforms(dir, prevV))
+      epochs = eps, sepoch = sep, ptrans = pm.transforms)
     v
   }
 
@@ -2774,7 +2242,8 @@ object SnapshotTable {
     require(vs.nonEmpty, s"no snapshot log at $dir")
     val prevV = vs.last
     val files = readManifest(dir, prevV)
-    val sizes = sizeMap(dir, prevV)
+    val sizes = readSizes(dir, prevV)
+      .fold(Map.empty[String, Long])(files.zip(_).toMap)
     require(files.forall(sizes.contains),
       s"version $prevV records no byte size for some files — " +
         "compactSmall plans from manifest sizes only (commit through " +
@@ -2910,14 +2379,11 @@ object SnapshotTable {
   def tags(dir: String): Map[String, Int] = {
     val f = tagsFile(dir)
     if (!f.exists()) Map.empty
-    else """"([^"]+)":(\d+)""".r
-      .findAllMatchIn(new String(Files.readAllBytes(f.toPath), UTF_8))
-      .map(m => m.group(1) -> m.group(2).toInt).toMap
+    else LogCodec.decodeTags(new String(Files.readAllBytes(f.toPath), UTF_8))
   }
 
   private def writeTags(dir: String, m: Map[String, Int]): Unit = {
-    val json = m.toSeq.sortBy(_._1)
-      .map { case (n, v) => s""""$n":$v""" }.mkString("{", ",", "}")
+    val json = LogCodec.renderTags(m)
     val tmp = new File(logDir(dir),
       s".tags-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     Files.write(tmp.toPath, json.getBytes(UTF_8))
@@ -3403,22 +2869,11 @@ object SnapshotTable {
       s"RESTORE: version $v is not in the log at $dir (retained: " +
         s"${vs.mkString(", ")}) — vacuumed or never committed")
     val next = vs.last + 1
-    val stats = readAllStats(dir, v)
-    val files = readManifest(dir, v)
-    val carried = readRows(dir, v)
-      .map(rs => files.zip(rs).toMap).getOrElse(Map.empty)
-    val parts = readPartValues(dir, v).map(pv =>
-      (partitionColumns(dir, v), pv))
-    writeManifest(dir, next, s"overwrite@restore$v",
-      files, stats, readSchema(dir, v), knownRows = carried,
-      knownSizes = sizeMap(dir, v), parts = parts,
-      nulls = readNullCounts(dir, v).toSeq,
-      dels = readDeletes(dir, v), dirty = readDirty(dir, v),
-      ndel = readNdel(dir, v),
-      // restore re-references v's files verbatim — its epoch state
-      // (including pre-rename names) and transform spec carry with them
-      epochs = readEpochs(dir, v), sepoch = readSepoch(dir, v),
-      ptrans = readPartTransforms(dir, v))
+    // restore re-references v's files verbatim — every per-file tier,
+    // its merge-on-read state, its epoch state (including pre-rename
+    // names) and its transform spec carry with them
+    publishManifest(dir, next, s"overwrite@restore$v",
+      probeTiers(dir, manifest(dir, v)))
     next
   }
 
@@ -3459,32 +2914,23 @@ object SnapshotTable {
       s"RENAME COLUMN: '$to' already exists")
     require(to.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"RENAME COLUMN: '$to' is not a valid column name")
-    val files = readManifest(dir, prevV)
-    val eps = readEpochs(dir, prevV)
+    val m = manifest(dir, prevV)
     // files of the (now closing) open epoch were recorded with index
     // eps.length — after the close that index denotes the same name
     // list, so recorded values carry verbatim; a never-renamed table
     // has no recorded sepoch and every file is epoch 0
     val sep =
-      if (eps.isEmpty) files.map(_ => 0) else readSepoch(dir, prevV)
+      if (m.epochs.isEmpty) m.files.map(_ => 0) else readSepoch(dir, prevV)
     val ren = (n: String) => if (n == from) to else n
     val newSchema = StructType(schema.fields.map(f =>
       if (f.name == from) f.copy(name = to) else f))
     dataChange.withValue(false) {
-      writeManifest(dir, prevV + 1, "rename", files,
-        readAllStats(dir, prevV).map { case (c, mm) => (ren(c), mm) },
-        Some(newSchema),
-        knownRows = readRows(dir, prevV)
-          .map(rs => files.zip(rs).toMap).getOrElse(Map.empty),
-        knownSizes = sizeMap(dir, prevV),
-        parts = readPartValues(dir, prevV).map(pv =>
-          (partitionColumns(dir, prevV).map(ren), pv)),
-        nulls = readNullCounts(dir, prevV).toSeq.map {
-          case (c, ns) => (ren(c), ns) },
-        dels = readDeletes(dir, prevV), dirty = readDirty(dir, prevV),
-        ndel = readNdel(dir, prevV),
-        epochs = eps :+ schema.fieldNames.toSeq, sepoch = sep,
-        ptrans = readPartTransforms(dir, prevV))
+      publishManifest(dir, prevV + 1, "rename", probeTiers(dir, m.copy(
+        stats = m.stats.map { case (c, mm) => (ren(c), mm) },
+        nulls = m.nulls.map { case (c, ns) => (ren(c), ns) },
+        pcols = m.pcols.map(ren),
+        epochs = m.epochs :+ schema.fieldNames.toSeq, sepoch = Some(sep),
+        schema = Some(newSchema))))
     }
     prevV + 1
   }

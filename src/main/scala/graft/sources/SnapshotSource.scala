@@ -15,6 +15,7 @@ import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type => ParquetType, Types => PTypes}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.QuotingUtils.quoteIdentifier
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDelete, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
@@ -257,7 +258,7 @@ class SnapshotDsTable(tableSchema: StructType, props: Map[String, String])
   override def partitioning(): Array[Transform] =
     try SnapshotTable.partitionColumns(dir,
         SnapshotTable.resolveVersion(dir))
-      .map(Expressions.identity).toArray
+      .map(c => Expressions.identity(quoteIdentifier(c))).toArray
     catch { case scala.util.control.NonFatal(_) => Array.empty }
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
@@ -1030,7 +1031,7 @@ case class SnapshotScan(dir: String, files: Seq[String],
       new org.apache.spark.sql.connector.read.partitioning
         .KeyGroupedPartitioning(
           partSchema.fieldNames
-            .map(Expressions.identity(_)
+            .map(c => Expressions.identity(quoteIdentifier(c))
               : org.apache.spark.sql.connector.expressions.Expression),
           activeFiles.map(partTuples).distinct.size)
     else
@@ -1466,13 +1467,6 @@ private[graft] object SnapshotCdf {
           "delta is not derivable")
     }
   }
-
-  /** The feed's read schema: the table's columns plus the change
-    * metadata. */
-  def schemaOf(tableSchema: StructType): StructType =
-    StructType(tableSchema.fields :+
-      StructField("_change_type", StringType, nullable = false) :+
-      StructField("_commit_version", LongType, nullable = false))
 }
 
 

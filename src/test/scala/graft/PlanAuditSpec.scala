@@ -212,4 +212,38 @@ class PlanAuditSpec extends SparkSpec {
       }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  /** A source line that reads `_log` JSON with a regex: it builds a
+    * regex (`".r`) over a `"<key>":` fragment, or spells a key followed
+    * by an escaped `[` — a regex-only spelling. */
+  private def readsJsonKeyWithRegex(line: String): Boolean =
+    (""""\)?\.r\b""".r.findFirstIn(line).isDefined &&
+      """\\?":""".r.findFirstIn(line).isDefined) ||
+      """":\\\[|\\":\\\\\[""".r.findFirstIn(line).isDefined
+
+  test("no regex reads snapshot-log JSON under graft/io or graft/sources " +
+    "(every _log file decodes through graft.io.LogCodec)") {
+    // the spellings the removed manifest, bloom and tags readers used
+    Seq("private val FilesRe = \"\"\"\"files\":\\[([^\\]]*)\\]\"\"\".r",
+        "(\"\\\"\" + k + \"\\\":\\\\[([^\\\\]]*)\\\\]\").r",
+        "else \"\"\"\"([^\"]+)\":(\\d+)\"\"\".r",
+        "\"\"\"\"action\":\"[a-z]+@txn([A-Za-z0-9_-]+):epoch(-?\\d+)\"\"\"\".r")
+      .foreach(l => assert(readsJsonKeyWithRegex(l), l))
+    // a parse of the decoded action string's own grammar stays allowed
+    assert(!readsJsonKeyWithRegex(
+      "private val TxnRe = \"\"\"[a-z]+@txn([A-Za-z0-9_-]+):epoch(-?\\d+)\"\"\".r"))
+    val roots = Seq("src/main/scala/graft/io", "src/main/scala/graft/sources")
+      .map(new java.io.File(_))
+    roots.foreach(r => assert(r.isDirectory, s"missing source root $r"))
+    def sources(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(sources)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val hits = for {
+      f <- roots.flatMap(sources)
+      (line, i) <- new String(java.nio.file.Files.readAllBytes(f.toPath),
+        "UTF-8").split("\n").toSeq.zipWithIndex
+      if readsJsonKeyWithRegex(line)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }
