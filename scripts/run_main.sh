@@ -1,7 +1,9 @@
 #!/bin/bash
 # Run a graft main directly against compiled classes (no sbt lock/startup).
 # Usage: scripts/run_main.sh <mainClass> [args...]
-# Mirrors build.sbt's forked-run JVM options.
+# Mirrors build.sbt's forked-run JVM options and locale: under the POSIX
+# locale a JVM cannot name a file whose path holds non-ASCII text.
+export LC_ALL="${LC_ALL:-C.UTF-8}"
 CLASSES=/root/repo/target/scala-2.13/classes
 JARS=/opt/spark/jars/*
 ADD_OPENS=""

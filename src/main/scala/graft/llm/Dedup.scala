@@ -2,7 +2,6 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Document deduplication at training-data scale (SURVEY.md §7.3 step 6 /
   * north star): exact, n-gram Jaccard, MinHash+LSH, SimHash.
@@ -58,11 +57,10 @@ object Dedup {
     * Shingles are compared by xxhash64 — a 64-bit collision (~1e-11 at
     * corpus vocabulary sizes) could merge two shingles; acceptable for
     * near-dup detection. */
-  def ngramJaccardPairs(docs: DataFrame, n: Int, threshold: Double,
-                        storageLevel: StorageLevel =
-                          StorageLevel.MEMORY_AND_DISK): DataFrame =
-    if (threshold < 0.35) jaccardCountFilter(docs, n, threshold, storageLevel)
-    else jaccardPrefixFilter(docs, n, threshold, storageLevel)
+  def ngramJaccardPairs(docs: DataFrame, n: Int,
+                        threshold: Double): DataFrame =
+    if (threshold < 0.35) jaccardCountFilter(docs, n, threshold)
+    else jaccardPrefixFilter(docs, n, threshold)
 
   /** Count-filter strategy for [[ngramJaccardPairs]] — see the dispatch
     * doc there. Same candidate-join shape and `maxDf` skew guard as
@@ -82,37 +80,16 @@ object Dedup {
     * in round 7: +10% at sf0.1 and 2.2× SLOWER at 100× (50 → 112 s),
     * because the no-hot fast path's zero-join property is exactly what
     * the allowance joins destroy (two extra shuffles of the pair frame,
-    * paid always, needed only when the cap trips). The df frame is
-    * persisted so the probe's aggregation is REUSED by the hot branch
-    * (the old double postings pass is gone) and released immediately on
-    * the cold branch. */
+    * paid always, needed only when the cap trips). The hot list is an
+    * eager local checkpoint, so the probe's postings aggregation is the
+    * one the hot branch reads (no second postings pass), and no cache
+    * entry outlives the call. */
   private[llm] def jaccardCountFilter(docs: DataFrame, n: Int,
                                       threshold: Double,
-                                      storageLevel: StorageLevel,
                                       maxDf: Int = 1 << 12): DataFrame = {
-    val sh0 = Par.fanOutScan(docs)
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        TextAnalysis.hashedShinglesFromTokens(col("toks"), n).as("sh"))
-    val sh = if (storageLevel == StorageLevel.NONE) sh0
-             else sh0.repartition(col("doc_id")).persist(storageLevel)
-    // sz = |FULL shingle set| (hot included), carried through the explode
-    val ex = sh.select(col("doc_id"), size(col("sh")).cast("long").as("sz"),
-      explode(col("sh")).as("sg"))
-    // persisted so the eager hot probe below and the hot branch share ONE
-    // postings aggregation. StorageLevel.NONE opts out of ALL persistence
-    // in this operator (callers managing memory themselves) — the hot
-    // branch then recomputes the df frame, the documented price of the
-    // opt-out. On the hot branch the persisted frame stays cached until
-    // the returned query consumes it (the hot-list broadcasts); that
-    // retained cache is part of the contract, same as `sh`'s persist.
-    val doPersist = storageLevel != StorageLevel.NONE
-    val freq0 = ex.groupBy("sg").agg(count(lit(1)).as("df"))
-    val freq = if (doPersist) freq0.persist(StorageLevel.MEMORY_AND_DISK)
-               else freq0
-    val hot = freq.where(col("df") > maxDf).select("sg")
+    val (sh, ex, freq) = shingleFrames(docs, n)
+    val hot = freq.where(col("df") > maxDf).select("sg").localCheckpoint()
     val hotEmpty = hot.isEmpty // the documented eager probe
-    if (hotEmpty && doPersist) freq.unpersist()
     val cold =
       if (hotEmpty) ex else ex.join(broadcast(hot), Seq("sg"), "left_anti")
     // sz functionally depends on doc_id — grouping by it rides along free
@@ -168,22 +145,12 @@ object Dedup {
   /** Prefix-filter strategy for [[ngramJaccardPairs]] — see the dispatch
     * doc there. */
   private[llm] def jaccardPrefixFilter(docs: DataFrame, n: Int,
-                                       threshold: Double,
-                                       storageLevel: StorageLevel): DataFrame = {
+                                       threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sh0 = Par.fanOutScan(docs)
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        TextAnalysis.hashedShinglesFromTokens(col("toks"), n).as("sh"))
-    // consumed by candidate generation AND both verify joins
-    val sh = if (storageLevel == StorageLevel.NONE) sh0
-             else sh0.repartition(col("doc_id")).persist(storageLevel)
-    // carry |doc| through the explode — a count() window would cost a
-    // second full sort of the postings (different window spec than the
-    // ranking window below)
-    val ex = sh.select(col("doc_id"), size(col("sh")).cast("long").as("sz"),
-      explode(col("sh")).as("sg"))
-    val freq = ex.groupBy("sg").agg(count(lit(1)).as("df"))
+    // `sh` feeds candidate generation AND both verify joins; `ex` carries
+    // |doc| so ranking needs no count() window (a second full sort of the
+    // postings under a different window spec than the ranking window)
+    val (sh, ex, freq) = shingleFrames(docs, n)
     val wDoc = Window.partitionBy("doc_id")
     val ranked = ex.join(freq, "sg")
       .withColumn("rn", row_number().over(wDoc.orderBy(col("df"), col("sg"))))
@@ -272,27 +239,29 @@ object Dedup {
     * below the cap (max trigram df at sf0.1 is 25); raise it only with
     * AQE skew-join verified to split the key, and never near 2^16. */
   def containmentPairs(docs: DataFrame, n: Int, threshold: Double,
-                       storageLevel: StorageLevel =
-                         StorageLevel.MEMORY_AND_DISK,
                        maxDf: Int = 1 << 12): DataFrame = {
-    val (sh, ex, freq) = shingleFrames(docs, n, storageLevel)
+    val (sh, ex, freq) = shingleFrames(docs, n)
     containmentPairsCore(sh, ex, freq, threshold, maxDf)
   }
 
-  /** Shared front half of the containment family: persisted per-doc
-    * shingle sets, exploded postings, and the global df frame — built
-    * once so [[crossContamination]]'s routing probe and whichever
-    * candidate path it picks reuse the same frames. */
-  private def shingleFrames(docs: DataFrame, n: Int,
-                            storageLevel: StorageLevel)
+  /** Shared front half of the exact shingle family (both
+    * [[ngramJaccardPairs]] strategies and the containment paths): per-doc
+    * shingle sets `sh`, computed once by an eager local checkpoint when
+    * the frame is built; exploded postings `ex` (doc_id, sz, sg), each
+    * carrying its document's FULL set size `sz` (hot shingles included);
+    * and the global df frame — built once so [[crossContamination]]'s
+    * routing probe and whichever candidate path it picks reuse the same
+    * frames. */
+  private def shingleFrames(docs: DataFrame, n: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    val sh0 = Par.fanOutScan(docs)
+    val sh = Par.fanOutScan(docs)
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
       .select(col("doc_id"),
         TextAnalysis.hashedShinglesFromTokens(col("toks"), n).as("sh"))
-    val sh = if (storageLevel == StorageLevel.NONE) sh0
-             else sh0.repartition(col("doc_id")).persist(storageLevel)
-    val ex = sh.select(col("doc_id"), explode(col("sh")).as("sg"))
+      .repartition(col("doc_id"))
+      .localCheckpoint()
+    val ex = sh.select(col("doc_id"), size(col("sh")).cast("long").as("sz"),
+      explode(col("sh")).as("sg"))
     val freq = ex.groupBy("sg").agg(count(lit(1)).as("df"))
     (sh, ex, freq)
   }
@@ -373,28 +342,24 @@ object Dedup {
     * recomputes the EXACT pairs and asserts the sketch found every one. */
   def containmentPairsSketch(docs: DataFrame, n: Int, threshold: Double,
                              k: Int = 32,
-                             storageLevel: StorageLevel =
-                               StorageLevel.MEMORY_AND_DISK,
                              maxDf: Int = 1 << 12): DataFrame = {
-    val (sh, ex, freq) = shingleFrames(docs, n, storageLevel)
+    val (sh, ex, freq) = shingleFrames(docs, n)
     containmentPairsSketchCore(sh, ex, freq, threshold, k, maxDf)
   }
 
   /** BOTH containment paths over ONE set of shingle frames — for audits
     * that compare the exact count-filter result against the bottom-k
     * sketch (q96): calling [[containmentPairs]] and
-    * [[containmentPairsSketch]] separately tokenizes, shingles, persists
-    * and df-counts the corpus twice; the shared front half is
+    * [[containmentPairsSketch]] separately tokenizes, shingles,
+    * checkpoints and df-counts the corpus twice; the shared front half is
     * path-independent, so the audit pays it once. Each returned frame is
     * value-identical to its standalone builder (same cores, same
     * frames). */
   def containmentPairsBoth(docs: DataFrame, n: Int, threshold: Double,
                            k: Int = 32,
-                           storageLevel: StorageLevel =
-                             StorageLevel.MEMORY_AND_DISK,
                            maxDf: Int = 1 << 12)
       : (DataFrame, DataFrame) = {
-    val (sh, ex, freq) = shingleFrames(docs, n, storageLevel)
+    val (sh, ex, freq) = shingleFrames(docs, n)
     (containmentPairsCore(sh, ex, freq, threshold, maxDf),
       containmentPairsSketchCore(sh, ex, freq, threshold, k, maxDf))
   }
@@ -713,8 +678,8 @@ object Dedup {
     * than a caller guess — round 6 measured that the bottom-k sketch
     * pays only in high-df regimes, so the engine now routes on the
     * number it measured. The probe is one narrow aggregate over the df
-    * frame (persisted, shared with the chosen path's hot-shingle guard)
-    * — an eager action by necessity: two physically different plans
+    * frame (an eager local checkpoint, shared with the chosen path's
+    * hot-shingle guard) — an eager action by necessity: two physically different plans
     * cannot be chosen without looking at the data. Callers that know
     * their regime pin [[ExactRoute]] (oracle-exact recall, the gate
     * default via auto on low-df corpora) or [[SketchRoute]]. */
@@ -727,20 +692,16 @@ object Dedup {
       .unionByName(benchmark.select(col("doc_id"), col("text"))
         .withColumn("side", lit("B")))
     val sides = tagged.select("doc_id", "side")
-    val (sh, ex, freq0) = shingleFrames(tagged.select("doc_id", "text"), n,
-      StorageLevel.MEMORY_AND_DISK)
+    val (sh, ex, freq0) = shingleFrames(tagged.select("doc_id", "text"), n)
     val pairs = route match {
       case ExactRoute =>
         containmentPairsCore(sh, ex, freq0, threshold, maxDf)
       case SketchRoute =>
         containmentPairsSketchCore(sh, ex, freq0, threshold, 32, maxDf)
       case AutoRoute =>
-        // persist: the probe aggregate and the chosen path's hot-shingle
-        // guard both consume the df frame; it stays cached until the
-        // returned query runs the hot-list broadcast (part of the API
-        // contract, like `sh`'s persist — unpersisting earlier would make
-        // the chosen path recompute the postings aggregation)
-        val freq = freq0.persist(StorageLevel.MEMORY_AND_DISK)
+        // the probe aggregate and the chosen path's hot-shingle guard
+        // both read the df frame, so it is computed once
+        val freq = freq0.localCheckpoint()
         if (postingsMeanDf(freq, maxDf) > sketchMeanDf)
           containmentPairsSketchCore(sh, ex, freq, threshold, 32, maxDf)
         else containmentPairsCore(sh, ex, freq, threshold, maxDf)
@@ -883,25 +844,21 @@ object Dedup {
     *
     * The signature frame (it feeds the banding AND both sides of the
     * agreement join) and the hot-bucket-filtered banded frame (both
-    * sides of the candidate self-join) are each [[materialize]]d once at
-    * `storageLevel`; `StorageLevel.NONE` keeps both lazy for callers
-    * composing several pipelines that manage memory themselves. */
+    * sides of the candidate self-join) are each computed once, by an
+    * eager local checkpoint when the frame is built. */
   def minHashLsh(docs: DataFrame, n: Int = 3, k: Int = 16, bands: Int = 4,
                  estThreshold: Double = 0.3,
                  hasher: SeededHash = XxSeededHash,
-                 storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
                  maxBucket: Int = 1 << 12): DataFrame = {
-    // each intermediate is computed once, by an eager local checkpoint at
-    // `storageLevel` (NONE keeps it lazy): one job fills the signature
-    // blocks instead of one concurrent cache-stage job per consumer, and
+    // each intermediate is computed once, by an eager local checkpoint:
+    // one job fills the signature blocks instead of one concurrent cache-stage job per consumer, and
     // both self-join sides read one banded frame instead of each
     // recomputing the banding and its hot-bucket aggregate. The blocks
     // are released by the ContextCleaner once the frames are unreachable
     // and are lost with their executor, as connectedComponents' default
     // mode is.
-    val sig = materialize(minHashSignatures(docs, n, k, hasher), storageLevel)
-    val banded = materialize(
-      bandSignatures(sig, k, bands, maxBucket), storageLevel)
+    val sig = minHashSignatures(docs, n, k, hasher).localCheckpoint()
+    val banded = bandSignatures(sig, k, bands, maxBucket).localCheckpoint()
     val cand = banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") &&
         col("a.bucket") === col("b.bucket") &&
@@ -985,20 +942,19 @@ object Dedup {
 
   /** SimHash near-dup pairs: 4-band LSH over the signature (bits/4 bits
     * per band), then exact Hamming distance (bit_count of xor) ≤
-    * maxHamming. The signature and banded frames are each
-    * [[materialize]]d once at `storageLevel` (NONE keeps them lazy), as
-    * in [[minHashLsh]]. */
+    * maxHamming. The signature and banded frames are each an eager local
+    * checkpoint, as in [[minHashLsh]]. */
   def simHashPairs(docs: DataFrame, maxHamming: Int = 6,
                    hasher: SeededHash = XxSeededHash, bits: Int = 64,
-                   storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
                    maxBucket: Int = 1 << 12): DataFrame = {
-    val sig = materialize(simHash(docs, hasher, bits), storageLevel)
+    val sig = simHash(docs, hasher, bits).localCheckpoint()
     val bandWidth = bits / 4
     val bandMask = (1L << bandWidth) - 1
     val buckets = (0 until 4).map(b =>
       shiftrightunsigned(col("simhash"), b * bandWidth).bitwiseAND(bandMask))
-    val banded = materialize(dropHotBuckets(
-      bandRows(sig, Seq("doc_id", "simhash"), buckets), maxBucket), storageLevel)
+    val banded = dropHotBuckets(
+      bandRows(sig, Seq("doc_id", "simhash"), buckets), maxBucket)
+      .localCheckpoint()
     banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") &&
         col("a.bucket") === col("b.bucket") &&
@@ -1220,10 +1176,8 @@ object Dedup {
                          n: Int = 3, k: Int = 16, bands: Int = 4,
                          estThreshold: Double = 0.3,
                          hasher: SeededHash = XxSeededHash,
-                         storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
                          maxBucket: Int = 1 << 12): DataFrame = {
-    val sigN = materialize(minHashSignatures(newDocs, n, k, hasher),
-      storageLevel)
+    val sigN = minHashSignatures(newDocs, n, k, hasher).localCheckpoint()
     val bN = bandSignatures(sigN, k, bands, maxBucket)
     val bC = bandSignatures(corpusSigs, k, bands, maxBucket)
     incrementalJoin(bN, bC, sigN, corpusSigs, k, estThreshold)
@@ -1369,19 +1323,12 @@ object Dedup {
                                 n: Int = 3, k: Int = 16, bands: Int = 4,
                                 estThreshold: Double = 0.3,
                                 hasher: SeededHash = XxSeededHash,
-                                storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
                                 maxBucket: Int = 1 << 12): DataFrame = {
-    val sigN = materialize(minHashSignatures(newDocs, n, k, hasher),
-      storageLevel)
+    val sigN = minHashSignatures(newDocs, n, k, hasher).localCheckpoint()
     val bN = bandSignatures(sigN, k, bands, maxBucket)
     incrementalJoin(bN, spark.table(s"${name}_bands"), sigN,
       spark.table(s"${name}_sigs"), k, estThreshold)
   }
-
-  /** `df` computed once, by the contract stated in [[minHashLsh]]. */
-  private[llm] def materialize(df: DataFrame, level: StorageLevel): DataFrame =
-    if (level == StorageLevel.NONE) df
-    else df.localCheckpoint(eager = true, storageLevel = level)
 
   /** Skew guard for the LSH band self-joins: a bucket of size s generates
     * s·(s-1)/2 candidate pairs ON ONE REDUCER — a single degenerate

@@ -120,7 +120,10 @@ object Importance {
     * per-row inside codegen against the current weights literal, the
     * gradient is a ≤B-key aggregate (map-side combine), and only B longs
     * ever reach the driver — the classic broadcast-weights/aggregate-
-    * gradients shape, at 100 TB bounded by B, not the corpus.
+    * gradients shape, at 100 TB bounded by B, not the corpus. The hashed
+    * bucket arrays are a [[Rounds]] static, released when training
+    * returns; iteration i runs under the job description
+    * `logistic:round=<i>`.
     *
     * `docs` needs (doc_id, text, label∈{0,1}). Returns the quantized
     * weight vector, ready for [[hashedLinearLogit]] (whose integer logit
@@ -135,19 +138,18 @@ object Importance {
     val S = 1048576L     // residual scale 2^20
     val a = lr * W / S
     val grams = unigramsBigrams(TextAnalysis.tokens(col("text")))
-    // hash each gram ONCE: iterations then fold cached ints — per-iter
-    // cost is integer arithmetic over the persisted bucket arrays, not
-    // a re-tokenize/re-md5 of the corpus
-    val base = docs.select(col("label").cast("long").as("y"),
-        transform(grams, g => bucketOf(g, buckets, seed, hasher)).as("bks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Rounds("logistic", docs.sparkSession) { r =>
+      // hash each gram ONCE: iterations then fold cached ints — per-iter
+      // cost is integer arithmetic over the persisted bucket arrays, not
+      // a re-tokenize/re-md5 of the corpus
+      val base = r.persist(docs.select(col("label").cast("long").as("y"),
+        transform(grams, g => bucketOf(g, buckets, seed, hasher)).as("bks")))
       // one bounded action: the training-set size in the update divisor
       // (also materializes the cache the loop reuses)
-      val n = base.count()
+      val n = r.phase("count")(base.count())
       require(n > 0, "empty training set")
       val weights = new Array[Long](buckets)
-      for (_ <- 0 until iters) {
+      for (i <- 0 until iters) r.round(i) {
         // default: the compiled margin fold ([[graft.functions
         // .BucketWeightSum]]) — the HOF spelling below is the parity
         // witness (interpreted ArrayAggregate, ~10× slower in an aged
@@ -168,13 +170,13 @@ object Importance {
           .select(q.as("q"), explode(col("bks")).as("b"))
           .groupBy("b").agg(sum(col("q")).as("G"))
           .collect() // ≤ buckets rows — the model, not the data
-        grad.foreach { r =>
-          val b = r.getLong(0).toInt
-          weights(b) -= roundHalfAway((a * r.getLong(1)) / n)
+        grad.foreach { g =>
+          val b = g.getLong(0).toInt
+          weights(b) -= roundHalfAway((a * g.getLong(1)) / n)
         }
       }
       weights
-    } finally base.unpersist()
+    }
   }
 
   /** SQL ROUND semantics (half away from zero) — `math.round` is

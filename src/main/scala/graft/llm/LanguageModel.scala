@@ -2,7 +2,6 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Count-based n-gram language-model scoring — the CCNet quality-filter
   * family (Wenzek et al. 2020, "CCNet: Extracting high quality
@@ -165,13 +164,11 @@ object LanguageModel {
     * Round-2+ rows have `w1`/`w2` that may themselves be merged tokens,
     * which is the point. */
   def trainPhrases(docs: DataFrame, rounds: Int = 2, minCount: Long = 5,
-                   topK: Int = 20, joiner: String = "_",
-                   storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK)
-      : DataFrame = {
+                   topK: Int = 20, joiner: String = "_"): DataFrame = {
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
     import org.apache.spark.sql.expressions.Window
     val byDoc = Window.partitionBy("doc_id").orderBy("pos")
-    Rounds("train_phrases", docs.sparkSession, storageLevel) { r =>
+    Rounds("train_phrases", docs.sparkSession) { r =>
       var frame = r.checkpoint(docs.select(col("doc_id"),
         posexplode(TextAnalysis.tokens(col("text"))).as(Seq("pos", "tok"))))
       val vocabs = (1 to rounds).map { i =>
@@ -218,13 +215,11 @@ object LanguageModel {
     * checkpoint of one [[Rounds]] scope; the final per-doc reassembly is
     * one aggregation. No data reaches the driver. */
   def applyPhrases(docs: DataFrame, vocab: DataFrame, rounds: Int,
-                   joiner: String = "_",
-                   storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK)
-      : DataFrame = {
+                   joiner: String = "_"): DataFrame = {
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
     import org.apache.spark.sql.expressions.Window
     val byDoc = Window.partitionBy("doc_id").orderBy("pos")
-    Rounds("apply_phrases", docs.sparkSession, storageLevel) { r =>
+    Rounds("apply_phrases", docs.sparkSession) { r =>
       val t0 = r.checkpoint(docs.select(col("doc_id"),
         posexplode(TextAnalysis.tokens(col("text"))).as(Seq("pos", "tok"))))
       val frame = (1 to rounds).foldLeft(t0) { (frame, i) =>
@@ -460,9 +455,7 @@ object LanguageModel {
     * Output: (merge_round, s1, s2, pair_count) — the ordered merge table
     * a BPE tokenizer IS; [[applyBpe]] replays it. */
   def trainBpe(docs: DataFrame, merges: Int = 8, minPairCount: Long = 2,
-               eow: String = "</w>",
-               storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK)
-      : DataFrame = {
+               eow: String = "</w>"): DataFrame = {
     require(merges >= 1, s"merges=$merges must be >= 1")
     import org.apache.spark.sql.expressions.Window
     val byWord = Window.partitionBy("w").orderBy("pos")
@@ -472,7 +465,7 @@ object LanguageModel {
     // cached-plan trees made per-round planning dominate (q215 2.9 → 4.2,
     // q224 5.2 → 8.6 under ProfileQuery, driverGap ~2×) despite 30% fewer
     // jobs and zero shuffle; reverted (guide §1.2, both directions)
-    Rounds("train_bpe", docs.sparkSession, storageLevel) { r =>
+    Rounds("train_bpe", docs.sparkSession) { r =>
       // the ONLY corpus-scale pass: one map-side-combined word-count shuffle
       // (empty tokens from repeated separators are dropped — a zero-length
       // word has no symbols, and Spark's sequence(1, 0) would descend)
@@ -545,16 +538,14 @@ object LanguageModel {
     * fertility (subwords per word — THE tokenizer-quality number vocab
     * sizing decisions read). */
   def applyBpe(docs: DataFrame, vocab: DataFrame, merges: Int,
-               eow: String = "</w>",
-               storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK)
-      : DataFrame = {
+               eow: String = "</w>"): DataFrame = {
     require(merges >= 1, s"merges=$merges must be >= 1")
     import org.apache.spark.sql.expressions.Window
     val byWord = Window.partitionBy("w").orderBy("pos")
     // localCheckpoint per round, same reason as in [[trainBpe]] — the
     // vocab side re-enters every round's plan (and the persisted-chain
     // variant measured negative there; see trainBpe)
-    Rounds("apply_bpe", docs.sparkSession, storageLevel) { r =>
+    Rounds("apply_bpe", docs.sparkSession) { r =>
       val occ = docs.select(col("doc_id"),
           explode(TextAnalysis.tokens(col("text"))).as("w"))
         .where(length(col("w")) > 0)
@@ -617,7 +608,6 @@ object LanguageModel {
   private[llm] def unigramCore(docs: DataFrame, seedSize: Int,
                                rounds: Int, maxPieceLen: Int,
                                maxWordLen: Int,
-                               storageLevel: StorageLevel,
                                shrinkTo: Option[Int] = None,
                                shrinkKeepPct: Int = 80)
       : (DataFrame, DataFrame) = {
@@ -626,7 +616,7 @@ object LanguageModel {
       "shrinkKeepPct must be in [1, 100]")
     require(shrinkTo.forall(_ >= 1), "shrink target must be >= 1")
     import org.apache.spark.sql.expressions.Window
-    Rounds("unigram", docs.sparkSession, storageLevel) { r =>
+    Rounds("unigram", docs.sparkSession) { r =>
       val (spans, singles, seed) =
         unigramSeed(r, docs, seedSize, maxPieceLen, maxWordLen, scale = 1L)
       var vocab = seed
@@ -799,12 +789,11 @@ object LanguageModel {
     * (freq DESC, piece). See [[unigramCore]]. */
   def trainUnigram(docs: DataFrame, seedSize: Int = 48, rounds: Int = 2,
                    maxPieceLen: Int = 4, maxWordLen: Int = 12,
-                   storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
                    shrinkTo: Option[Int] = None, shrinkKeepPct: Int = 80)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val (vocab, _) = unigramCore(docs, seedSize, rounds, maxPieceLen,
-      maxWordLen, storageLevel, shrinkTo, shrinkKeepPct)
+      maxWordLen, shrinkTo, shrinkKeepPct)
     val w = Window.partitionBy(lit(1)).orderBy(col("freq").desc, col("piece"))
     vocab.withColumn("rank", row_number().over(w).cast("long"))
       .select(col("rank"), col("piece"), col("freq"))
@@ -840,11 +829,10 @@ object LanguageModel {
     * word, ≈ 10⁶ by the EM mass law; the spec's invariant). */
   private[llm] def unigramSoftCore(docs: DataFrame, seedSize: Int,
                                    rounds: Int, maxPieceLen: Int,
-                                   maxWordLen: Int,
-                                   storageLevel: StorageLevel)
+                                   maxWordLen: Int)
       : (DataFrame, DataFrame) = {
     require(rounds >= 1 && seedSize >= 1 && maxPieceLen >= 1)
-    Rounds("unigram_soft", docs.sparkSession, storageLevel) { r =>
+    Rounds("unigram_soft", docs.sparkSession) { r =>
       // seed counts in fixed point: integer occurrence counts ·10⁶
       val (spans, singles, seed) = unigramSeed(r, docs, seedSize,
         maxPieceLen, maxWordLen, scale = 1000000L)
@@ -956,12 +944,10 @@ object LanguageModel {
     * See [[unigramSoftCore]]. */
   def trainUnigramSoft(docs: DataFrame, seedSize: Int = 48,
                        rounds: Int = 2, maxPieceLen: Int = 4,
-                       maxWordLen: Int = 12,
-                       storageLevel: StorageLevel =
-                         StorageLevel.MEMORY_AND_DISK): DataFrame = {
+                       maxWordLen: Int = 12): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val (vocab, _) = unigramSoftCore(docs, seedSize, rounds, maxPieceLen,
-      maxWordLen, storageLevel)
+      maxWordLen)
     val w = Window.partitionBy(lit(1)).orderBy(col("freq").desc, col("piece"))
     vocab.withColumn("rank", row_number().over(w).cast("long"))
       .select(col("rank"), col("piece"), col("freq"))
@@ -974,18 +960,15 @@ object LanguageModel {
     * sizing decisions actually read, measured for both trainers. */
   def tokenizerCompare(docs: DataFrame, bpeMerges: Int = 6,
                        seedSize: Int = 48, rounds: Int = 2,
-                       maxPieceLen: Int = 4, maxWordLen: Int = 12,
-                       storageLevel: StorageLevel =
-                         StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    val bpe = applyBpe(docs,
-        trainBpe(docs, bpeMerges, minPairCount = 2,
-          storageLevel = storageLevel),
-        bpeMerges, storageLevel = storageLevel)
+                       maxPieceLen: Int = 4, maxWordLen: Int = 12)
+      : DataFrame = {
+    val bpe = applyBpe(docs, trainBpe(docs, bpeMerges, minPairCount = 2),
+        bpeMerges)
       .agg(sum("n_words").as("n_words"),
         sum("n_subword_tokens").as("n_tokens"))
       .select(lit("bpe").as("method"), col("n_words"), col("n_tokens"))
     val (_, nPieces) = unigramCore(docs, seedSize, rounds, maxPieceLen,
-      maxWordLen, storageLevel)
+      maxWordLen)
     val occ = docs.select(explode(TextAnalysis.tokens(col("text"))).as("w"))
       .where(length(col("w")) > 0)
     val uni = occ.join(nPieces, "w")

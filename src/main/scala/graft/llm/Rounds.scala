@@ -2,14 +2,17 @@ package graft.llm
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 /** Round plumbing shared by every iterative operator (connected
   * components, k-means, graph search, PageRank/TrustRank, label
-  * propagation, BPE and unigram training). An operator opens one scope
-  * with [[Rounds.apply]] and declares, per frame, which of two kinds it
-  * is; the scope owns how each kind is materialized and how long it
-  * lives.
+  * propagation, BPE, unigram and hashed logistic training). An operator
+  * opens one scope with [[Rounds.apply]] and declares, per frame, which
+  * of two kinds it is; the scope owns how each kind is materialized and
+  * how long it lives. Outside a scope, a frame an operator or query
+  * computes once is an eager `localCheckpoint()`, whose blocks the
+  * ContextCleaner releases once the frame is unreachable; no other
+  * source persists a Dataset except where `PlanAuditSpec` allows it
+  * with a reason.
   *
   *  - **Static frames** ([[persist]]) are read by every round and never
   *    re-enter their own lineage. They are PERSISTED, not checkpointed:
@@ -36,7 +39,6 @@ import org.apache.spark.storage.StorageLevel
   *    the ContextCleaner once the frame is unreachable. The default is
   *    an eager local checkpoint; a lazy one (`eager = false`) suits a
   *    round whose convergence action is also the job that fills it.
-  *  - **`StorageLevel.NONE`** leaves both kinds as plain lazy plans.
   *  - **`reliable = true`** replaces both kinds with a durable
   *    `checkpoint()` into `spark.sparkContext.getCheckpointDir`, which
   *    MUST be set (to cluster-durable storage) before the call: local
@@ -51,25 +53,23 @@ import org.apache.spark.storage.StorageLevel
   * other phases under `<op>:<phase>`), and the caller's description is
   * restored after each. */
 private[llm] final class Rounds private (op: String, sc: SparkContext,
-    storageLevel: StorageLevel, reliable: Boolean) {
+    reliable: Boolean) {
 
   private var statics = List.empty[DataFrame] // newest first
 
   /** A static frame: persisted until the scope exits (durable under
-    * `reliable`, the plan itself under `StorageLevel.NONE`). */
+    * `reliable`). */
   def persist(df: DataFrame): DataFrame =
     if (reliable) durable(df)
-    else if (storageLevel == StorageLevel.NONE) df
     else {
       statics = df :: statics
-      df.persist(storageLevel)
+      df.persist()
     }
 
   /** Round state: a local checkpoint (lazy when `eager = false`), durable
-    * under `reliable`, the plan itself under `StorageLevel.NONE`. */
+    * under `reliable`. */
   def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame =
     if (reliable) durable(df)
-    else if (storageLevel == StorageLevel.NONE) df
     else df.localCheckpoint(eager)
 
   /** Run `body` under the job description `<op>:round=<i>`. */
@@ -83,7 +83,7 @@ private[llm] final class Rounds private (op: String, sc: SparkContext,
   }
 
   private def durable(df: DataFrame): DataFrame = {
-    df.persist(StorageLevel.MEMORY_AND_DISK)
+    df.persist()
     val out = df.checkpoint() // eager: caches, then writes from cache
     df.unpersist(blocking = false)
     out
@@ -99,9 +99,8 @@ private[llm] object Rounds {
     * statics are released when `body` returns or throws. What `body`
     * returns must not read a static lazily: end the loop on round state. */
   def apply[T](op: String, spark: SparkSession,
-               storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
                reliable: Boolean = false)(body: Rounds => T): T = {
-    val r = new Rounds(op, spark.sparkContext, storageLevel, reliable)
+    val r = new Rounds(op, spark.sparkContext, reliable)
     try body(r) finally r.release()
   }
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.functions.CosineSim
 
 /** Similarity search over an embedding column (`Array[Float]`).
@@ -1136,15 +1135,15 @@ object Similarity {
     * buckets, then per-query top-k ranked on the ROUNDED score (4 dp,
     * ties on neighbor_id) so rankings are stable across engines. Recall
     * < 1 by construction; the recall vs brute force is asserted in tests.
-    * The signed corpus is persisted at `storageLevel` (NONE to disable) —
-    * it feeds both the query lookup and the candidate scan. */
+    * The signed corpus feeds both the query lookup and the candidate
+    * scan, so it is computed once, by an eager local checkpoint when the
+    * frame is built ([[Dedup.minHashLsh]]'s rule): no cache entry
+    * outlives the call. */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-              planes: Int = 12, hasher: SeededHash = XxSeededHash,
-              storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK)
+              planes: Int = 12, hasher: SeededHash = XxSeededHash)
       : DataFrame = {
-    val sigd0 = corpus.join(lshSignatures(corpus, planes, hasher), "vec_id")
-    val sigd = if (storageLevel == StorageLevel.NONE) sigd0
-               else sigd0.persist(storageLevel)
+    val sigd = corpus.join(lshSignatures(corpus, planes, hasher), "vec_id")
+      .localCheckpoint()
     val q = sigd.join(
         broadcast(queries.select(col("vec_id").as("query_id"))),
         col("vec_id") === col("query_id"))
@@ -1227,16 +1226,14 @@ object Similarity {
     *
     * Scale: candidates/query ≈ L·n/2^b — (tables, planesPerTable) is the
     * recall/cost dial; the corpus streams once through the projection agg
-    * and once through the candidate join. */
+    * and once through the candidate join; the signed corpus is an eager
+    * local checkpoint, as in [[lshTopK]]. */
   def lshTopKMulti(queries: DataFrame, corpus: DataFrame, k: Int,
                    tables: Int = 4, planesPerTable: Int = 8,
-                   hasher: SeededHash = XxSeededHash,
-                   storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK)
-      : DataFrame = {
-    val sigd0 = corpus.join(
-      lshSignaturesMulti(corpus, tables, planesPerTable, hasher), "vec_id")
-    val sigd = if (storageLevel == StorageLevel.NONE) sigd0
-               else sigd0.persist(storageLevel)
+                   hasher: SeededHash = XxSeededHash): DataFrame = {
+    val sigd = corpus.join(
+        lshSignaturesMulti(corpus, tables, planesPerTable, hasher), "vec_id")
+      .localCheckpoint()
     val q = sigd.join(
         broadcast(queries.select(col("vec_id").as("query_id"))),
         col("vec_id") === col("query_id"))
@@ -1284,9 +1281,7 @@ object Similarity {
     * bucket sizes flat. */
   def knnGraph(corpus: DataFrame, k: Int, tables: Int = 4,
                planesPerTable: Int = 8, maxBucket: Int = 1 << 12,
-               hasher: SeededHash = XxSeededHash,
-               storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK)
-      : DataFrame = {
+               hasher: SeededHash = XxSeededHash): DataFrame = {
     val sig0 = lshSignaturesMulti(corpus, tables, planesPerTable, hasher)
     val sigCapped =
       if (maxBucket == Int.MaxValue) sig0
@@ -1297,10 +1292,9 @@ object Similarity {
       }
     // both the signature frame (the two collision-join sides) and the edge
     // list (the transpose join reads it twice) are computed once, by an
-    // eager local checkpoint at `storageLevel` ([[Dedup.minHashLsh]]'s
-    // contract): no cache entry outlives the call
-    val sigd = Dedup.materialize(corpus.join(sigCapped, "vec_id"),
-      storageLevel)
+    // eager local checkpoint ([[Dedup.minHashLsh]]'s contract): no cache
+    // entry outlives the call
+    val sigd = corpus.join(sigCapped, "vec_id").localCheckpoint()
     val a = sigd.select(col("t"), col("sig"),
       col("vec_id").as("src"), col("embedding").as("s_emb"))
     val b = sigd.select(col("t"), col("sig"),
@@ -1312,9 +1306,10 @@ object Similarity {
       .dropDuplicates("src", "dst")
     val w = Window.partitionBy(col("src"))
       .orderBy(round(col("sim"), 4).desc, col("dst"))
-    val edges = Dedup.materialize(scored
+    val edges = scored
       .withColumn("rn", row_number().over(w).cast("long"))
-      .where(col("rn") <= k), storageLevel)
+      .where(col("rn") <= k)
+      .localCheckpoint()
     val rev = edges.select(col("dst").as("src"), col("src").as("dst"),
       lit(true).as("_mut"))
     edges.join(rev, Seq("src", "dst"), "left")
@@ -1356,14 +1351,11 @@ object Similarity {
                       beam: Int = 8, rounds: Int = 4, entryPoints: Int = 8,
                       graphK: Int = 5, tables: Int = 4,
                       planesPerTable: Int = 8,
-                      hasher: SeededHash = XxSeededHash,
-                      storageLevel: StorageLevel =
-                        StorageLevel.MEMORY_AND_DISK): DataFrame = {
+                      hasher: SeededHash = XxSeededHash): DataFrame = {
     // cheap duplicate of graphSearchIndexed's guard: fail BEFORE the
     // eager graph build below, not after paying for it
     require(beam >= k, s"beam=$beam must be >= k=$k")
-    val g = knnGraph(corpus, graphK, tables, planesPerTable,
-      hasher = hasher, storageLevel = storageLevel)
+    val g = knnGraph(corpus, graphK, tables, planesPerTable, hasher = hasher)
     // materialize the (expensive) graph build ONCE before fanning out:
     // the undirected union reads the edge list from both branches, and
     // against a merely-persisted (lazy) pipeline the two branches race
@@ -1494,11 +1486,8 @@ object Similarity {
   def writeGraphIndex(corpus: DataFrame, dir: String, graphK: Int = 5,
                       tables: Int = 4, planesPerTable: Int = 8,
                       numCentroids: Int = 8, iters: Int = 2,
-                      hasher: SeededHash = XxSeededHash,
-                      storageLevel: StorageLevel =
-                        StorageLevel.MEMORY_AND_DISK): Unit = {
-    val g = knnGraph(corpus, graphK, tables, planesPerTable,
-      hasher = hasher, storageLevel = storageLevel)
+                      hasher: SeededHash = XxSeededHash): Unit = {
+    val g = knnGraph(corpus, graphK, tables, planesPerTable, hasher = hasher)
     g.select(col("src"), col("dst"))
       .write.format("graft.sources.SnapshotSource")
       .mode("overwrite").save(s"$dir/edges")

@@ -59,7 +59,7 @@ object LlmQueries {
   def leakageSafeSplit(s: SparkSession, dir: String): DataFrame = {
     val docs = table(s, dir, "documents")
     val pairs = Dedup.minHashLsh(docs, hasher = graft.llm.PortableSeededHash)
-      .select("doc_a", "doc_b").persist()
+      .select("doc_a", "doc_b").localCheckpoint()
     val comps = Dedup.connectedComponents(pairs)
     val grouped = docs.select(col("doc_id"))
       .join(comps.select(col("doc_id"), col("component")), Seq("doc_id"), "left")
@@ -69,7 +69,7 @@ object LlmQueries {
       lit(100L))
     val labeled = grouped.select(col("doc_id"), col("grp"),
       when(bucket < 80, "train").when(bucket < 90, "val")
-        .otherwise("test").as("split")).persist()
+        .otherwise("test").as("split")).localCheckpoint()
     val stats = labeled.groupBy("split")
       .agg(count(lit(1)).as("n_docs"),
         countDistinct("grp").as("n_groups"))
@@ -120,7 +120,7 @@ object LlmQueries {
     val docs = table(s, dir, "documents")
     val truth = Dedup.ngramJaccardPairs(docs, n = 3, threshold = 0.5)
       .select(col("doc_a"), col("doc_b"))
-      .persist()
+      .localCheckpoint()
     val nTrue = truth.groupBy().agg(count(lit(1)).as("n_true"))
     def leg(name: String, df: DataFrame): DataFrame =
       df.select(lit(name).as("method"), col("doc_a"), col("doc_b"))
@@ -824,7 +824,7 @@ object LlmQueries {
     val q = emb.where(col("vec_id") < 10)
     val exact = Similarity.bruteForceTopK(q, emb, k = 5)
       .select(col("query_id"), col("neighbor_id"))
-      .persist()
+      .localCheckpoint()
     val nExact = exact.groupBy().agg(count(lit(1)).as("n_exact"))
     def leg(name: String, df: DataFrame): DataFrame =
       df.select(lit(name).as("method"), col("query_id"), col("neighbor_id"))
@@ -888,7 +888,7 @@ object LlmQueries {
     val emb = table(s, dir, "embeddings")
     val q = emb.where(col("vec_id") < 10)
     val exact = Similarity.bruteForceTopK(q, emb, k = 5)
-      .select(col("query_id"), col("neighbor_id")).persist()
+      .select(col("query_id"), col("neighbor_id")).localCheckpoint()
     def leg(name: String, df: DataFrame): DataFrame =
       df.select(lit(name).as("method"), col("query_id"),
         col("rn").cast("long").as("rank"), col("neighbor_id"))

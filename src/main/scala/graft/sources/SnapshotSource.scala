@@ -665,15 +665,25 @@ class SnapshotScanBuilder(dir: String, version: Int, tableSchema: StructType,
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     def tracked(a: String): Boolean = statsCols.contains(a)
     def isPart(a: String): Boolean = partCols.contains(a)
+    // a Filter names its column in SQL identifier syntax, so a name that
+    // needs quoting arrives backtick-quoted (`so,ur"ce`): each name is
+    // parsed into its parts once, and only a single-part name can be a
+    // partition or stats column (a nested field is neither)
+    val parsed = scala.collection.mutable.HashMap.empty[String, Option[String]]
+    object Col {
+      def unapply(a: String): Option[String] = parsed.getOrElseUpdate(a,
+        scala.util.Try(org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+          .parseMultipartIdentifier(a)).toOption.collect { case Seq(n) => n })
+    }
     pushed = filters.filter {
       // PARTITION pruning first (exact — files are value-pure); a
       // column that is both partition and stats prunes by value here
-      case EqualTo(a, v) if isPart(a) && v != null =>
+      case EqualTo(Col(a), v) if isPart(a) && v != null =>
         partT(a).literal(v) match {
           case Some(s) => keepVals(a, Set(Some(s))); true
           case None => false // unmappable literal: residual only
         }
-      case EqualNullSafe(a, v) if isPart(a) =>
+      case EqualNullSafe(Col(a), v) if isPart(a) =>
         if (v == null) { keepVals(a, Set(None)); true }
         else partT(a).literal(v) match {
           case Some(s) => keepVals(a, Set(Some(s))); true
@@ -684,27 +694,27 @@ class SnapshotScanBuilder(dir: String, version: Int, tableSchema: StructType,
       // files: sound but needlessly over-inclusive, and inconsistent
       // with the deleteWhere fast path). An all-NULL list keeps zero
       // partitions — exactly the rows the predicate matches.
-      case In(a, vs) if isPart(a) && vs.nonEmpty =>
+      case In(Col(a), vs) if isPart(a) && vs.nonEmpty =>
         val mapped = vs.filter(_ != null).map(partT(a).literal)
         if (mapped.exists(_.isEmpty)) false // one unmappable: decline
         else { keepVals(a, mapped.flatten.map(Option(_)).toSet); true }
-      case IsNull(a) if isPart(a) =>
+      case IsNull(Col(a)) if isPart(a) =>
         keepVals(a, Set(None)); true
       // RANGE predicates on a MONOTONE transform's source (truncate /
       // calendar units — hidden partitioning's headline prune: "WHERE
       // ts >= X" skips to the right days): a source bound maps to an
       // INCLUSIVE transform-cell bound — the boundary cell may hold
       // rows on both sides, the residual row filter keeps it exact
-      case GreaterThan(a, v) if isPart(a) && v != null &&
+      case GreaterThan(Col(a), v) if isPart(a) && v != null &&
           partT(a).monotone =>
         partT(a).literal(v).exists { s => narrowPart(a, Some(s), None); true }
-      case GreaterThanOrEqual(a, v) if isPart(a) && v != null &&
+      case GreaterThanOrEqual(Col(a), v) if isPart(a) && v != null &&
           partT(a).monotone =>
         partT(a).literal(v).exists { s => narrowPart(a, Some(s), None); true }
-      case LessThan(a, v) if isPart(a) && v != null &&
+      case LessThan(Col(a), v) if isPart(a) && v != null &&
           partT(a).monotone =>
         partT(a).literal(v).exists { s => narrowPart(a, None, Some(s)); true }
-      case LessThanOrEqual(a, v) if isPart(a) && v != null &&
+      case LessThanOrEqual(Col(a), v) if isPart(a) && v != null &&
           partT(a).monotone =>
         partT(a).literal(v).exists { s => narrowPart(a, None, Some(s)); true }
       // NULL-predicate file pruning from the manifest's per-column
@@ -712,24 +722,24 @@ class SnapshotScanBuilder(dir: String, version: Int, tableSchema: StructType,
       // IS NOT NULL skips all-null files (Spark pushes an IsNotNull
       // next to every comparison, so this also trims all-null files
       // from ordinary range queries for free)
-      case IsNull(a) if tracked(a) => nullKeep(a) = true; true
-      case IsNotNull(a) if tracked(a) => nullKeep(a) = false; true
-      case EqualTo(a, v) if tracked(a) =>
+      case IsNull(Col(a)) if tracked(a) => nullKeep(a) = true; true
+      case IsNotNull(Col(a)) if tracked(a) => nullKeep(a) = false; true
+      case EqualTo(Col(a), v) if tracked(a) =>
         longOf(v).exists { l => narrow(a, l, l); true }
-      case GreaterThan(a, v) if tracked(a) =>
+      case GreaterThan(Col(a), v) if tracked(a) =>
         longOf(v).exists { l => narrow(a, l + 1, Long.MaxValue); true }
-      case GreaterThanOrEqual(a, v) if tracked(a) =>
+      case GreaterThanOrEqual(Col(a), v) if tracked(a) =>
         longOf(v).exists { l => narrow(a, l, Long.MaxValue); true }
-      case LessThan(a, v) if tracked(a) =>
+      case LessThan(Col(a), v) if tracked(a) =>
         longOf(v).exists { l => narrow(a, Long.MinValue, l - 1); true }
-      case LessThanOrEqual(a, v) if tracked(a) =>
+      case LessThanOrEqual(Col(a), v) if tracked(a) =>
         longOf(v).exists { l => narrow(a, Long.MinValue, l); true }
       // IN-list: the [min, max] ENVELOPE of the values — sound (file
       // stats are may-contain anyway, Spark re-applies the predicate
       // row-level) and exactly the pruning a point-lookup batch gets
       // from a range-clustered layout; the per-value set prune is the
       // Bloom sidecar's job (q211)
-      case In(a, vs) if tracked(a) && vs.nonEmpty &&
+      case In(Col(a), vs) if tracked(a) && vs.nonEmpty &&
           vs.forall(longOf(_).isDefined) =>
         val ls = vs.flatMap(longOf)
         narrow(a, ls.min, ls.max); true

@@ -246,4 +246,65 @@ class PlanAuditSpec extends SparkSpec {
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("\n"))
   }
+
+  /** A source line that persists a Dataset (or RDD) itself: a `.cache()`,
+    * or a `.persist(` whose receiver is not a [[graft.llm.Rounds]] scope
+    * (every scope is bound as `r`). Comments do not count. */
+  private def persistsDirectly(line: String): Boolean = {
+    val code = line.trim.replaceAll("""\s//.*$""", "")
+    !(code.startsWith("//") || code.startsWith("*") || code.startsWith("/*")) &&
+      ("""(\w*)\.persist\(""".r.findAllMatchIn(code).exists(_.group(1) != "r") ||
+        code.contains(".cache()"))
+  }
+
+  /** Direct persists allowed outside `graft/llm/Rounds.scala`, keyed by
+    * (source path under src/main/scala, trimmed line), each with its
+    * reason. */
+  private val allowedPersists = Map(
+    ("graft/queries/StreamingQueries.scala",
+      "val b = batch.toDF().persist()") ->
+      ("q161 persists one micro-batch for its two merges and unpersists " +
+        "it before the batch ends"))
+
+  test("no Dataset is persisted outside Rounds (every other frame an " +
+    "operator or query computes once is an eager localCheckpoint)") {
+    // every spelling of the thirteen direct persists that operators and
+    // queries used to hold (several repeat), and a cache()
+    Seq("else sh0.repartition(col(\"doc_id\")).persist(storageLevel)",
+        "val freq = if (doPersist) freq0.persist(StorageLevel.MEMORY_AND_DISK)",
+        "val freq = freq0.persist(StorageLevel.MEMORY_AND_DISK)",
+        "else sigd0.persist(storageLevel)",
+        ".select(\"doc_a\", \"doc_b\").persist()",
+        ".otherwise(\"test\").as(\"split\")).persist()",
+        ".persist()",
+        ".select(col(\"query_id\"), col(\"neighbor_id\")).persist()",
+        ".persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)",
+        "val cached = df.cache()")
+      .foreach(l => assert(persistsDirectly(l), l))
+    // a Rounds static, an unpersist and prose stay allowed
+    Seq("val ex = r.persist(vecs",
+        "statics.foreach(_.unpersist(blocking = false))",
+        "b.unpersist(): Unit",
+        "// AQE inside cached plans: without it every .persist() freezes its",
+        "* persisted, not checkpointed: .persist() would pin it")
+      .foreach(l => assert(!persistsDirectly(l), l))
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"missing source root $root")
+    def sources(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(sources)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val found = for {
+      f <- sources(root)
+      rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
+      if rel != "graft/llm/Rounds.scala"
+      (line, i) <- new String(java.nio.file.Files.readAllBytes(f.toPath),
+        "UTF-8").split("\n").toSeq.zipWithIndex
+      if persistsDirectly(line)
+    } yield ((rel, line.trim), s"$rel:${i + 1}: ${line.trim}")
+    val hits = found.filterNot(h => allowedPersists.contains(h._1)).map(_._2)
+    assert(hits.isEmpty, hits.mkString("\n"))
+    // an allowlist entry whose line is gone is stale
+    val stale = allowedPersists.keySet -- found.map(_._1)
+    assert(stale.isEmpty, stale.mkString("\n"))
+  }
 }

@@ -114,6 +114,33 @@ class SnapshotSpecialValuesSpec extends SparkSpec {
     intercept[IllegalArgumentException](st.tag(dir, "bad\"name"))
   }
 
+  test("a pushed filter on a column whose name needs quoting prunes " +
+    "partitions and stats like any other column") {
+    val dir = Files.createTempDirectory("snap-special-prune").toString
+    val rs = rows(0L, 48L)
+    SnapshotTable.commitPartitioned(spark, frame(rs), dir, Seq(pc),
+      statsCols = Seq("id", sc))
+    val files = SnapshotTable.manifestFiles(dir, 1)
+    val parts = SnapshotTable.readPartValues(dir, 1).get
+    def scanned(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.datasources.v2
+            .DataSourceV2ScanRelation => r.scan
+      }.collect { case s: graft.sources.SnapshotScan => s.files.length }.sum
+    val src = spark.read.format("graft.sources.SnapshotSource").load(dir)
+    // partition pruning: only the files of the matching value are read
+    val eq = src.where(col(s"`$pc`") === "a,b")
+    val matching = parts.count(_ == Seq(Some("a,b")))
+    assert(matching > 0 && matching < files.length, parts)
+    assert(scanned(eq) == matching)
+    assert(collectSet(eq) == asRows(rs.filter(_._3 == "a,b")))
+    // stats pruning: every file of the partition whose ids start at 5
+    // records sc >= 50
+    val lo = src.where(col(s"`$sc`") <= 40L)
+    assert(scanned(lo) < files.length)
+    assert(collectSet(lo) == asRows(rs.filter(_._2 <= 40L)))
+  }
+
   test("a Bloom index over a table partitioned by values containing , " +
     "keeps each filter on its own file and answers pointLookup") {
     val dir = Files.createTempDirectory("snap-special-bloom").toString

@@ -158,22 +158,18 @@ class DedupSpec extends SparkSpec {
   }
 
   test("jaccard strategies: count filter == prefix filter, bit for bit") {
-    import org.apache.spark.storage.StorageLevel
     val docs = spark.read.parquet(s"$Sf0001/documents.parquet")
     for (t <- Seq(0.1, 0.3)) {
       def collect(df: org.apache.spark.sql.DataFrame) =
         df.select("doc_a", "doc_b", "jaccard")
           .as[(Long, Long, Double)].collect().toSet
-      val pf = collect(
-        Dedup.jaccardPrefixFilter(docs, 3, t, StorageLevel.MEMORY_AND_DISK))
-      val cf = collect(
-        Dedup.jaccardCountFilter(docs, 3, t, StorageLevel.MEMORY_AND_DISK))
+      val pf = collect(Dedup.jaccardPrefixFilter(docs, 3, t))
+      val cf = collect(Dedup.jaccardCountFilter(docs, 3, t))
       assert(pf.nonEmpty && cf == pf, s"t=$t")
     }
   }
 
   test("jaccard count-filter cap: flood pruned, rare pair exact") {
-    import org.apache.spark.storage.StorageLevel
     // same corpus shape as the containment flood test: 40 boilerplate
     // docs sharing 5 of their 6 shingles (df=40), one genuinely similar
     // rare-shingle pair (dfs=2). maxDf=10 removes the hot shingles from
@@ -187,8 +183,7 @@ class DedupSpec extends SparkSpec {
       (100L, "alpha beta gamma delta epsilon zeta"),
       (101L, "prefix words alpha beta gamma delta epsilon zeta suffix words"))
     val docs = (flood ++ contained).toDF("doc_id", "text")
-    val capped = Dedup.jaccardCountFilter(docs, 3, 0.3, StorageLevel.NONE,
-        maxDf = 10)
+    val capped = Dedup.jaccardCountFilter(docs, 3, 0.3, maxDf = 10)
       .select("doc_a", "doc_b", "jaccard")
       .as[(Long, Long, Double)].collect().toSet
     assert(capped == Set((100L, 101L, 0.5)))
@@ -608,7 +603,7 @@ class DedupSpec extends SparkSpec {
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val plan = Dedup.incrementalNearDupIndexed(spark, batchDocs,
-          "graft_spec_index", storageLevel = org.apache.spark.storage.StorageLevel.NONE)
+          "graft_spec_index")
         .queryExecution.executedPlan.toString
       assert(plan.contains("Bucketed: true"),
         s"expected a bucketed scan of the persisted index in:\n$plan")
@@ -969,10 +964,35 @@ class DedupSpec extends SparkSpec {
     def stored = sc.getRDDStorageInfo.map(r => r.memSize + r.diskSize).sum
     val docs = spark.read.parquet(s"$Sf0001/documents.parquet")
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
+    // the count-filter cap test's corpus: maxDf = 10 takes the hot branch
+    val flood = ((0L until 40L).map(i =>
+        (i, s"common footer text over and over again token$i")) ++ Seq(
+      (100L, "alpha beta gamma delta epsilon zeta"),
+      (101L, "prefix words alpha beta gamma delta epsilon zeta suffix words")))
+      .toDF("doc_id", "text")
+    // every document has a copy on the benchmark side
+    val bench = docs.select((col("doc_id") + 1000000L).as("doc_id"),
+      col("text"))
+    val emb = spark.read.parquet(s"$Sf0001/embeddings.parquet")
+    val q = emb.where(col("vec_id") < 10)
+    val labeled = docs.withColumn("label", (col("doc_id") % 2).cast("int"))
     val calls = Seq[(String, () => Long)](
       "minHashLsh" -> (() => Dedup.minHashLsh(docs).count()),
       "simHashPairs" -> (() => Dedup.simHashPairs(docs).count()),
-      "connectedComponents" -> (() => Dedup.connectedComponents(pairs).count()))
+      "connectedComponents" -> (() => Dedup.connectedComponents(pairs).count()),
+      "ngramJaccardPairs 0.3" ->
+        (() => Dedup.ngramJaccardPairs(docs, 3, 0.3).count()),
+      "ngramJaccardPairs 0.5" ->
+        (() => Dedup.ngramJaccardPairs(docs, 3, 0.5).count()),
+      "jaccardCountFilter maxDf" ->
+        (() => Dedup.jaccardCountFilter(flood, 3, 0.3, maxDf = 10).count()),
+      "containmentPairs" -> (() => Dedup.containmentPairs(docs, 3, 0.5).count()),
+      "crossContamination" ->
+        (() => Dedup.crossContamination(docs, bench, 3, 0.5).count()),
+      "lshTopK" -> (() => Similarity.lshTopK(q, emb, k = 5).count()),
+      "lshTopKMulti" -> (() => Similarity.lshTopKMulti(q, emb, k = 5).count()),
+      "trainLogisticHashed" ->
+        (() => Importance.trainLogisticHashed(labeled).length.toLong))
     spark.catalog.clearCache()
     calls.foreach { case (name, call) =>
       assert(call() > 0, name)

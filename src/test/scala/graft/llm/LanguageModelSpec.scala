@@ -123,17 +123,14 @@ class LanguageModelSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val vocab = Seq((1L, "new", "york", 2L, 0.0))
       .toDF("merge_round", "w1", "w2", "c_ab", "pmi")
-    val none = org.apache.spark.storage.StorageLevel.NONE
-    val out = LanguageModel.applyPhrases(docs, vocab, rounds = 1,
-        storageLevel = none)
+    val out = LanguageModel.applyPhrases(docs, vocab, rounds = 1)
       .orderBy("doc_id")
       .as[(Long, Long, Long, String)].collect().toSeq
     assert(out == Seq(
       (1L, 5L, 3L, "new_york new_york city"),
       (2L, 2L, 2L, "plain text")))
     val empty = vocab.where(col("merge_round") === 99L)
-    val id = LanguageModel.applyPhrases(docs, empty, rounds = 1,
-        storageLevel = none)
+    val id = LanguageModel.applyPhrases(docs, empty, rounds = 1)
       .orderBy("doc_id")
       .as[(Long, Long, Long, String)].collect().toSeq
     assert(id == Seq(
@@ -149,8 +146,7 @@ class LanguageModelSpec extends SparkSpec {
         (1L, "a", "b", 2L, 0.0),
         (2L, "a_b", "c", 2L, 0.0))
       .toDF("merge_round", "w1", "w2", "c_ab", "pmi")
-    val out = LanguageModel.applyPhrases(docs, vocab, rounds = 2,
-        storageLevel = org.apache.spark.storage.StorageLevel.NONE)
+    val out = LanguageModel.applyPhrases(docs, vocab, rounds = 2)
       .as[(Long, Long, Long, String)].collect().toSeq
     assert(out == Seq((1L, 7L, 3L, "a_b_c d a_b_c")))
   }
@@ -189,8 +185,7 @@ class LanguageModelSpec extends SparkSpec {
 
   test("trainBpe reproduces the hand-computed merge sequence w/ ties") {
     val out = LanguageModel.trainBpe(bpeCorpus, merges = 5,
-        minPairCount = 1,
-        storageLevel = org.apache.spark.storage.StorageLevel.NONE)
+        minPairCount = 1)
       .as[(Long, String, String, Long)].collect().toList
     assert(out == List(
       (1L, "e", "s", 9L),
@@ -267,7 +262,6 @@ class LanguageModelSpec extends SparkSpec {
 
   test("unigramSoftCore: EM mass law (first-piece posteriors sum to 1 " +
     "per word), hand corpus expectations, laws on the real corpus") {
-    import org.apache.spark.storage.StorageLevel
     // hand corpus: words ab (x3), c (x1) — soft EM splits ab's mass
     // between [ab] (p(ab)) and [a][b] (p(a)p(b)); with round-1 scores
     // p(ab)=p(a)=p(b)=0.3: P([ab]) = 0.3 / (0.3 + 0.09) ≈ 0.769 —
@@ -275,8 +269,7 @@ class LanguageModelSpec extends SparkSpec {
     // keep ≈ 3·0.231·1e6 each (never floored, unlike hard EM)
     val docs = Seq((0L, "ab ab c"), (1L, "ab")).toDF("doc_id", "text")
     val (vocab, mass) = LanguageModel.unigramSoftCore(docs,
-      seedSize = 48, rounds = 1, maxPieceLen = 4, maxWordLen = 12,
-      StorageLevel.NONE)
+      seedSize = 48, rounds = 1, maxPieceLen = 4, maxWordLen = 12)
     val byPiece = vocab.as[(String, Long)].collect().toMap
     val pAb = 0.3 / (0.3 + 0.09)
     assert(math.abs(byPiece("ab") - 3 * pAb * 1e6) < 10,
@@ -293,8 +286,7 @@ class LanguageModelSpec extends SparkSpec {
     // across partitioning (the fixed-point fold is order-pinned)
     val real = spark.read.parquet(s"$Sf0001/documents.parquet")
     val (v2, m2) = LanguageModel.unigramSoftCore(real,
-      seedSize = 32, rounds = 2, maxPieceLen = 3, maxWordLen = 12,
-      StorageLevel.NONE)
+      seedSize = 32, rounds = 2, maxPieceLen = 3, maxWordLen = 12)
     val out2 = v2.orderBy(col("freq").desc, col("piece"))
       .as[(String, Long)].collect().toList
     assert(m2.as[(String, Long)].collect().forall { case (w, m) =>
@@ -306,8 +298,7 @@ class LanguageModelSpec extends SparkSpec {
       .distinct().as[String].collect().toSet
     assert(chars.subsetOf(out2.map(_._1).toSet))
     val (v3, _) = LanguageModel.unigramSoftCore(real.repartition(7),
-      seedSize = 32, rounds = 2, maxPieceLen = 3, maxWordLen = 12,
-      StorageLevel.NONE)
+      seedSize = 32, rounds = 2, maxPieceLen = 3, maxWordLen = 12)
     assert(v3.orderBy(col("freq").desc, col("piece"))
       .as[(String, Long)].collect().toList == out2)
   }
